@@ -4,26 +4,24 @@ per-document text.
 This is the engine's analog of the reference's complete flow
 (``/root/reference/test_img.py``): detect text regions (HTML blocks AND
 image-embedded lines), recognize the image lines in batches, and assemble
-everything in reading order. Dataflow (ONE corpus scan, ONE shuffle):
+everything in reading order. Dataflow (ONE corpus scan, ONE map stage,
+ZERO shuffles):
 
-    pages → mapInPandas(decode once → html-extract + line-detect,
-                        tagged rows)                      [scan, map-side]
-          → mapInPandas(conv+CTC on line rows,
-                        html rows pass through)           [same pipeline]
-          → groupBy(url).agg(array_sort + array_join)     [the one shuffle]
+    pages → mapInPandas(decode once → html-extract + line-detect
+                        → recognize every strip of the Arrow batch in
+                          one call → assemble each page)   [scan, map-side]
 
 Scale shape: both detections run on the SAME decoded document in the same
-pass (charset-sniffed once via ``kernels.charset.decode_html``), so the
-corpus is scanned and parsed exactly once — the two-branch spelling costs
-a second full scan + decode, which at 10^12 documents is the difference
-that matters. Recognition batches across ALL pages' lines in Arrow
-batches (the RECOG_BATCH discipline,
+pass (charset-sniffed once via ``kernels.charset.decode_html``), and
+recognition runs in the worker that decoded the strips, the way FOTS'
+RoIRotate feeds recognition from the detection pass. Strips never leave
+the Python worker, so nothing but (url, html) crosses Arrow on the way in
+and (url, extracted_text) on the way out. Recognition batches across ALL
+pages' lines in the Arrow batch (the RECOG_BATCH discipline,
 ``/root/reference/test_img.py:97-116``, but batched across documents
-instead of within one). The only exchange is the groupBy(url) assembly,
-carrying slim (url, kind, line_id, text) rows — strips and the html blob
-never cross it. Assembly is JVM-side: ``array_sort`` of (kind, line_id,
-text) structs puts the html block before the lines ('html' < 'line') and
-lines in image order, then ``array_join`` — not Python.
+instead of within one). Assembly is plain Python per page, so the stage
+emits one row per input page (the ``extract_pages`` contract) and adds
+no exchange over its source.
 """
 
 from __future__ import annotations
@@ -32,11 +30,11 @@ import base64
 import re
 import zlib
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
 from ocr_spark.config import BLOCK_SEPARATOR, LINE_HEIGHT, MAX_LINE_WIDTH
 from ocr_spark.kernels.jpeg import JPEG_MAGIC, jpeg_to_gray_float
@@ -52,10 +50,6 @@ from ocr_spark.kernels.png import PNG_MAGIC, png_to_gray_float
 _IMG_RE = re.compile(
     r'<img[^>]*?data-width="(\d+)"[^>]*?'
     r'(?:data-height="(\d+)"[^>]*?)?data-strip="([A-Za-z0-9+/=]*)"'
-)
-
-_LINES_SCHEMA = (
-    "url string, line_id int, strip array<float>, width long"
 )
 
 
@@ -156,178 +150,96 @@ def _lines_of_doc(html_text: str):
         yield i, strip, width
 
 
-def _detect_lines(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ocr_spark.kernels.charset import decode_html
-
-    for pdf in batches:
-        urls, ids, strips, widths = [], [], [], []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            text = decode_html(bytes(html))
-            for i, strip, width in _lines_of_doc(text):
-                urls.append(url)
-                ids.append(i)
-                strips.append(strip.ravel().tolist())
-                widths.append(width)
-        if urls:  # an all-object empty frame cannot convert to list<float>
-            yield pd.DataFrame(
-                {"url": urls, "line_id": ids, "strip": strips, "width": widths}
-            )
+# recognizer name → font decoder; "conv" is the code-glyph matched filter
+_FONT_DECODERS = {
+    "font": "greedy",
+    "font_beam": "beam",
+    "font_beam_lm": "beam_lm",
+    "font_beam_bi": "beam_bi",
+}
+_RECOGNIZERS = ("conv", *_FONT_DECODERS)
 
 
-def detect_image_lines(pages: DataFrame) -> DataFrame:
-    """pages → (url, line_id, strip, width) for every embedded line
-    (standalone detector; ``extract_full`` uses the fused single-scan
-    stage below instead)."""
-    return pages.select("url", "html").mapInPandas(
-        _detect_lines, schema=_LINES_SCHEMA
-    )
+def _recognize_fn(recognizer: str):
+    """``recognizer`` → batched ``(strips [B, 8, 384], widths) → texts``.
+    "conv" = the code-glyph matched filter (``kernels.ocr``), "font" = the
+    bitmap-atlas NCC recognizer (``kernels.font``) for anti-aliased /
+    noisy imagery, "font_beam" = the same NCC scores decoded by CTC prefix
+    beam search (alignment-summing), "font_beam_lm" = beam + the fixed
+    glyph-bigram context prior (the BiLSTM-analog; recovers O/0 and l/1
+    confusions at noise levels where per-window evidence fails),
+    "font_beam_bi" = bidirectional context (left prior in-beam +
+    right-context N-best rescoring — the full BiLSTM analog; fixes LEADING
+    ambiguous glyphs the forward prior cannot). The context decoders are
+    default-off: measured exact-equal to greedy at contract noise,
+    strictly better only on degraded inputs (tests/test_font_ocr.py)."""
+    if recognizer == "conv":
+        from ocr_spark.kernels.ocr import recognize_lines
+
+        return recognize_lines
+    from ocr_spark.kernels.font import recognize_lines_font
+
+    return partial(recognize_lines_font, decoder=_FONT_DECODERS[recognizer])
 
 
-# fused-stage row schema: one 'html' row per document (text carries the
-# extracted blocks) + one 'line' row per embedded image line (strip/width
-# carry the tensor; text is filled by the recognition stage).
-_FUSED_SCHEMA = (
-    "url string, kind string, line_id int, text string, "
-    "strip array<float>, width long"
-)
+def _fused_stage(recognizer: str):
+    def _extract_and_detect(
+        batches: Iterator[pd.DataFrame],
+    ) -> Iterator[pd.DataFrame]:
+        """Decode each document ONCE (charset sniffing), run the HTML block
+        extraction AND the embedded-line detection on the same decoded
+        string, recognize every strip of the batch in one call, and
+        assemble each page: the html block (dropped when empty), then the
+        recognized lines in image order (an empty line keeps its slot),
+        joined with BLOCK_SEPARATOR."""
+        from ocr_spark.kernels.charset import decode_html
+        from ocr_spark.kernels.html import extract_main_text
 
-
-def _extract_and_detect(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Single-scan fused detection: decode each document ONCE (charset
-    sniffing), then run the HTML block extraction AND the embedded-line
-    detection on the same decoded string."""
-    from ocr_spark.kernels.charset import decode_html
-    from ocr_spark.kernels.html import extract_main_text
-
-    for pdf in batches:
-        urls, kinds, ids, texts, strips, widths = [], [], [], [], [], []
-        for url, html in zip(pdf["url"], pdf["html"]):
-            decoded = decode_html(bytes(html))
-            block_text, _, _ = extract_main_text(decoded)
-            urls.append(url)
-            kinds.append("html")
-            ids.append(-1)
-            texts.append(block_text)
-            strips.append(None)
-            widths.append(0)
-            for i, strip, width in _lines_of_doc(decoded):
-                urls.append(url)
-                kinds.append("line")
-                ids.append(i)
-                texts.append("")
-                strips.append(strip.ravel().tolist())
-                widths.append(width)
-        yield pd.DataFrame(
-            {
-                "url": urls,
-                "kind": kinds,
-                "line_id": ids,
-                "text": texts,
-                "strip": strips,
-                "width": widths,
-            }
-        )
-
-
-def _recognize_mixed(recognizer: str = "conv"):
-    """Recognition stage of the fused pipeline: decode 'line' rows
-    (batched across all documents in the Arrow batch — the RECOG_BATCH
-    discipline), 'html' rows pass through untouched. Strips are dropped
-    here, before the shuffle. ``recognizer``: "conv" = the code-glyph
-    matched filter (``kernels.ocr``), "font" = the bitmap-atlas NCC
-    recognizer (``kernels.font``) for anti-aliased / noisy imagery,
-    "font_beam" = the same NCC scores decoded by CTC prefix beam search
-    (alignment-summing), "font_beam_lm" = beam + the fixed glyph-bigram
-    context prior (the BiLSTM-analog; recovers O/0 and l/1 confusions at
-    noise levels where per-window evidence fails), "font_beam_bi" =
-    bidirectional context (left prior in-beam + right-context N-best
-    rescoring — the full BiLSTM analog; fixes LEADING ambiguous glyphs
-    the forward prior cannot). The context decoders are default-off:
-    measured exact-equal to greedy at contract noise, strictly better
-    only on degraded inputs (tests/test_font_ocr.py)."""
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        if recognizer in ("font", "font_beam", "font_beam_lm", "font_beam_bi"):
-            from ocr_spark.kernels.font import recognize_lines_font
-
-            decoder = {
-                "font": "greedy",
-                "font_beam": "beam",
-                "font_beam_lm": "beam_lm",
-                "font_beam_bi": "beam_bi",
-            }[recognizer]
-
-            def rec(strips, widths):
-                return recognize_lines_font(strips, widths, decoder=decoder)
-        else:
-            from ocr_spark.kernels.ocr import recognize_lines as rec
-
+        recognize = _recognize_fn(recognizer)
         for pdf in batches:
-            if not len(pdf):
-                continue
-            texts = pdf["text"].to_numpy(dtype=object, copy=True)
-            mask = (pdf["kind"] == "line").to_numpy()
-            if mask.any():
-                strips = np.stack(
-                    [
-                        np.asarray(s, dtype=np.float32).reshape(
-                            LINE_HEIGHT, MAX_LINE_WIDTH
-                        )
-                        for s in pdf["strip"][mask]
-                    ]
-                )
-                texts[mask] = rec(
-                    strips, pdf["width"][mask].to_numpy(np.int64)
-                )
+            parts, owners, strips, widths = [], [], [], []
+            for doc, html in enumerate(pdf["html"]):
+                decoded = decode_html(bytes(html))
+                block_text, _, _ = extract_main_text(decoded)
+                parts.append([block_text] if block_text else [])
+                for _i, strip, width in _lines_of_doc(decoded):
+                    owners.append(doc)
+                    strips.append(strip)
+                    widths.append(width)
+            if strips:
+                texts = recognize(np.stack(strips), np.asarray(widths, np.int64))
+                for doc, text in zip(owners, texts):
+                    parts[doc].append(text)
             yield pd.DataFrame(
                 {
                     "url": pdf["url"],
-                    "kind": pdf["kind"],
-                    "line_id": pdf["line_id"],
-                    "text": texts,
+                    "extracted_text": [BLOCK_SEPARATOR.join(p) for p in parts],
                 }
             )
 
-    return fn
+    return _extract_and_detect
 
 
 def extract_full(pages: DataFrame, recognizer: str = "conv") -> DataFrame:
     """Complete extraction: HTML text + recognized embedded lines, merged.
 
-    Output (url, extracted_text): html blocks first (document order), then
-    recognized lines in image order, all joined with BLOCK_SEPARATOR —
-    the reading-order contract of the reference's result sink
-    (``/root/reference/test_img.py:121-132``). Physical plan: one scan of
-    pages, two pipelined map stages, one groupBy(url) exchange of slim
-    text rows (asserted in tests/test_pipeline.py).
+    Output (url, extracted_text), one row per input page: the html blocks
+    first (document order; dropped when the page has none), then the
+    recognized lines in image order (an empty recognized line keeps its
+    slot — a detected region that decodes to nothing still separates its
+    neighbors, and the extract_full oracles encode exactly that), all
+    joined with BLOCK_SEPARATOR — the reading-order contract of the
+    reference's result sink (its ``test_img.py:121-132``).
+    ``recognizer`` is "conv", "font", "font_beam", "font_beam_lm" or
+    "font_beam_bi" (see ``_recognize_fn``); anything else raises
+    ``ValueError`` before a job runs. Physical plan: one scan of pages,
+    one map stage that detects, recognizes and assembles in Python, and
+    no exchange over the source (asserted in tests/test_pipeline.py).
     """
-    fused = pages.select("url", "html").mapInPandas(
-        _extract_and_detect, schema=_FUSED_SCHEMA
+    if recognizer not in _RECOGNIZERS:
+        raise ValueError(
+            f"unknown recognizer {recognizer!r}; expected one of {_RECOGNIZERS}"
+        )
+    return pages.select("url", "html").mapInPandas(
+        _fused_stage(recognizer), schema="url string, extracted_text string"
     )
-    rec = fused.mapInPandas(
-        _recognize_mixed(recognizer),
-        schema="url string, kind string, line_id int, text string",
-    )
-    # JVM-side reading-order assembly: 'html' sorts before 'line', lines
-    # sort by line_id. ONLY an empty html block drops out (matching the
-    # two-branch spelling's concat_ws-over-NULL semantics); an empty
-    # RECOGNIZED line keeps its slot — a detected region that decodes to
-    # nothing still separates its neighbors, and the extract_full oracles
-    # encode exactly that.
-    assembled = rec.groupBy("url").agg(
-        F.array_join(
-            F.transform(
-                F.filter(
-                    F.array_sort(
-                        F.collect_list(F.struct("kind", "line_id", "text"))
-                    ),
-                    lambda s: ~(
-                        (s["kind"] == F.lit("html")) & (s["text"] == F.lit(""))
-                    ),
-                ),
-                lambda s: s["text"],
-            ),
-            BLOCK_SEPARATOR,
-        ).alias("extracted_text")
-    )
-    return assembled.select("url", "extracted_text")

@@ -71,10 +71,10 @@ def stream_extract_full(
     the streaming twin of ``operators.pipeline.extract_full``, one code
     path for both modes.
 
-    Uses ``foreachBatch`` rather than a streaming aggregation: the fused
-    pipeline's only grouping is the per-url reading-order assembly, and a
-    page's rows are file-local by construction (one page = one input row),
-    so per-micro-batch grouping is exact and needs no watermark state.
+    Uses ``foreachBatch`` so each micro-batch runs the batch operator
+    verbatim: the fused pipeline is a single map stage that assembles
+    each page inside the Python worker (one input row → one output row),
+    so it holds no cross-batch state and needs no watermark.
     Restart resumes from the checkpoint's source offsets; the per-batch
     parquet append composes with the manifest/lineage sink for
     exactly-once semantics at date granularity.

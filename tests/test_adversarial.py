@@ -136,7 +136,8 @@ def test_phantom_empty_payload_with_declared_width_is_skipped(spark):
     """Empty data-strip with a NONZERO declared width is malformed and
     must be skipped entirely — not emitted as a phantom empty line slot
     adding a spurious separator."""
-    from ocr_spark.operators.pipeline import detect_image_lines, extract_full
+    from ocr_spark.kernels.charset import decode_html
+    from ocr_spark.operators.pipeline import _lines_of_doc, extract_full
 
     good_p = "<p>real content words here enough to score well over the threshold</p>"
     pages = spark.createDataFrame(
@@ -145,7 +146,8 @@ def test_phantom_empty_payload_with_declared_width_is_skipped(spark):
         ), "", "en")],
         PAGES_SCHEMA,
     )
-    assert detect_image_lines(pages).count() == 0
+    html = pages.select("html").collect()[0].html
+    assert list(_lines_of_doc(decode_html(bytes(html)))) == []
     out = extract_full(pages).collect()[0].extracted_text
     assert out == "real content words here enough to score well over the threshold"
 

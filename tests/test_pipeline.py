@@ -4,7 +4,8 @@ from __future__ import annotations
 
 import pyspark.sql.functions as F
 
-from ocr_spark.operators.pipeline import detect_image_lines, extract_full
+from ocr_spark.kernels.charset import decode_html
+from ocr_spark.operators.pipeline import _lines_of_doc, extract_full
 from ocr_spark.plans.inspect import count_exchanges, explain_str
 from ocr_spark.sources.pages import (
     pages_from_documents,
@@ -14,13 +15,34 @@ from ocr_spark.sources.pages import (
 SF = "/root/testdata/sf0.001"
 
 
+def _lines_per_url(pages):
+    """url → number of embedded lines detected in its decoded html (the
+    pipeline's detector, run in plain Python over the collected pages)."""
+    return {
+        r.url: len(list(_lines_of_doc(decode_html(bytes(r.html)))))
+        for r in pages.select("url", "html").collect()
+    }
+
+
+def _plan_column_types(df):
+    """Type of every column that any node of the optimized plan outputs
+    (intermediate columns never show in an explain string's types)."""
+    types, todo = set(), [df._jdf.queryExecution().optimizedPlan()]
+    while todo:
+        node = todo.pop()
+        types.update(f.dataType().simpleString() for f in node.schema().fields())
+        children = node.children()
+        todo.extend(children.apply(i) for i in range(children.size()))
+    return types
+
+
 def test_pages_without_images_degrade_to_html_only(spark):
     pages = pages_from_documents(spark, SF)  # no embedded images
     out = extract_full(pages)
     docs = spark.read.parquet(f"{SF}/documents.parquet")
     n = docs.count()
     assert out.count() == n
-    assert detect_image_lines(pages).count() == 0
+    assert set(_lines_per_url(pages).values()) == {0}
     # extracted text equals the pure-HTML branch result exactly
     joined = out.join(
         docs.selectExpr("text AS expected"), out.extracted_text == F.col("expected")
@@ -30,30 +52,122 @@ def test_pages_without_images_degrade_to_html_only(spark):
 
 def test_line_detection_counts(spark):
     pages = pages_with_images_from_documents(spark, SF)
-    lines = detect_image_lines(pages)
+    per_url = _lines_per_url(pages)
     n = spark.read.parquet(f"{SF}/documents.parquet").count()
-    assert lines.count() == 2 * n
-    assert lines.groupBy("url").count().filter(F.col("count") != 2).count() == 0
+    assert len(per_url) == n
+    assert set(per_url.values()) == {2}
 
 
 def test_pipeline_shuffle_budget(spark):
-    """Design contract of the fused pipeline: the ONLY exchange it adds
-    over the source is the groupBy(url) assembly, carrying slim text rows;
-    strips and the html blob never shuffle."""
+    """Design contract of the fused pipeline: assembly happens in the
+    worker, so it adds NO exchange over the source, and strips never leave
+    the worker — no array<float> column anywhere in the plan."""
     pages = pages_with_images_from_documents(spark, SF)
     source_exchanges = count_exchanges(pages)
-    assert count_exchanges(extract_full(pages)) == source_exchanges + 1
+    full = extract_full(pages)
+    assert count_exchanges(full) == source_exchanges
+    types = _plan_column_types(full)
+    assert "array<float>" not in types, types
 
 
 def test_pipeline_single_scan(spark):
-    """The corpus is scanned and parsed exactly once: the fused pipeline
-    adds exactly TWO UDF stages over the source (extract+detect fused into
-    one pass, then recognize) — the double-scan spelling shows three, with
-    the extraction parse running twice."""
+    """The corpus is scanned and parsed exactly once, in ONE UDF stage
+    over the source: extract, detect, recognize and assemble all run in
+    the Python worker that decoded the page."""
     pages = pages_with_images_from_documents(spark, SF)
     base = explain_str(pages, "simple").count("MapInPandas")
     plan = explain_str(extract_full(pages), "simple")
-    assert plan.count("MapInPandas") == base + 2, plan
+    assert plan.count("MapInPandas") == base + 1, plan
+
+
+def test_unknown_recognizer_is_rejected_before_any_job(spark):
+    """A misspelled recognizer must fail when the query is built, not run
+    the conv recognizer."""
+    import pytest
+
+    pages = pages_with_images_from_documents(spark, SF)
+    with pytest.raises(ValueError, match="fnot"):
+        extract_full(pages, recognizer="fnot")
+
+
+def test_batch_boundaries_do_not_leak(spark, monkeypatch):
+    """Assembly is per Arrow batch in the worker, so the output must not
+    depend on where batches split: 2-row batches give the same rows as the
+    default conf. The corpus holds a 2-row batch whose images are all
+    malformed (zero strips: no stack, no recognizer call), and two pages
+    sharing a url straddling a batch boundary give two rows, like
+    extract_pages."""
+    import datetime
+
+    from ocr_spark.kernels.synth import wrap_html_with_images
+    from ocr_spark.operators import pipeline
+    from ocr_spark.operators.extract_html import extract_pages
+    from ocr_spark.sources.pages import PAGES_SCHEMA
+
+    ts = datetime.datetime(2024, 1, 1)
+    para = "<p>real content words here enough to score well over the threshold</p>"
+
+    def page(url, text, lines):
+        return (url, ts, bytearray(wrap_html_with_images(text, url, lines)), text, "en")
+
+    def bad(url):
+        html = (f'<body><img data-width="24" data-strip="!!!bad!!!">'
+                f'<img data-width="24" data-strip="AAAAA">{para}</body>')
+        return (url, ts, bytearray(html.encode()), "", "en")
+
+    rows = [
+        page("u:a", "first page of prose", ["abc1", "def2"]),
+        page("u:dup", "duplicate url one", ["one1"]),
+        bad("u:bad1"),
+        bad("u:bad2"),
+        page("u:dup", "duplicate url two", ["two2", "x"]),
+        page("u:c", "last page of prose", ["ghi3"]),
+    ]
+    pages = spark.createDataFrame(rows, PAGES_SCHEMA).coalesce(1)
+
+    def collect(df):
+        return sorted(tuple(r) for r in df.collect())
+
+    default = collect(extract_full(pages))
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "2")
+    try:
+        small = collect(extract_full(pages))
+    finally:
+        spark.conf.set(key, old)
+    assert small == default
+    assert [u for u, _ in default] == sorted(
+        r.url for r in extract_pages(pages).collect()
+    )
+    dup = [t for u, t in default if u == "u:dup"]
+    assert sorted(dup) == sorted([
+        "duplicate url one\n\none1", "duplicate url two\n\ntwo2\n\nx"
+    ]), dup
+    assert dict(default)["u:bad1"] == para[3:-4]
+
+    # the same 2-row batches through the stage in-process: the all-
+    # malformed batch must reach neither np.stack nor the recognizer
+    calls = []
+    real = pipeline._recognize_fn
+
+    def recording(name):
+        rec = real(name)
+
+        def fn(strips, widths):
+            calls.append(len(strips))
+            return rec(strips, widths)
+
+        return fn
+
+    monkeypatch.setattr(pipeline, "_recognize_fn", recording)
+    pdf = pages.select("url", "html").toPandas()
+    batches = [pdf.iloc[i:i + 2].reset_index(drop=True) for i in range(0, 6, 2)]
+    out = list(pipeline._fused_stage("conv")(iter(batches)))
+    assert calls == [3, 3]
+    assert sorted(
+        (u, t) for o in out for u, t in zip(o["url"], o["extracted_text"])
+    ) == default
 
 
 def test_empty_recognized_line_keeps_its_slot(spark):

@@ -108,14 +108,14 @@ def test_minhash_no_aggregation_shuffle(spark):
 def test_round2_query_plan_budgets(spark):
     """Plan discipline for the noisy/rotated queries: the rotated PDF path
     is map-only after its fan-out repartition; the fused noisy pipeline
-    adds exactly one exchange (the url assembly) over its source like
-    extract_full does; ocr_noisy (multi-strip since round 3) adds one
+    adds no exchange over its source fan-out (assembly runs in the
+    worker, like extract_full); ocr_noisy (multi-strip since round 3) adds one
     segment-reassembly groupBy over its fan-out — the shuffle moves only
     slim (doc_id, seg, short-text) rows, never strips."""
     assert count_exchanges(em.q_ocr_noisy(spark, SF)) == 2  # fan-out + assembly
     assert count_exchanges(em.q_extract_pdf_rotated(spark, SF)) == 1
-    # fused noisy: source fan-out + one assembly groupBy
-    assert count_exchanges(em.q_extract_full_noisy(spark, SF)) == 2
+    # fused noisy: the source fan-out only
+    assert count_exchanges(em.q_extract_full_noisy(spark, SF)) == 1
 
 
 def test_dedup_embedding_join_is_bucketed(spark):
