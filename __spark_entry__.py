@@ -501,7 +501,7 @@ def q_ocr_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from ocr_spark.config import CHAR_VECTOR
     from ocr_spark.kernels.font import render_distorted_line_multi
-    from ocr_spark.operators.extract_ocr import recognize_line_strips_font
+    from ocr_spark.operators.extract_ocr import recognize_line_strips
 
     def strips_fn(batches):
         for pdf in batches:
@@ -531,7 +531,7 @@ def q_ocr_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
         strips_fn,
         schema="url string, line_id int, strip array<float>, width long",
     )
-    out = recognize_line_strips_font(lines)
+    out = recognize_line_strips(lines, recognizer="font")
     # reassemble continuation segments in order — url carries the doc_id,
     # line_id the segment index; array_sort on (seg, text) structs orders
     # by seg, all JVM-side

@@ -35,27 +35,12 @@ def main() -> None:
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
     ap.add_argument("--no-resume", action="store_true")
-    ap.add_argument("--cpus", default=os.environ.get("SPARK_GRAFT_CPUS", "32"))
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
+    from ocr_spark.session import get_spark
 
-    # under spark-submit the session master comes from the launcher; the
-    # builder only fills in app-level conf
-    spark = (
-        SparkSession.builder.appName("ocr_spark.extract")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        # wide-blob scan sizing: html pages run ~10 KB+, so the default
-        # 4096-row columnar batches need >40 MB contiguous per column and
-        # the vectorized reader aborts under memory pressure; 512 rows
-        # bounds the reservation (~5 MB) with no throughput cost on blobs
-        .config("spark.sql.parquet.columnarReaderBatchSize", "512")
-        .config("spark.sql.session.timeZone", "UTC")
-        .getOrCreate()
-    )
+    # under spark-submit the master comes from the launcher's --master
+    spark = get_spark("ocr_spark.extract")
     from ocr_spark.sinks.partitioned import extract_and_write
     from ocr_spark.sources.pages import pages_from_documents
 

@@ -1339,8 +1339,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
 
 
 def jpeg_to_gray_float(data: bytes) -> np.ndarray:
-    """JPEG bytes → float32 (H, W) luma in [0, 1] — the ``decode_image``
-    contract shape (channel mean for RGB, same rule as PNG)."""
+    """JPEG bytes → float32 (H, W) luma in [0, 1] — the JPEG leg of
+    ``kernels.image.decode_gray`` (channel mean for RGB, same rule as PNG)."""
     img = decode_jpeg(data)
     if img.ndim == 3:
         img = img.astype(np.float32).mean(axis=2)

@@ -359,11 +359,9 @@ def decode_png(data: bytes) -> np.ndarray:
 
 def png_to_gray_float(payload: bytes) -> np.ndarray:
     """PNG bytes → float32 grayscale raster in [0, 1] (color reduced to
-    luma by channel mean). THE shared post-decode normalization — both the
-    media decode seam (``operators.multimodal.decode_image``) and the
-    embedded-line parser (``operators.pipeline._lines_of_doc``) go through
-    here, so luma/normalization semantics cannot diverge between the two
-    paths. Raises ``ValueError`` on anything ``decode_png`` rejects."""
+    luma by channel mean) — the PNG leg of ``kernels.image.decode_gray``,
+    through which every image-bearing path decodes. Raises ``ValueError``
+    on anything ``decode_png`` rejects."""
     img = decode_png(payload)
     if img.ndim == 3:
         img = img.mean(axis=2)

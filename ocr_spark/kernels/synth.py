@@ -121,12 +121,13 @@ def wrap_html_with_images(
     """wrap_html + embedded text-line images (the OCR-branch fixture).
 
     Each line text renders to the 8-row glyph strip
-    (``kernels.ocr.render_line``), optionally integer-upscaled (scale s →
-    an 8s-row image, announced via ``data-height``, which the detect stage
-    must resample back through ``normalize_strip``), packed to uint8 and
-    base64-embedded as ``<img class="embedded-line" ...>`` inside the
-    article — the web-page analog of the reference's image-embedded text
-    regions that RoIRotate crops + resamples for recognition
+    (``kernels.ocr.render_line``), keeps its content columns, is optionally
+    integer-upscaled (scale s → an 8s-row image, announced via
+    ``data-height``, which the detect stage must resample back through
+    ``normalize_strip``), and ships as a lossless PNG base64-embedded as
+    ``<img class="embedded-line" ...>`` inside the article — the web-page
+    analog of the reference's image-embedded text regions that RoIRotate
+    crops + resamples for recognition
     (``/root/reference/Module/RRotateLayer.py:67-116``).
     """
     import base64
@@ -134,23 +135,21 @@ def wrap_html_with_images(
     import numpy as np
 
     from ocr_spark.kernels.ocr import render_line
+    from ocr_spark.kernels.png import encode_png
 
     doc = wrap_html(main_text, url, n_paragraphs=n_paragraphs).decode("utf-8")
     imgs = []
     scales = scales or [1] * len(line_texts)
     for t, s in zip(line_texts, scales):
         strip, width = render_line(t)
-        if s == 1:
-            payload_arr = strip  # full 8×384 padded strip
-            h_attr = ""
-        else:
-            content = strip[:, :width]
-            scaled = np.repeat(np.repeat(content, s, axis=0), s, axis=1)
-            payload_arr = scaled
+        content = strip[:, :width]
+        h_attr = ""
+        if s > 1:
+            content = np.repeat(np.repeat(content, s, axis=0), s, axis=1)
             width = width * s
             h_attr = f'data-height="{8 * s}" '
         payload = base64.b64encode(
-            (payload_arr * 255).astype(np.uint8).tobytes()
+            encode_png((content * 255).astype(np.uint8))
         ).decode("ascii")
         imgs.append(
             f'<img class="embedded-line" data-width="{width}" '

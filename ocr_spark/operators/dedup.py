@@ -355,9 +355,8 @@ def simhash_band_pairs(
     materialize: str = "local",
     table_path: str | None = None,
 ) -> DataFrame:
-    """SimHash near-pairs by Hamming-band bucketing — the SCALE path
-    (replaces the attribute-blocked ``simhash_near_pairs``, which is
-    O(n²/groups) and unusable on an unblocked corpus).
+    """SimHash near-pairs by Hamming-band bucketing — the SCALE path (an
+    equi-join on band bits, never an all-pairs sweep).
 
     Pigeonhole guarantee: split the 64 signature bits into ``n_bands``
     equal bands; two signatures within Hamming distance < n_bands must
@@ -447,26 +446,6 @@ def simhash_band_pairs(
             bands.unpersist()
     finally:
         sigs.unpersist()
-
-
-def simhash_near_pairs(
-    docs: DataFrame, group_col: str = "source", max_hamming: int = 8
-) -> DataFrame:
-    """SimHash near-dup pairs within a blocking group (bit_count(xor) ≤ k).
-
-    Test-scale spelling only: the group self-join is O(n²/groups). The
-    corpus-scale path with guaranteed recall is ``simhash_band_pairs``."""
-    sig = simhash64(docs).join(docs.select("doc_id", group_col), "doc_id")
-    a, b = sig.alias("a"), sig.alias("b")
-    joined = a.join(b, on=group_col).filter(F.col("a.doc_id") < F.col("b.doc_id"))
-    ham = F.bit_count(
-        F.col("a.simhash_hi").bitwiseXOR(F.col("b.simhash_hi"))
-    ) + F.bit_count(F.col("a.simhash_lo").bitwiseXOR(F.col("b.simhash_lo")))
-    return joined.select(
-        F.col("a.doc_id").alias("doc_id_a"),
-        F.col("b.doc_id").alias("doc_id_b"),
-        ham.alias("hamming"),
-    ).filter(F.col("hamming") <= max_hamming)
 
 
 def remove_boilerplate_chunks(

@@ -1,14 +1,16 @@
-"""OCR-branch Spark operator: line-strip table → decoded text rows.
+"""OCR-branch Spark operator: line-strip table → decoded text rows, and the
+recognizer table it shares with the fused pipeline (``operators.pipeline``).
 
 One iterator-style ``mapInPandas`` stage; per Arrow batch the strips stack
-into a single ``[B, 8, 384]`` tensor and the conv + CTC decode run as two
-batched NumPy ops — the Arrow analog of the reference's RECOG_BATCH
-micro-batched recognition loop (``/root/reference/test_img.py:97-119``).
+into a single ``[B, 8, 384]`` tensor and the recognizer runs as batched
+NumPy ops — the Arrow analog of the reference's RECOG_BATCH micro-batched
+recognition loop (its ``test_img.py:97-119``).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -16,8 +18,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
 from ocr_spark.config import LINE_HEIGHT, MAX_LINE_WIDTH
-from ocr_spark.kernels.ctc import ctc_greedy_decode_batch
-from ocr_spark.kernels.ocr import recognize_lines
 
 OCR_TEXT_SCHEMA = T.StructType(
     [
@@ -27,35 +27,49 @@ OCR_TEXT_SCHEMA = T.StructType(
     ]
 )
 
+# recognizer name → font decoder; "conv" is the code-glyph matched filter
+_FONT_DECODERS = {
+    "font": "greedy",
+    "font_beam": "beam",
+    "font_beam_lm": "beam_lm",
+    "font_beam_bi": "beam_bi",
+}
+_RECOGNIZERS = ("conv", *_FONT_DECODERS)
 
-def _recognize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        if len(pdf) == 0:
-            continue
-        strips = np.stack(
-            [
-                np.asarray(s, dtype=np.float32).reshape(LINE_HEIGHT, MAX_LINE_WIDTH)
-                for s in pdf["strip"]
-            ]
+
+def _check_recognizer(recognizer: str) -> None:
+    """Reject an unknown recognizer name before any job runs."""
+    if recognizer not in _RECOGNIZERS:
+        raise ValueError(
+            f"unknown recognizer {recognizer!r}; expected one of {_RECOGNIZERS}"
         )
-        texts = recognize_lines(strips, pdf["width"].to_numpy(np.int64))
-        yield pd.DataFrame(
-            {"url": pdf["url"], "line_id": pdf["line_id"], "text": texts}
-        )
 
 
-def recognize_line_strips(lines: DataFrame) -> DataFrame:
-    """lines(url, line_id, strip array<float> [8*384 flattened], width) →
-    (url, line_id, text)."""
-    return lines.select("url", "line_id", "strip", "width").mapInPandas(
-        _recognize_batches, schema=OCR_TEXT_SCHEMA
-    )
+def _recognize_fn(recognizer: str):
+    """``recognizer`` → batched ``(strips [B, 8, 384], widths) → texts``.
+    "conv" = the code-glyph matched filter (``kernels.ocr``), "font" = the
+    bitmap-atlas NCC recognizer (``kernels.font``) for anti-aliased /
+    noisy imagery, "font_beam" = the same NCC scores decoded by CTC prefix
+    beam search (alignment-summing), "font_beam_lm" = beam + the fixed
+    glyph-bigram context prior (the BiLSTM-analog; recovers O/0 and l/1
+    confusions at noise levels where per-window evidence fails),
+    "font_beam_bi" = bidirectional context (left prior in-beam +
+    right-context N-best rescoring — the full BiLSTM analog; fixes LEADING
+    ambiguous glyphs the forward prior cannot). The context decoders are
+    default-off: measured exact-equal to greedy at contract noise,
+    strictly better only on degraded inputs (tests/test_font_ocr.py)."""
+    if recognizer == "conv":
+        from ocr_spark.kernels.ocr import recognize_lines
+
+        return recognize_lines
+    from ocr_spark.kernels.font import recognize_lines_font
+
+    return partial(recognize_lines_font, decoder=_FONT_DECODERS[recognizer])
 
 
-def _recognize_font_batches(decoder: str = "greedy"):
+def _recognize_batches(recognizer: str):
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from ocr_spark.kernels.font import recognize_lines_font
-
+        recognize = _recognize_fn(recognizer)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
@@ -67,9 +81,7 @@ def _recognize_font_batches(decoder: str = "greedy"):
                     for s in pdf["strip"]
                 ]
             )
-            texts = recognize_lines_font(
-                strips, pdf["width"].to_numpy(np.int64), decoder=decoder
-            )
+            texts = recognize(strips, pdf["width"].to_numpy(np.int64))
             yield pd.DataFrame(
                 {"url": pdf["url"], "line_id": pdf["line_id"], "text": texts}
             )
@@ -77,38 +89,13 @@ def _recognize_font_batches(decoder: str = "greedy"):
     return fn
 
 
-def recognize_line_strips_font(
-    lines: DataFrame, decoder: str = "greedy"
-) -> DataFrame:
-    """Font-atlas NCC recognizer over a line-strip table — same contract
-    as ``recognize_line_strips`` but robust to anti-aliased scaling and
-    additive noise (``kernels.font``): the strips need not be rendered
-    from the engine's own glyph code. ``decoder="beam"`` switches the CTC
-    collapse to prefix beam search for the high-noise regime."""
+def recognize_line_strips(lines: DataFrame, recognizer: str = "conv") -> DataFrame:
+    """lines(url, line_id, strip array<float> [8*384 flattened], width) →
+    (url, line_id, text). ``recognizer`` is one of ``_RECOGNIZERS`` (see
+    ``_recognize_fn``): "conv" reads strips rendered from the engine's own
+    glyph code, "font" and its beam variants read anti-aliased, noisy
+    imagery; anything else raises ``ValueError`` before a job runs."""
+    _check_recognizer(recognizer)
     return lines.select("url", "line_id", "strip", "width").mapInPandas(
-        _recognize_font_batches(decoder), schema=OCR_TEXT_SCHEMA
-    )
-
-
-def _decode_logits_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        texts = []
-        for lg in pdf["logits"]:
-            arr = np.asarray([np.asarray(t, dtype=np.float32) for t in lg])
-            if arr.size == 0:
-                texts.append("")
-                continue
-            texts.append(ctc_greedy_decode_batch(arr[None])[0])
-        yield pd.DataFrame(
-            {"url": pdf["url"], "line_id": pdf["line_id"], "text": texts}
-        )
-
-
-def decode_logits(lines: DataFrame) -> DataFrame:
-    """Golden-logits path (fixture suite 3): lines(url, line_id,
-    logits array<array<float>>) → decoded text — the exact shape of the
-    reference's hand-built-logits self-test
-    (``/root/reference/Module/RecognitionLoss.py:41-54``)."""
-    return lines.select("url", "line_id", "logits").mapInPandas(
-        _decode_logits_batches, schema=OCR_TEXT_SCHEMA
+        _recognize_batches(recognizer), schema=OCR_TEXT_SCHEMA
     )

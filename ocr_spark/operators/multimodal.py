@@ -34,6 +34,11 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark.kernels.image import decode_gray, sniff
+
+# containers whose frames the video operators decode
+_VIDEO_FMTS = ("avi", "gif")
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType()),
@@ -78,51 +83,25 @@ FEATURE_SCHEMA = T.StructType(
 FEATURE_DIM = 16
 
 
-def sniff_image_fmt(payload: bytes) -> str:
-    """Container format by magic bytes: 'png' | 'jpeg' | 'gif' | 'fake'."""
-    from ocr_spark.kernels.gif import GIF_MAGICS
-    from ocr_spark.kernels.jpeg import JPEG_MAGIC
-    from ocr_spark.kernels.png import PNG_MAGIC
-
-    if payload.startswith(PNG_MAGIC):
-        return "png"
-    if payload.startswith(JPEG_MAGIC):
-        return "jpeg"
-    if payload[:6] in GIF_MAGICS:
-        return "gif"
-    return "fake"
-
-
 def decode_image(payload: bytes, width: int, height: int) -> np.ndarray:
-    """Image codec seam: PNG and baseline JPEG payloads decode FOR REAL;
+    """Image codec seam: PNG, JPEG and GIF payloads decode FOR REAL;
     other containers fall back to the deterministic fake.
 
-    Signature-sniffed bytes go through the engine's own pure-stdlib
-    decoders (``kernels.png`` RFC-2083, ``kernels.jpeg`` T.81 baseline —
-    the analog of the reference's ``cv2.imread`` scan,
+    Signature-sniffed bytes go through ``kernels.image.decode_gray`` and
+    the engine's own pure-stdlib decoders behind it (``kernels.png``
+    RFC-2083, ``kernels.jpeg`` T.81, ``kernels.gif`` first frame — the
+    analog of the reference's ``cv2.imread`` scan,
     ``/root/reference/test_img.py:38-43``, whose flagship input IS a
     JPEG); color images are reduced to luma by channel mean. The declared
     meta width/height are advisory — the parsed IHDR/SOF0/GIF-descriptor
-    dimensions win (real metadata can lie; the bytes cannot). GIF frames
-    composite through the palette and reduce to luma; payloads outside
-    the native families (WebP — codec not available in this container)
-    keep the sha256-seeded deterministic fake, honestly labeled: the
-    (H, W) float32 [0,1] contract is identical either way.
+    dimensions win (real metadata can lie; the bytes cannot). Payloads
+    outside the native families (WebP — codec not available in this
+    container) keep the sha256-seeded deterministic fake, honestly
+    labeled: the (H, W) float32 [0,1] contract is identical either way.
     """
-    from ocr_spark.kernels.jpeg import jpeg_to_gray_float
-    from ocr_spark.kernels.png import png_to_gray_float
-
-    fmt = sniff_image_fmt(payload)
-    if fmt == "png":
-        return png_to_gray_float(payload)
-    if fmt == "jpeg":
-        return jpeg_to_gray_float(payload)
-    if fmt == "gif":
-        from ocr_spark.kernels.gif import iter_gif_frames
-
-        for _no, rgb in iter_gif_frames(payload, max_frames=1):
-            return (rgb.astype(np.float32).mean(axis=2) / 255.0)
-        raise ValueError("GIF with no frames")
+    img = decode_gray(payload)
+    if img is not None:
+        return img
     digest = hashlib.sha256(payload).digest()
     seed = np.frombuffer(digest, dtype=np.uint8).astype(np.float32)
     n = width * height
@@ -162,9 +141,9 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             w = int(meta["width"] or 16)
             h = int(meta["height"] or 16)
             frame_sum = None
-            fmt = None
+            fmt = sniff(payload)
             try:
-                if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+                if fmt == "avi":
                     # video container: real AVI parse (DIB or MJPG). The
                     # decode checksum covers ALL frames — it only exists
                     # after the full container decode — while dims and the
@@ -181,8 +160,7 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                             img = frame.astype(np.float32) / 255.0
                     if img is None:
                         continue
-                    fmt = "avi"
-                elif payload[:6] in (b"GIF87a", b"GIF89a"):
+                elif fmt == "gif":
                     # GIF: palette image OR animation. The checksum spans
                     # ALL composited frames (gray = channel mean, exact
                     # for gray palettes); dims/feature from frame 0 —
@@ -200,8 +178,7 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                             img = gray.astype(np.float32) / 255.0
                     if img is None:
                         continue
-                    fmt = "gif"
-                elif payload[:4] == b"RIFF" and payload[8:12] == b"WAVE":
+                elif fmt == "wav":
                     # audio container: real WAV parse (PCM or G.711). The
                     # checksum is the int16-scale sample sum — it only
                     # exists after the RIFF walk + sample decode; dims are
@@ -213,9 +190,9 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                     frame_sum = int(
                         np.rint(samples * 32767.0).astype(np.int64).sum()
                     )
-                    fmt = "wav"
                 else:
                     img = decode_image(payload, w, h)
+                    fmt = fmt or "fake"
             except (ValueError, zlib.error):
                 continue  # truncated/corrupt container: skip, never crash
             # 16-dim pooled feature: column-band means (a fixed pooling —
@@ -223,7 +200,7 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             feat = _pool_bands(img)
             ids.append(int(mid))
             kinds.append(kind)
-            fmts.append(fmt if fmt is not None else sniff_image_fmt(payload))
+            fmts.append(fmt)
             sizes.append(len(payload))
             crcs.append(zlib.crc32(payload))
             dhs.append(int(img.shape[0]))
@@ -259,88 +236,23 @@ def extract_media_features(media: DataFrame) -> DataFrame:
     return slim.mapInPandas(_feature_batches, schema=FEATURE_SCHEMA)
 
 
-RESIZED_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("width", T.IntegerType()),
-        T.StructField("height", T.IntegerType()),
-        T.StructField("pixels", T.ArrayType(T.FloatType())),
-    ]
-)
-
-
-def resize_images(
-    media: DataFrame, out_w: int = 8, out_h: int = 8, mode: str = "bilinear"
-) -> DataFrame:
-    """Decode + resize to a fixed raster per image row.
-
-    ``mode="bilinear"`` uses the OCR branch's gather+lerp sampler
-    (``kernels.ocr.bilinear_resample``, the reference transformer.py
-    semantics); ``"nearest"`` keeps the integer gather. A real deployment
-    swaps ``decode_image`` for a codec and keeps this exact plumbing.
-    Payload column dropped at the boundary.
-    """
-    from ocr_spark.kernels.ocr import bilinear_resample
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, ws, hs, pix = [], [], [], []
-            for mid, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                if payload is None or meta is None:
-                    continue
-                w = int(meta["width"] or 16)
-                h = int(meta["height"] or 16)
-                try:
-                    img = decode_image(bytes(payload), w, h)
-                except (ValueError, zlib.error):
-                    continue  # corrupt container: skip, never crash
-                h, w = img.shape  # PNG IHDR dims override advisory meta
-                if img.size == 0:
-                    continue  # degenerate raster: nothing to resample
-                if mode == "bilinear":
-                    small = bilinear_resample(img, out_h, out_w)
-                else:
-                    ys = np.minimum(
-                        (np.arange(out_h) * h / out_h).astype(np.int64), h - 1
-                    )
-                    xs = np.minimum(
-                        (np.arange(out_w) * w / out_w).astype(np.int64), w - 1
-                    )
-                    small = img[np.ix_(ys, xs)].astype(np.float32)
-                ids.append(int(mid))
-                ws.append(out_w)
-                hs.append(out_h)
-                pix.append(small.ravel().tolist())
-            if ids:
-                yield pd.DataFrame(
-                    {"media_id": ids, "width": ws, "height": hs, "pixels": pix}
-                )
-
-    return media.filter(F.col("kind") == "image").select(
-        "media_id", "payload", "meta"
-    ).mapInPandas(fn, schema=RESIZED_SCHEMA)
-
-
 def _iter_gray_frames(payload: bytes, every_n: int = 1):
     """(frame_no, (H, W) uint8 gray) for the native VIDEO containers —
     AVI (DIB/MJPG) and animated GIF — decoded lazily (one frame in
     memory). Yields nothing for other payloads; raises ValueError on
     malformed containers (callers wrap iteration in skip-never-crash)."""
-    if payload[:4] == b"RIFF" and payload[8:12] == b"AVI ":
+    fmt = sniff(payload)
+    if fmt == "avi":
         from ocr_spark.kernels.avi import iter_avi_frames
 
         yield from iter_avi_frames(payload, every_n=every_n)
-        return
-    if payload[:6] in (b"GIF87a", b"GIF89a"):
+    elif fmt == "gif":
         from ocr_spark.kernels.gif import iter_gif_frames
 
         for no, rgb in iter_gif_frames(payload, every_n=every_n):
             yield no, np.rint(
                 rgb.astype(np.float32).mean(axis=2)
             ).astype(np.uint8)
-        return
 
 
 FRAMES_SCHEMA = T.StructType(
@@ -376,9 +288,7 @@ def sample_frames(media: DataFrame, every_n: int = 4) -> DataFrame:
                 if payload is None or meta is None:
                     continue
                 payload = bytes(payload)
-                if (payload[:4] == b"RIFF" and payload[8:12] == b"AVI ") or (
-                    payload[:6] in (b"GIF87a", b"GIF89a")
-                ):
+                if sniff(payload) in _VIDEO_FMTS:
                     # lazy per-frame decode: one raster in memory at a
                     # time, skipped frames never pay entropy decode; the
                     # per-payload buffer holds only (frame_no, crc, feat)
@@ -471,10 +381,7 @@ def recognize_video_frames(
                 if payload is None:
                     continue
                 payload = bytes(payload)
-                if not (
-                    (payload[:4] == b"RIFF" and payload[8:12] == b"AVI ")
-                    or payload[:6] in (b"GIF87a", b"GIF89a")
-                ):
+                if sniff(payload) not in _VIDEO_FMTS:
                     continue
                 out: list[tuple[int, str]] = []
                 kept: list[tuple[int, np.ndarray]] = []

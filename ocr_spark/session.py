@@ -27,16 +27,22 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    master = master or os.environ.get("SPARK_GRAFT_MASTER") or (
-        f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
-    )
+    """One session factory for tests, benches and the spark-submit job.
+
+    ``master=None`` under spark-submit (the launcher sets
+    ``PYSPARK_GATEWAY_PORT``) leaves the master to the launcher's
+    ``--master``; elsewhere it falls back to ``SPARK_GRAFT_MASTER``, then
+    ``local[SPARK_GRAFT_CPUS or *]``. An explicit ``master`` always wins."""
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = os.environ.get("SPARK_GRAFT_MASTER") or (
+            f"local[{os.environ.get('SPARK_GRAFT_CPUS', '*')}]"
+        )
     if shuffle_partitions is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
         shuffle_partitions = int(cpus) if cpus and cpus.isdigit() else 32
 
     b = (
         SparkSession.builder.appName(app_name)
-        .master(master)
         # --- adaptive execution: runtime partition coalescing + skew splits
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
@@ -59,6 +65,8 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")
     )
+    if master:
+        b = b.master(master)
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()

@@ -1,7 +1,6 @@
 from ocr_spark.sinks.partitioned import (  # noqa: F401
     extract_and_write,
     lineage_metrics,
-    pending_dates,
     read_manifest,
     with_partition_keys,
 )

@@ -91,19 +91,6 @@ def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
         return None  # first run: no manifest yet
 
 
-def pending_dates(
-    spark: SparkSession, keyed: DataFrame, out_dir: str
-) -> list:
-    """input dates EXCEPT committed dates (the anti-join resume pattern)."""
-    dates = keyed.select("crawl_date").distinct()
-    manifest = read_manifest(spark, out_dir)
-    if manifest is not None:
-        dates = dates.join(
-            manifest.select("crawl_date").distinct(), "crawl_date", "left_anti"
-        )
-    return sorted(r.crawl_date for r in dates.collect())
-
-
 def _partition_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence check (works on local FS and any cluster FS)."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)

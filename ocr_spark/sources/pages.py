@@ -16,6 +16,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import re
 import shutil
 import tempfile
 import uuid
@@ -29,7 +30,7 @@ from ocr_spark.kernels.synth import url_for_doc, warc_ts_for_doc, wrap_html
 
 # Bump whenever ANY page-fixture generator (kernels.synth wrap_html_* or
 # the sources below) changes output bytes — the cache key includes it.
-_FIXTURE_VERSION = "r5-1"
+_FIXTURE_VERSION = "r5-2"
 
 
 def fixture_cache_base() -> str | None:
@@ -87,10 +88,10 @@ def _cached_pages(
     them to parquet and later calls scan that. Set
     ``SPARK_GRAFT_FIXTURE_CACHE=off`` to disable (every call regenerates).
 
-    The cached files are written from ``defaultParallelism`` partitions
-    but are small enough that a plain scan would coalesce to one split
-    (``maxPartitionBytes``) — re-fan-out with one explicit repartition so
-    downstream decode/extract uses every core."""
+    The cached files are written from ``defaultParallelism`` partitions,
+    one file each, and a plain scan reads them back as one split per file,
+    so downstream decode/extract fans out across every core with no
+    shuffle of the html blobs."""
     base = fixture_cache_base()
     if base is None:
         return build()
@@ -103,9 +104,7 @@ def _cached_pages(
         except OSError:
             # a concurrent session won the rename; its cache is equivalent
             shutil.rmtree(tmp, ignore_errors=True)
-    return spark.read.parquet(path).repartition(
-        spark.sparkContext.defaultParallelism
-    )
+    return spark.read.parquet(path)
 
 
 PAGES_SCHEMA = T.StructType(
@@ -119,7 +118,10 @@ PAGES_SCHEMA = T.StructType(
 )
 
 
-def _synth_batches(n_paragraphs: int):
+def _synth_batches(render: Callable[[int, str, str], bytes]):
+    """documents batches → pages batches; ``render(doc_id, text, url)``
+    writes each page's html."""
+
     def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             urls, tss, htmls = [], [], []
@@ -131,7 +133,7 @@ def _synth_batches(n_paragraphs: int):
                 tss.append(
                     pd.Timestamp(warc_ts_for_doc(int(doc_id)), unit="s")
                 )
-                htmls.append(wrap_html(text, url, n_paragraphs=n_paragraphs))
+                htmls.append(render(int(doc_id), text, url))
             yield pd.DataFrame(
                 {
                     "url": urls,
@@ -145,8 +147,8 @@ def _synth_batches(n_paragraphs: int):
     return fn
 
 
-def pages_from_documents(
-    spark: SparkSession, sf_dir: str, n_paragraphs: int = 1
+def _synth_pages(
+    spark: SparkSession, sf_dir: str, render: Callable[[int, str, str], bytes]
 ) -> DataFrame:
     """documents parquet → pages DataFrame of the mandated shape.
 
@@ -160,58 +162,49 @@ def pages_from_documents(
         "doc_id", "text", "lang", "source"
     )
     docs = docs.repartition(spark.sparkContext.defaultParallelism)
-    return docs.mapInPandas(_synth_batches(n_paragraphs), schema=PAGES_SCHEMA)
+    return docs.mapInPandas(_synth_batches(render), schema=PAGES_SCHEMA)
+
+
+def pages_from_documents(
+    spark: SparkSession, sf_dir: str, n_paragraphs: int = 1
+) -> DataFrame:
+    """documents parquet → pages whose article is the doc's text wrapped in
+    boilerplate chrome (``kernels.synth.wrap_html``)."""
+    return _synth_pages(
+        spark,
+        sf_dir,
+        lambda _doc_id, text, url: wrap_html(text, url, n_paragraphs=n_paragraphs),
+    )
+
+
+def _line_texts(doc_id: int, text: str) -> list[str]:
+    """The two embedded line texts of an image page: the doc's first 20
+    alphanumeric chars (alnum-only so every char is in CHAR_VECTOR —
+    render_line drops OOV chars, which would silently diverge from any SQL
+    reconstruction) and ``line<doc_id>``."""
+    return [re.sub(r"[^0-9a-zA-Z]", "", str(text))[:20], f"line{doc_id}"]
 
 
 def pages_with_images_from_documents(
     spark: SparkSession, sf_dir: str
 ) -> DataFrame:
-    """Pages whose article embeds two deterministic OCR text-line images:
-    the doc's first 20 alphanumeric chars (native 8-row strip; alnum-only
-    so every char is in CHAR_VECTOR — render_line drops OOV chars, which
-    would silently diverge from any SQL reconstruction), and
-    ``line<doc_id>`` rendered at 2× height — so the detect stage's
-    RoIRotate-analog resampling (``normalize_strip``) runs on real data.
-    Both decode to SQL-reconstructible text, keeping the full-pipeline
-    query oracle-checkable."""
-    import re as _re
-
+    """Pages whose article embeds two deterministic OCR text-line images
+    (``_line_texts``): the first as a native 8-row strip, ``line<doc_id>``
+    rendered at 2× height — so the detect stage's RoIRotate-analog
+    resampling (``normalize_strip``) runs on real data. Each line ships as
+    a lossless PNG; both decode to SQL-reconstructible text, keeping the
+    full-pipeline query oracle-checkable."""
     from ocr_spark.kernels.synth import wrap_html_with_images
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang", "source"
-    )
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, tss, htmls = [], [], []
-            for doc_id, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                url = url_for_doc(int(doc_id), str(source))
-                lines = [
-                    _re.sub(r"[^0-9a-zA-Z]", "", str(text))[:20],
-                    f"line{int(doc_id)}",
-                ]
-                urls.append(url)
-                tss.append(pd.Timestamp(warc_ts_for_doc(int(doc_id)), unit="s"))
-                htmls.append(
-                    wrap_html_with_images(text, url, lines, scales=[1, 2])
-                )
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": tss,
-                    "html": htmls,
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
 
     return _cached_pages(
         spark, sf_dir, "pages_images",
-        lambda: docs.mapInPandas(fn, schema=PAGES_SCHEMA),
+        lambda: _synth_pages(
+            spark,
+            sf_dir,
+            lambda doc_id, text, url: wrap_html_with_images(
+                text, url, _line_texts(doc_id, text), scales=[1, 2]
+            ),
+        ),
     )
 
 
@@ -223,46 +216,17 @@ def pages_with_noisy_font_images_from_documents(
     FONT atlas at 2× with seeded noise (``wrap_html_with_font_images``) —
     the strips that reach recognition are anti-aliased and noisy, so only
     the NCC recognizer decodes them. Output stays SQL-reconstructible."""
-    import re as _re
-
     from ocr_spark.kernels.synth import wrap_html_with_font_images
-
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
-        "doc_id", "text", "lang", "source"
-    )
-    docs = docs.repartition(spark.sparkContext.defaultParallelism)
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            urls, tss, htmls = [], [], []
-            for doc_id, text, source in zip(
-                pdf["doc_id"], pdf["text"], pdf["source"]
-            ):
-                url = url_for_doc(int(doc_id), str(source))
-                lines = [
-                    _re.sub(r"[^0-9a-zA-Z]", "", str(text))[:20],
-                    f"line{int(doc_id)}",
-                ]
-                urls.append(url)
-                tss.append(pd.Timestamp(warc_ts_for_doc(int(doc_id)), unit="s"))
-                htmls.append(
-                    wrap_html_with_font_images(
-                        text, url, lines, seed_base=int(doc_id)
-                    )
-                )
-            yield pd.DataFrame(
-                {
-                    "url": urls,
-                    "warc_ts": tss,
-                    "html": htmls,
-                    "text": pdf["text"],
-                    "lang": pdf["lang"],
-                }
-            )
 
     return _cached_pages(
         spark, sf_dir, "pages_noisy",
-        lambda: docs.mapInPandas(fn, schema=PAGES_SCHEMA),
+        lambda: _synth_pages(
+            spark,
+            sf_dir,
+            lambda doc_id, text, url: wrap_html_with_font_images(
+                text, url, _line_texts(doc_id, text), seed_base=doc_id
+            ),
+        ),
     )
 
 

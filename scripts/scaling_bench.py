@@ -45,6 +45,7 @@ MAKE_PAGES = r"""
 import sys
 replicate = int(sys.argv[1]); out_dir = sys.argv[2]
 from ocr_spark.session import get_spark
+from ocr_spark.kernels.synth import wrap_html
 from ocr_spark.sources.pages import _synth_batches, PAGES_SCHEMA
 import pyspark.sql.functions as F
 spark = get_spark("mkpages", master="local[32]", shuffle_partitions=32)
@@ -53,7 +54,8 @@ docs = spark.read.parquet("/root/testdata/sf0.1/documents.parquet")
 docs = (docs.withColumn("rep", F.explode(F.sequence(F.lit(0), F.lit(replicate - 1))))
         .withColumn("doc_id", F.col("doc_id") * replicate + F.col("rep")).drop("rep")
         .select("doc_id", "text", "lang", "source").repartition(64))
-pages = docs.mapInPandas(_synth_batches(1), schema=PAGES_SCHEMA)
+render = lambda _doc_id, text, url: wrap_html(text, url, n_paragraphs=1)
+pages = docs.mapInPandas(_synth_batches(render), schema=PAGES_SCHEMA)
 pages.write.mode("overwrite").parquet(out_dir)
 spark.stop()
 """

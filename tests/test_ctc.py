@@ -86,6 +86,17 @@ def test_batch_decode_matches_single():
     assert got == want
 
 
+def test_golden_logit_rows_decode_as_a_batch():
+    # hand-built golden rows of different lengths, padded to one [B, T, C]
+    # batch and cut back by seq_lens — the reference self-test shape
+    # (the reference's Module/RecognitionLoss.py:41-54)
+    a = 10
+    paths = [[1, 10], [a, a, BLANK_INDEX, a], [BLANK_INDEX] * 5]
+    batch = np.stack([_logits_for(p, T=5) for p in paths])
+    lens = np.array([len(p) for p in paths])
+    assert ctc_greedy_decode_batch(batch, lens) == ["1a", "aa", ""]
+
+
 def test_decode_skips_negative_fill():
     # -1 is the sparse→dense fill value (RecognitionLoss.py:37)
     assert decode_indices([10, -1, 11]) == "ab"

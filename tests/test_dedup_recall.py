@@ -13,7 +13,7 @@ from ocr_spark.operators.dedup import (
     keep_representatives,
     lsh_candidate_pairs,
     ngram_jaccard_pairs,
-    simhash_near_pairs,
+    simhash_band_pairs,
 )
 
 SF = "/root/testdata/sf0.001"
@@ -74,7 +74,7 @@ def test_jaccard_verifies_candidates(spark, planted):
 
 
 def test_simhash_separates_near_dups(spark, planted):
-    pairs = simhash_near_pairs(planted, max_hamming=12)
+    pairs = simhash_band_pairs(planted, n_bands=16, max_hamming=12)
     got = {(r.doc_id_a, r.doc_id_b) for r in pairs.collect()}
     planted_pairs = {(i, i + 10_000) for i in range(N_BASE)}
     recall = len(got & planted_pairs) / len(planted_pairs)

@@ -1,12 +1,10 @@
-"""OCR-branch Spark operators: strip recognition + golden-logits decode."""
+"""OCR-branch Spark operator: strip recognition."""
 
-import numpy as np
-import pyspark.sql.functions as F
+import pytest
 from pyspark.sql import types as T
 
-from ocr_spark.config import BLANK_INDEX, NUM_CLASSES
 from ocr_spark.kernels.ocr import render_line
-from ocr_spark.operators.extract_ocr import decode_logits, recognize_line_strips
+from ocr_spark.operators.extract_ocr import recognize_line_strips
 
 LINE_TEXTS = [
     "first-line!", "SECOND?", "", "aabbcc", "0123456789",
@@ -32,37 +30,6 @@ def test_recognize_line_strips_spark(spark):
     assert [r.text for r in got] == LINE_TEXTS
 
 
-def test_decode_golden_logits_spark(spark):
-    # hand-built logits — the reference self-test shape
-    # (/root/reference/Module/RecognitionLoss.py:41-54)
-    def logits_for(path):
-        lg = np.zeros((len(path), NUM_CLASSES), dtype=np.float32)
-        lg[:, BLANK_INDEX] = 0.5
-        for t, c in enumerate(path):
-            lg[t, c] = 2.0
-        return [[float(x) for x in row] for row in lg]
-
-    a = 10
-    rows = [
-        ("g://0", 0, logits_for([1, 10])),               # "1a"
-        ("g://1", 1, logits_for([a, a, BLANK_INDEX, a])),  # "aa"
-        ("g://2", 2, logits_for([BLANK_INDEX] * 5)),      # ""
-        ("g://3", 3, []),                                  # empty logits
-    ]
-    schema = T.StructType(
-        [
-            T.StructField("url", T.StringType()),
-            T.StructField("line_id", T.IntegerType()),
-            T.StructField("logits", T.ArrayType(T.ArrayType(T.FloatType()))),
-        ]
-    )
-    df = spark.createDataFrame(rows, schema)
-    got = decode_logits(df).sort("line_id").collect()
-    assert [r.text for r in got] == ["1a", "aa", "", ""]
-    # rows-only sanity on counts
-    assert decode_logits(df).count() == 4
-
-
 def test_recognition_is_batch_size_invariant(spark):
     rows = []
     for i, t in enumerate(LINE_TEXTS * 10):
@@ -73,3 +40,11 @@ def test_recognition_is_batch_size_invariant(spark):
     one = recognize_line_strips(df.coalesce(1)).sort("line_id").toPandas()
     four = recognize_line_strips(df.repartition(4)).sort("line_id").toPandas()
     assert one.text.tolist() == four.text.tolist()
+
+
+def test_unknown_recognizer_is_rejected(spark):
+    df = spark.createDataFrame(
+        [], "url string, line_id int, strip array<float>, width int"
+    )
+    with pytest.raises(ValueError, match="unknown recognizer"):
+        recognize_line_strips(df, recognizer="nope")

@@ -1,4 +1,4 @@
-"""Multimodal plumbing: feature extraction, resize, frame sampling."""
+"""Multimodal plumbing: feature extraction, frame sampling, audio windows."""
 
 from __future__ import annotations
 
@@ -6,7 +6,6 @@ import pyspark.sql.functions as F
 
 from ocr_spark.operators.multimodal import (
     extract_media_features,
-    resize_images,
     sample_frames,
     synth_media,
 )
@@ -17,16 +16,6 @@ def test_media_features_deterministic(spark):
     a = {r.media_id: (r.payload_crc, tuple(r.feature)) for r in extract_media_features(m).collect()}
     b = {r.media_id: (r.payload_crc, tuple(r.feature)) for r in extract_media_features(m).collect()}
     assert a == b and len(a) == 24
-
-
-def test_resize_images(spark):
-    m = synth_media(spark, 24)
-    out = resize_images(m, out_w=8, out_h=8)
-    rows = out.collect()
-    assert len(rows) == 8  # kind == image is every 3rd of 24
-    for r in rows:
-        assert r.width == 8 and r.height == 8 and len(r.pixels) == 64
-        assert all(0.0 <= p <= 1.0 for p in r.pixels)
 
 
 def test_sample_frames(spark):

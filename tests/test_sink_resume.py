@@ -11,7 +11,6 @@ from ocr_spark.config import HOST_HASH_BUCKETS, HOT_HOST_SALT
 from ocr_spark.sinks.partitioned import (
     extract_and_write,
     lineage_metrics,
-    pending_dates,
     with_partition_keys,
 )
 from ocr_spark.sources.pages import expected_from_documents, pages_from_documents
@@ -79,10 +78,6 @@ def test_partial_resume(spark, pages, tmp_path):
     # simulate a crash after the first date committed: run only date[0]
     first_day = pages.filter(F.to_date("warc_ts") == F.lit(dates[0]))
     extract_and_write(spark, first_day, out)
-
-    keyed = pages.withColumn("crawl_date", F.to_date("warc_ts"))
-    todo = pending_dates(spark, keyed, out)
-    assert dates[0] not in todo and set(todo) == set(dates[1:])
 
     # resume with the FULL input: only pending dates run; result complete
     r = extract_and_write(spark, pages, out)
