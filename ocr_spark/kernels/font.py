@@ -364,7 +364,12 @@ def render_distorted_line_multi(
 
 
 def font_line_logits(strips: np.ndarray) -> np.ndarray:
-    """Batched NCC forward pass: ``[B, 8, 384] → [B, 64, 95]`` logits.
+    """Batched NCC forward pass: ``[B, 8, 6·T] → [B, T, 95]`` logits.
+
+    ``recognize_lines_font`` passes its ``[B, 8, 384]`` strips cut to the
+    batch's longest line, so ``T`` is ``max(seq_lens)`` (at least 1), not
+    the 64 windows of a full-width strip; a caller passing whole strips
+    gets ``T = 64``.
 
     Stride-6 windowing is a reshape; per window the score of class c is
     the normalized cross-correlation with glyph c's template (gain/offset
@@ -529,8 +534,12 @@ def recognize_lines_font(
     is O(T·C·beam) Python per line — the context decoders are the
     degraded-input path, not a default tax on clean corpora.
     """
-    logits = font_line_logits(strips)
     seq_lens = np.asarray(widths, dtype=np.int64) // GLYPH_W
+    # every decoder reads only the first seq_len windows of a line: score
+    # no window past the batch's longest line (at least one, so an
+    # all-empty batch still has a [B, 1, 95] logits tensor)
+    n_win = max(int(seq_lens.max(initial=0)), 1)
+    logits = font_line_logits(np.asarray(strips)[..., : n_win * GLYPH_W])
     if decoder in ("beam", "beam_lm", "beam_bi"):
         from ocr_spark.kernels.ctc import (
             ctc_beam_decode_nbest,

@@ -179,6 +179,10 @@ class _Tokenizer(HTMLParser):
         super().__init__(convert_charrefs=True)
         self.records: list[dict] = []
         self._elems: list[_Elem] = []
+        # open-element count per tag: a close tag that matches no open
+        # element is rejected in O(1) instead of by a walk of _elems
+        # ("<div>"*n + "</span>"*n would otherwise cost O(n²))
+        self._open: dict[str, int] = {}
         self._blocks: list[_Block] = [_Block("body", 0, False, False)]
         self._drop_depth = 0
         self._neg_depth = 0
@@ -287,27 +291,23 @@ class _Tokenizer(HTMLParser):
         self._elems.append(
             _Elem(tag, neg_bump, content_bump, drop, is_block, is_a, is_pre)
         )
+        self._open[tag] = self._open.get(tag, 0) + 1
 
     def handle_startendtag(self, tag: str, attrs) -> None:
         self._count_childless(tag)
 
     def handle_endtag(self, tag: str) -> None:
-        if tag in _VOID_TAGS:
-            return
-        # find nearest matching open element (tolerates malformed nesting)
-        idx = None
-        for i in range(len(self._elems) - 1, -1, -1):
-            if self._elems[i].tag == tag:
-                idx = i
-                break
-        if idx is None:
-            return  # stray close tag
-        # pop everything above and including idx (implicitly-closed elems)
-        while len(self._elems) > idx:
+        if not self._open.get(tag):
+            return  # stray close tag (void tags are never opened)
+        # pop down to and including the nearest matching open element;
+        # the ones above it close implicitly (malformed nesting)
+        while self._elems[-1].tag != tag:
             self._pop_elem()
+        self._pop_elem()
 
     def _pop_elem(self) -> None:
         elem = self._elems.pop()
+        self._open[elem.tag] -= 1
         if elem.drop:
             self._drop_depth -= 1
         if elem.neg_bump:

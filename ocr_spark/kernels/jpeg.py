@@ -36,8 +36,9 @@ validated against the buffer, Huffman tables are structurally checked
 ``ValueError``.
 
 Everything batch-shaped is vectorized NumPy (DCT/IDCT/quantization run
-over all blocks at once via einsum); only the inherently sequential
-entropy coding walks bit-by-bit in Python.
+over all blocks at once: einsum for the forward DCT, a batched matmul for
+the IDCT); only the inherently sequential entropy coding runs in Python,
+one Huffman-LUT probe per symbol.
 """
 
 from __future__ import annotations
@@ -138,6 +139,7 @@ def _zigzag_order() -> np.ndarray:
 
 
 _ZZ = _zigzag_order()
+_UNZZ = np.argsort(_ZZ)  # natural index → zigzag position
 
 # orthonormal 8-point DCT-II matrix: C @ f @ C.T is exactly the T.81
 # forward DCT normalization (uniform block v → DC = 8·(v-128))
@@ -616,8 +618,8 @@ def _split_entropy(
     ``end``). ``rst_n`` is the 0–7 sequence number of the marker that
     TERMINATED the segment (``None`` for the final segment). Byte
     stuffing (FF 00 → FF) is removed here ONCE, C-speed via
-    ``bytes.find`` over the rare 0xFF positions, so the bit reader below
-    never has to scan for markers."""
+    ``bytes.find`` over the rare 0xFF positions, so the entropy decoders
+    below never have to scan for markers."""
     segs: list[tuple[bytes, int | None]] = []
     parts: list[bytes] = []
     i = pos
@@ -647,10 +649,11 @@ def _split_entropy(
     return segs, end
 
 
-class _EntropyReader:
-    """LUT-driven MSB-first bit reader over ONE destuffed entropy segment.
+def _windows(seg: bytes) -> tuple[list[int], int]:
+    """40-bit read windows over ONE destuffed entropy segment, plus its
+    length in bits.
 
-    ``w40[i]`` holds bytes ``i..i+4`` big-endian (a Python list of plain
+    ``w[i]`` holds bytes ``i..i+4`` big-endian (a Python list of plain
     ints — list indexing beats NumPy scalar boxing in the per-symbol
     loop), so ONE index serves both a 16-bit Huffman-LUT probe and the
     coefficient's extra bits: the worst case (7-bit byte offset + 16-bit
@@ -659,105 +662,76 @@ class _EntropyReader:
     ``(code_length << 8) | symbol``, 0 = invalid code) instead of a
     bit-serial walk. Entropy decode is the only inherently sequential part
     of JPEG — everything downstream (dequant/IDCT/upsample) is vectorized
-    NumPy — so it is the part that must not cost a dict probe per BIT."""
+    NumPy — so every scan kind decodes straight from these windows with a
+    local bit position ``p`` and bit count ``nb``: no per-symbol call."""
+    b = np.frombuffer(seg + b"\x00" * 5, np.uint8).astype(np.uint64)
+    w = (
+        (b[:-4] << 32) | (b[1:-3] << 24) | (b[2:-2] << 16)
+        | (b[3:-1] << 8) | b[4:]
+    ).tolist()
+    return w, 8 * len(seg)
 
-    __slots__ = ("w40", "pos", "nbits")
 
-    def __init__(self, seg: bytes) -> None:
-        b = np.frombuffer(seg + b"\x00" * 5, np.uint8).astype(np.uint64)
-        self.w40 = (
-            (b[:-4] << 32) | (b[1:-3] << 24) | (b[2:-2] << 16)
-            | (b[3:-1] << 8) | b[4:]
-        ).tolist()
-        self.pos = 0
-        self.nbits = 8 * len(seg)
+def _next_segment(segs, seg_idx, p, nb):
+    """Cross the RSTn marker that ends segment ``seg_idx``: check its
+    sequence number (RST0..7 cycle with the segment index) and that the
+    segment's data was not overrun, then return the next segment's
+    ``_windows``."""
+    rst_n = segs[seg_idx][1]
+    if rst_n is None:
+        raise ValueError("missing restart marker")
+    if rst_n != (seg_idx & 7):
+        raise ValueError("restart marker out of sequence")
+    if p > nb:
+        raise ValueError("truncated entropy-coded data")
+    # _split_entropy guarantees a segment after every RSTn
+    return _windows(segs[seg_idx + 1][0])
 
-    def huff(self, lut: list[int]) -> int:
-        """Decode one Huffman symbol (progressive scans; the baseline hot
-        path uses the fused ``decode_block`` instead)."""
-        p = self.pos
-        if p >= self.nbits:
-            raise ValueError("truncated entropy-coded data")
-        v = lut[(self.w40[p >> 3] >> (24 - (p & 7))) & 0xFFFF]
-        if v == 0:
-            raise ValueError("invalid Huffman code")
-        self.pos = p + (v >> 8)
-        return v & 0xFF
 
-    def receive(self, n: int) -> int:
-        """Read ``n`` (≤ 16) raw MSB-first bits."""
-        if n == 0:
-            return 0
-        p = self.pos
-        if p >= self.nbits:
-            raise ValueError("truncated entropy-coded data")
-        self.pos = p + n
-        return (self.w40[p >> 3] >> (40 - (p & 7) - n)) & ((1 << n) - 1)
-
-    def decode_block(
-        self,
-        dc_lut: list[int],
-        ac_lut: list[int],
-        pred: int,
-        ks: list[int],
-        vals: list[int],
-        base_k: int,
-    ) -> int:
-        """Decode ONE 8×8 block. Nonzero coefficients are appended to
-        ``ks``/``vals`` as (``base_k`` + zigzag index, value) for a single
-        vectorized scatter per component after the MCU loop — no per-
-        coefficient NumPy writes. Returns the updated DC predictor."""
-        w = self.w40
-        p = self.pos
-        nb = self.nbits
+def _decode_block(w, p, nb, dc_lut, ac_lut, pred, coefs, base):
+    """Decode ONE baseline 8×8 block at bit ``p`` into
+    ``coefs[base : base + 64]`` (zigzag order). Returns ``(p, pred)``."""
+    if p >= nb:
+        raise ValueError("truncated entropy-coded data")
+    win = w[p >> 3]
+    o = p & 7
+    v = dc_lut[(win >> (24 - o)) & 0xFFFF]
+    if v == 0:
+        raise ValueError("invalid Huffman code")
+    t = v & 0xFF
+    if t > 11:
+        raise ValueError("invalid DC category")
+    ln = v >> 8
+    if t:
+        extra = (win >> (40 - o - ln - t)) & ((1 << t) - 1)
+        pred += extra if extra >= (1 << (t - 1)) else extra - (1 << t) + 1
+    p += ln + t
+    coefs[base] = pred
+    k = base + 1
+    end = base + 63
+    while k <= end:
         if p >= nb:
             raise ValueError("truncated entropy-coded data")
         win = w[p >> 3]
-        o = p & 7
-        v = dc_lut[(win >> (24 - o)) & 0xFFFF]
+        v = ac_lut[(win >> (24 - (p & 7))) & 0xFFFF]
         if v == 0:
             raise ValueError("invalid Huffman code")
-        t = v & 0xFF
-        if t > 11:
-            raise ValueError("invalid DC category")
         ln = v >> 8
-        if t:
-            extra = (win >> (40 - o - ln - t)) & ((1 << t) - 1)
-            pred += extra if extra >= (1 << (t - 1)) else extra - (1 << t) + 1
-        p += ln + t
-        if pred:
-            ks.append(base_k)
-            vals.append(pred)
-        k = 1
-        while k < 64:
-            if p >= nb:
-                raise ValueError("truncated entropy-coded data")
-            win = w[p >> 3]
-            o = p & 7
-            v = ac_lut[(win >> (24 - o)) & 0xFFFF]
-            if v == 0:
-                raise ValueError("invalid Huffman code")
-            ln = v >> 8
-            rs = v & 0xFF
-            s = rs & 15
-            if s == 0:
-                p += ln
-                if rs == 0xF0:  # ZRL: 16 zeros
-                    k += 16
-                    continue
-                break  # EOB
-            k += rs >> 4
-            if k > 63:
-                raise ValueError("AC run past block end")
-            extra = (win >> (40 - o - ln - s)) & ((1 << s) - 1)
-            p += ln + s
-            ks.append(base_k + k)
-            vals.append(
-                extra if extra >= (1 << (s - 1)) else extra - (1 << s) + 1
-            )
-            k += 1
-        self.pos = p
-        return pred
+        s = v & 15
+        if s == 0:
+            p += ln
+            if (v & 0xFF) == 0xF0:  # ZRL: 16 zeros
+                k += 16
+                continue
+            break  # EOB
+        k += (v >> 4) & 15
+        if k > end:
+            raise ValueError("AC run past block end")
+        extra = (win >> (40 - (p & 7) - ln - s)) & ((1 << s) - 1)
+        p += ln + s
+        coefs[k] = extra if extra >= (1 << (s - 1)) else extra - (1 << s) + 1
+        k += 1
+    return p, pred
 
 
 def jpeg_dims(data: bytes) -> tuple[int, int, int]:
@@ -825,33 +799,32 @@ def ensure_huffman_tables(data: bytes) -> bytes:
     return data
 
 
-def _extend(v: int, cat: int) -> int:
-    """T.81 EXTEND: map ``cat`` received magnitude bits to a signed
-    coefficient value."""
-    if cat == 0:
-        return 0
-    return v if v >= (1 << (cat - 1)) else v - (1 << cat) + 1
-
-
 def _alloc_blocks(frame):
-    """Per-component zigzag coefficient store on the MCU-padded grid."""
+    """Per-component zigzag coefficient store on the MCU-padded grid: 64
+    int64 slots per block in one flat ``np.zeros`` buffer (calloc'd, so
+    pages stay uncommitted until a block is written — a tiny file that
+    declares a huge raster and then fails entropy decode costs almost no
+    memory). Entropy decode reads and writes plain ints through a
+    ``memoryview`` of it; the finalizer views it as an ``[n_blocks, 64]``
+    int64 array without a copy."""
     h, w, comps = frame
     hmax = max(c[1] for c in comps)
     vmax = max(c[2] for c in comps)
     mcus_x = -(-w // (8 * hmax))
     mcus_y = -(-h // (8 * vmax))
-    comp_blocks: list[np.ndarray] = []
+    comp_coefs: list[memoryview] = []
     comp_bw: list[int] = []
     for _cid, hs, vs, _tq in comps:
         bw, bh = mcus_x * hs, mcus_y * vs
-        comp_blocks.append(np.zeros((bh * bw, 64), dtype=np.int64))
+        z = np.zeros(64 * bh * bw, dtype=np.int64)
+        comp_coefs.append(memoryview(z).cast("B").cast("q"))
         comp_bw.append(bw)
-    return comp_blocks, comp_bw, mcus_x, mcus_y
+    return comp_coefs, comp_bw, mcus_x, mcus_y
 
 
 def _decode_baseline_scan(
     data, seg_end, body, comps, huff, restart_interval,
-    comp_blocks, comp_bw, mcus_x, mcus_y,
+    comp_coefs, comp_bw, mcus_x, mcus_y,
 ):
     """The single interleaved scan of a baseline/extended-sequential
     image: every component's full spectrum, MCU order."""
@@ -878,61 +851,78 @@ def _decode_baseline_scan(
 
     segs, _end = _split_entropy(data, seg_end)
     seg_idx = 0
-    reader = _EntropyReader(segs[0][0])
+    w, nb = _windows(segs[0][0])
+    p = 0
     preds = [0] * len(comps)
-    comp_ks: list[list[int]] = [[] for _ in comps]
-    comp_vals: list[list[int]] = [[] for _ in comps]
     rst_count = 0
-    n_rst = 0
     for my in range(mcus_y):
         for mx in range(mcus_x):
             if restart_interval and rst_count == restart_interval:
-                rst_n = segs[seg_idx][1]
-                if rst_n is None:
-                    raise ValueError("missing restart marker")
-                if rst_n != (n_rst & 7):
-                    raise ValueError("restart marker out of sequence")
-                if reader.pos > reader.nbits:
-                    raise ValueError("truncated entropy-coded data")
-                seg_idx += 1  # _split_entropy guarantees a following seg
-                reader = _EntropyReader(segs[seg_idx][0])
-                n_rst = (n_rst + 1) & 7
+                w, nb = _next_segment(segs, seg_idx, p, nb)
+                seg_idx += 1
+                p = 0
                 preds = [0] * len(comps)
                 rst_count = 0
             rst_count += 1
             for ci, (_cid, hs, vs, _tq) in enumerate(comps):
                 dc_tab, ac_tab = comp_tabs[ci]
-                ks = comp_ks[ci]
-                vals = comp_vals[ci]
+                coefs = comp_coefs[ci]
                 bw = comp_bw[ci]
                 for by in range(vs):
                     base = ((my * vs + by) * bw + mx * hs) * 64
                     for bx in range(hs):
-                        preds[ci] = reader.decode_block(
-                            dc_tab, ac_tab, preds[ci], ks, vals, base + 64 * bx
+                        p, preds[ci] = _decode_block(
+                            w, p, nb, dc_tab, ac_tab, preds[ci], coefs,
+                            base + 64 * bx,
                         )
-    if reader.pos > reader.nbits:
+    if p > nb:
         raise ValueError("truncated entropy-coded data")
-    for ci in range(len(comps)):
-        if comp_ks[ci]:
-            comp_blocks[ci].reshape(-1)[
-                np.asarray(comp_ks[ci], dtype=np.int64)
-            ] = np.asarray(comp_vals[ci], dtype=np.int64)
+
+
+def _scan_units(frame, scan_comps, comp_bw, mcus_x, mcus_y):
+    """Restart units of one progressive scan, each a list of
+    ``(scan index, component index, coefficient offset)``: one MCU
+    (interleaved) or one block (non-interleaved, the component's own
+    ceil(dim/8) grid — NOT the MCU-padded grid, T.81 A.2.2)."""
+    h, w, comps = frame
+    if len(scan_comps) > 1:
+        for my in range(mcus_y):
+            for mx in range(mcus_x):
+                unit = []
+                for si, (ci, _td, _ta) in enumerate(scan_comps):
+                    _cid, hs, vs, _tq = comps[ci]
+                    bw = comp_bw[ci]
+                    for by in range(vs):
+                        row = (my * vs + by) * bw + mx * hs
+                        for bx in range(hs):
+                            unit.append((si, ci, 64 * (row + bx)))
+                yield unit
+        return
+    ci = scan_comps[0][0]
+    _cid, hs, vs, _tq = comps[ci]
+    hmax = max(c[1] for c in comps)
+    vmax = max(c[2] for c in comps)
+    cw = -(-(w * hs) // hmax)  # component px dims, T.81 A.1.1
+    ch = -(-(h * vs) // vmax)
+    bw = comp_bw[ci]
+    for by in range(-(-ch // 8)):
+        for bx in range(-(-cw // 8)):
+            yield [(0, ci, 64 * (by * bw + bx))]
 
 
 def _decode_progressive_scan(
     data, seg_end, body, frame, huff, restart_interval,
-    comp_blocks, comp_bw, mcus_x, mcus_y,
+    comp_coefs, comp_bw, mcus_x, mcus_y,
 ):
     """ONE progressive (SOF2) scan: DC first / DC refinement (optionally
     interleaved) or AC first / AC refinement (single-component, spectral
     band Ss..Se, successive-approximation shift Al). Coefficients
-    accumulate across scans into ``comp_blocks`` at FULL precision; the
+    accumulate across scans into ``comp_coefs`` at FULL precision; the
     shared dequant/IDCT finalizer runs once at EOI. EOB-run coding
     (T.81 G.1.2.2) and the correction-bit protocol (G.1.2.3) follow the
     spec exactly. Returns the buffer offset of the scan-terminating
     marker so the caller resumes marker parsing there."""
-    h, w, comps = frame
+    comps = frame[2]
     if len(body) < 1:
         raise ValueError("truncated SOS header")
     ns = body[0]
@@ -958,8 +948,6 @@ def _decode_progressive_scan(
         raise ValueError("progressive AC scan must be non-interleaved")
     if ns not in (1, len(comps)):
         raise ValueError("unsupported progressive scan interleaving")
-    hmax = max(c[1] for c in comps)
-    vmax = max(c[2] for c in comps)
     dc_scan = ss == 0
     refine = ah != 0
     p1 = 1 << al
@@ -976,162 +964,189 @@ def _decode_progressive_scan(
         luts.append(lut)
 
     segs, end = _split_entropy(data, seg_end)
-    state = {
-        "seg_idx": 0,
-        "reader": _EntropyReader(segs[0][0]),
-        "preds": [0] * len(comps),
-        "eobrun": 0,
-        "rst_count": 0,
-        "n_rst": 0,
-    }
-
-    def restart_boundary():
-        rst_n = segs[state["seg_idx"]][1]
-        if rst_n is None:
-            raise ValueError("missing restart marker")
-        if rst_n != (state["n_rst"] & 7):
-            raise ValueError("restart marker out of sequence")
-        if state["reader"].pos > state["reader"].nbits:
-            raise ValueError("truncated entropy-coded data")
-        state["seg_idx"] += 1
-        state["reader"] = _EntropyReader(segs[state["seg_idx"]][0])
-        state["n_rst"] = (state["n_rst"] + 1) & 7
-        state["preds"] = [0] * len(comps)
-        state["eobrun"] = 0
-        state["rst_count"] = 0
-
-    def units():
-        """Restart units: one MCU (interleaved) or one block
-        (non-interleaved, the component's own ceil(dim/8) grid — NOT the
-        MCU-padded grid, T.81 A.2.2)."""
-        if ns > 1:
-            for my in range(mcus_y):
-                for mx in range(mcus_x):
-                    out = []
-                    for si, (ci, _td, _ta) in enumerate(scan_comps):
-                        _cid, hs, vs, _tq = comps[ci]
-                        bw = comp_bw[ci]
-                        for by in range(vs):
-                            for bx in range(hs):
-                                out.append(
-                                    (si, ci,
-                                     (my * vs + by) * bw + mx * hs + bx)
-                                )
-                    yield out
-        else:
-            si, (ci, _td, _ta) = 0, scan_comps[0]
-            _cid, hs, vs, _tq = comps[ci]
-            cw = -(-(w * hs) // hmax)  # component px dims, T.81 A.1.1
-            ch = -(-(h * vs) // vmax)
-            bw_eff = -(-cw // 8)
-            bh_eff = -(-ch // 8)
-            bw = comp_bw[ci]
-            for by in range(bh_eff):
-                for bx in range(bw_eff):
-                    yield [(si, ci, by * bw + bx)]
-
-    for unit in units():
-        if restart_interval and state["rst_count"] == restart_interval:
-            restart_boundary()
-        state["rst_count"] += 1
-        reader = state["reader"]
-        for si, ci, idx in unit:
-            blk = comp_blocks[ci][idx]
-            if dc_scan:
+    seg_idx = 0
+    w, nb = _windows(segs[0][0])
+    p = 0
+    preds = [0] * len(comps)
+    eobrun = 0
+    rst_count = 0
+    for unit in _scan_units(frame, scan_comps, comp_bw, mcus_x, mcus_y):
+        if restart_interval and rst_count == restart_interval:
+            w, nb = _next_segment(segs, seg_idx, p, nb)
+            seg_idx += 1
+            p = 0
+            preds = [0] * len(comps)
+            eobrun = 0
+            rst_count = 0
+        rst_count += 1
+        for si, ci, base in unit:
+            coefs = comp_coefs[ci]
+            if not dc_scan:
                 if refine:
-                    if reader.receive(1):
-                        blk[0] = int(blk[0]) | p1
+                    p, eobrun = _ac_refine_block(
+                        w, p, nb, coefs, base + ss, base + se, p1,
+                        luts[si], eobrun,
+                    )
                 else:
-                    t = reader.huff(luts[si])
-                    if t > 11:
-                        raise ValueError("invalid DC category")
-                    state["preds"][ci] += _extend(reader.receive(t), t)
-                    blk[0] = state["preds"][ci] << al
-            elif not refine:
-                state["eobrun"] = _ac_first_block(
-                    reader, blk, ss, se, al, luts[si], state["eobrun"]
-                )
+                    p, eobrun = _ac_first_block(
+                        w, p, nb, coefs, base + ss, base + se, al,
+                        luts[si], eobrun,
+                    )
+            elif refine:
+                if p >= nb:
+                    raise ValueError("truncated entropy-coded data")
+                if (w[p >> 3] >> (39 - (p & 7))) & 1:
+                    coefs[base] |= p1
+                p += 1
             else:
-                state["eobrun"] = _ac_refine_block(
-                    reader, blk, ss, se, p1, luts[si], state["eobrun"]
-                )
-    if state["reader"].pos > state["reader"].nbits:
+                if p >= nb:
+                    raise ValueError("truncated entropy-coded data")
+                win = w[p >> 3]
+                o = p & 7
+                v = luts[si][(win >> (24 - o)) & 0xFFFF]
+                if v == 0:
+                    raise ValueError("invalid Huffman code")
+                t = v & 0xFF
+                ln = v >> 8
+                p += ln
+                if t > 11:
+                    raise ValueError("invalid DC category")
+                if t:
+                    if p >= nb:
+                        raise ValueError("truncated entropy-coded data")
+                    extra = (win >> (40 - o - ln - t)) & ((1 << t) - 1)
+                    p += t
+                    preds[ci] += (
+                        extra if extra >= (1 << (t - 1))
+                        else extra - (1 << t) + 1
+                    )
+                coefs[base] = preds[ci] << al
+    if p > nb:
         raise ValueError("truncated entropy-coded data")
     return end
 
 
-def _ac_first_block(reader, blk, ss, se, al, ac_lut, eobrun):
-    """AC first scan (Ah=0) for one block; returns the updated EOB run."""
+def _ac_first_block(w, p, nb, coefs, k, end, al, ac_lut, eobrun):
+    """AC first scan (Ah=0) for one block: band ``coefs[k : end + 1]``,
+    bit position ``p``. Returns ``(p, eobrun)``."""
     if eobrun:
-        return eobrun - 1
-    k = ss
-    while k <= se:
-        rs = reader.huff(ac_lut)
-        r, s = rs >> 4, rs & 15
+        return p, eobrun - 1
+    while k <= end:
+        if p >= nb:
+            raise ValueError("truncated entropy-coded data")
+        win = w[p >> 3]
+        o = p & 7
+        v = ac_lut[(win >> (24 - o)) & 0xFFFF]
+        if v == 0:
+            raise ValueError("invalid Huffman code")
+        r = (v >> 4) & 15
+        ln = v >> 8
+        s = v & 15
+        p += ln
         if s == 0:
             if r == 15:  # ZRL
                 k += 16
                 continue
             # EOBn: run of (1<<r)+receive(r) blocks ending here, this
             # block included
-            return (1 << r) - 1 + (reader.receive(r) if r else 0)
+            if not r:
+                return p, 0
+            if p >= nb:
+                raise ValueError("truncated entropy-coded data")
+            return p + r, (1 << r) - 1 + (
+                (win >> (40 - o - ln - r)) & ((1 << r) - 1)
+            )
         k += r
-        if k > se:
+        if k > end:
             raise ValueError("AC run past spectral band")
-        extra = reader.receive(s)
-        blk[k] = (
+        if p >= nb:
+            raise ValueError("truncated entropy-coded data")
+        extra = (win >> (40 - o - ln - s)) & ((1 << s) - 1)
+        p += s
+        coefs[k] = (
             extra if extra >= (1 << (s - 1)) else extra - (1 << s) + 1
         ) << al
         k += 1
-    return 0
+    return p, 0
 
 
-def _ac_refine_block(reader, blk, ss, se, p1, ac_lut, eobrun):
+def _ac_refine_block(w, p, nb, coefs, k, end, p1, ac_lut, eobrun):
     """AC refinement scan (Ah>0) for one block — T.81 G.1.2.3: newly
     significant coefficients arrive as run/1 symbols + sign; coefficients
     already nonzero receive one correction bit each as the run advances
-    (and through the EOB region). Returns the updated EOB run."""
+    (and through the EOB region). Band ``coefs[k : end + 1]``, bit
+    position ``p``. Returns ``(p, eobrun)``."""
     m1 = -p1
-    lst = blk.tolist()
-    k = ss
     if eobrun == 0:
-        while k <= se:
-            rs = reader.huff(ac_lut)
-            r, s = rs >> 4, rs & 15
+        while k <= end:
+            if p >= nb:
+                raise ValueError("truncated entropy-coded data")
+            win = w[p >> 3]
+            o = p & 7
+            v = ac_lut[(win >> (24 - o)) & 0xFFFF]
+            if v == 0:
+                raise ValueError("invalid Huffman code")
+            p += v >> 8
+            r = (v >> 4) & 15
+            s = v & 15
             newval = 0
             if s:
                 if s != 1:
                     raise ValueError("invalid AC refinement magnitude")
-                newval = p1 if reader.receive(1) else m1
-            elif r != 15:
-                eobrun = (1 << r) + (reader.receive(r) if r else 0)
+                if p >= nb:
+                    raise ValueError("truncated entropy-coded data")
+                newval = p1 if (w[p >> 3] >> (39 - (p & 7))) & 1 else m1
+                p += 1
+            elif r != 15:  # EOBn: this block and (1<<r)-1+receive(r) more
+                eobrun = 1 << r
+                if r:
+                    if p >= nb:
+                        raise ValueError("truncated entropy-coded data")
+                    win = w[p >> 3]
+                    eobrun += (win >> (40 - (p & 7) - r)) & ((1 << r) - 1)
+                    p += r
                 break
             # advance past r zero-history coefficients (16 for ZRL),
             # emitting a correction bit at every nonzero-history one
-            while k <= se:
-                c = lst[k]
+            while k <= end:
+                c = coefs[k]
                 if c:
-                    if reader.receive(1) and (c & p1) == 0:
-                        lst[k] = c + (p1 if c >= 0 else m1)
+                    if p >= nb:
+                        raise ValueError("truncated entropy-coded data")
+                    bit = (w[p >> 3] >> (39 - (p & 7))) & 1
+                    p += 1
+                    if bit and (c & p1) == 0:
+                        coefs[k] = c + (p1 if c >= 0 else m1)
                 else:
                     if r == 0:
                         break
                     r -= 1
                 k += 1
-            if newval and k <= se:
-                lst[k] = newval
+            if newval and k <= end:
+                coefs[k] = newval
             k += 1
     if eobrun:
         # EOB region covers the rest of this block: correction bits only
-        while k <= se:
-            c = lst[k]
+        while k <= end:
+            c = coefs[k]
             if c:
-                if reader.receive(1) and (c & p1) == 0:
-                    lst[k] = c + (p1 if c >= 0 else m1)
+                if p >= nb:
+                    raise ValueError("truncated entropy-coded data")
+                bit = (w[p >> 3] >> (39 - (p & 7))) & 1
+                p += 1
+                if bit and (c & p1) == 0:
+                    coefs[k] = c + (p1 if c >= 0 else m1)
             k += 1
         eobrun -= 1
-    blk[:] = lst
-    return eobrun
+    return p, eobrun
+
+
+def _idct_blocks(coeffs: np.ndarray) -> np.ndarray:
+    """Dequantized natural-order blocks ``[n, 8, 8]`` → level-shifted
+    uint8 samples ``[n, 8, 8]``: the 2-D IDCT ``C.T @ X @ C`` as one
+    batched matmul (the inverse of the encoder's orthonormal DCT)."""
+    pix = _DCT.T @ coeffs.astype(np.float64) @ _DCT
+    return np.clip(np.round(pix + 128.0), 0, 255).astype(np.uint8)
 
 
 # hostile-input bound: real progressive encoders emit ~10 scans; cap far
@@ -1149,7 +1164,7 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     restart_interval = 0
     frame = None  # (h, w, comps) with comps = [(id, hs, vs, tq)]
     progressive = False
-    comp_blocks = None
+    comp_coefs = None
     comp_bw: list[int] = []
     mcus_x = mcus_y = 0
     scans_done = 0
@@ -1249,21 +1264,21 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 raise ValueError("SOS before SOF")
             if not body or len(body) < 1 + 2 * body[0] + 3:
                 raise ValueError("truncated SOS header")
-            if comp_blocks is None:
-                comp_blocks, comp_bw, mcus_x, mcus_y = _alloc_blocks(frame)
+            if comp_coefs is None:
+                comp_coefs, comp_bw, mcus_x, mcus_y = _alloc_blocks(frame)
             if progressive:
                 scans_done += 1
                 if scans_done > MAX_PROGRESSIVE_SCANS:
                     raise ValueError("too many progressive scans")
                 pos = _decode_progressive_scan(
                     data, seg_end, body, frame, huff, restart_interval,
-                    comp_blocks, comp_bw, mcus_x, mcus_y,
+                    comp_coefs, comp_bw, mcus_x, mcus_y,
                 )
                 continue
             h, w, comps = frame
             _decode_baseline_scan(
                 data, seg_end, body, comps, huff, restart_interval,
-                comp_blocks, comp_bw, mcus_x, mcus_y,
+                comp_coefs, comp_bw, mcus_x, mcus_y,
             )
             break  # sequential: one scan is the whole image
         # APPn / COM / anything else: skip
@@ -1278,11 +1293,8 @@ def decode_jpeg(data: bytes) -> np.ndarray:
     for ci, (cid, hs, vs, tq) in enumerate(comps):
         if tq not in qtabs:
             raise ValueError("component references undefined DQT")
-        zz = comp_blocks[ci]
-        nat = np.zeros_like(zz)
-        nat[:, _ZZ] = zz
-        coeffs = (nat * qtabs[tq]).reshape(-1, 8, 8).astype(np.float64)
-        pix = np.einsum("xu,nuv,yv->nxy", _DCT.T, coeffs, _DCT.T)
+        zz = np.frombuffer(comp_coefs[ci], np.int64).reshape(-1, 64)
+        pix = _idct_blocks((zz[:, _UNZZ] * qtabs[tq]).reshape(-1, 8, 8))
         bw = comp_bw[ci]
         bh = len(zz) // bw
         plane = (
@@ -1290,7 +1302,6 @@ def decode_jpeg(data: bytes) -> np.ndarray:
             .transpose(0, 2, 1, 3)
             .reshape(bh * 8, bw * 8)
         )
-        plane = np.clip(np.round(plane + 128.0), 0, 255).astype(np.uint8)
         # replication upsample to full MCU-grid resolution, then crop
         if hs < hmax:
             plane = np.repeat(plane, hmax // hs, axis=1)

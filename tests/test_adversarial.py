@@ -4,12 +4,24 @@ crashes, deterministic output, pathological structures bounded."""
 from __future__ import annotations
 
 import datetime
+import gc
+import math
+import os
+import statistics
+import subprocess
+import sys
+import time
+from pathlib import Path
 
+import numpy as np
 import pyspark.sql.functions as F
+import pytest
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from ocr_spark.kernels.html import tokenize_html
+from ocr_spark.kernels.jpeg import decode_jpeg, encode_jpeg
 from ocr_spark.operators.extract_html import extract_pages
 from ocr_spark.sources.pages import PAGES_SCHEMA
 
@@ -173,3 +185,112 @@ def test_fuzz_extract_main_text_unicode_soup(fragment):
     html = f"<body><main><article><p>{fragment}</p></article></main></body>"
     text, spans, n_blocks = extract_main_text(html.encode("utf-8"))
     assert isinstance(text, str)
+
+
+# ---------------------------------------------------------------------------
+# Hostile scaling: 4× the input must cost under 6× the time
+# ---------------------------------------------------------------------------
+
+
+def _seconds(fn, arg, calls):
+    gc.collect()
+    gc.disable()
+    try:
+        t0 = time.perf_counter()
+        for _ in range(calls):
+            fn(arg)
+        return time.perf_counter() - t0
+    finally:
+        gc.enable()
+
+
+def _assert_near_linear(fn, small, large, reps=7, min_sample_s=0.05):
+    """``large`` is 4× ``small``; the wall-clock time must grow under 6×
+    (a quadratic path grows ~16×). Each sample repeats the call until the
+    small input takes at least ``min_sample_s``, so a sample spans many
+    timer ticks and a short scheduler stall is a small share of it. Small
+    and large samples alternate, and the test takes the median of the
+    ``reps`` ratios of adjacent pairs: adjacent samples share the host's
+    load at that moment, so a burst of load on a shared host moves one
+    ratio, not the median. The cyclic collector is off while timing: its
+    full passes scale with every live object in the test process, not
+    with the input under test."""
+    fn(small)  # warm per-process caches (Huffman LUTs, regexes)
+    t0 = time.perf_counter()
+    fn(small)
+    calls = max(1, math.ceil(min_sample_s / (time.perf_counter() - t0)))
+    ratios = []
+    for _ in range(reps):
+        t_small = _seconds(fn, small, calls)
+        ratios.append(_seconds(fn, large, calls) / t_small)
+    assert statistics.median(ratios) < 6, (calls, sorted(ratios))
+
+
+@pytest.mark.parametrize("fast", [True, False])
+def test_stray_close_tags_over_deep_stack_scale_linearly(fast):
+    """Every close tag that matches no open element is rejected without
+    walking the open-element stack."""
+
+    def page(n):
+        return ("<body>" + "<div>" * n + "x" + "</span>" * n + "</body>").encode()
+
+    _assert_near_linear(
+        lambda html: tokenize_html(html, fast=fast), page(2000), page(8000)
+    )
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+def test_jpeg_noise_decode_scales_linearly(progressive):
+    """Noise rasters keep nearly every coefficient nonzero, the most
+    entropy-decode work per pixel; 4× the pixels is 4× the blocks."""
+    rng = np.random.default_rng(5)
+
+    def noise_jpeg(h, w):
+        img = rng.integers(0, 256, (h, w), dtype=np.uint8)
+        return encode_jpeg(img, quality=90, progressive=progressive)
+
+    _assert_near_linear(decode_jpeg, noise_jpeg(48, 96), noise_jpeg(96, 192))
+
+
+_HUGE_HEADER_CHILD = r"""
+import resource, sys, time
+import numpy as np
+from ocr_spark.kernels.jpeg import decode_jpeg, encode_jpeg
+
+small = encode_jpeg(np.full((16, 16), 99, np.uint8), progressive=sys.argv[1] == "1")
+decode_jpeg(small)  # warm imports and the Huffman LUT cache
+sof = max(small.find(b"\xff\xc0"), small.find(b"\xff\xc2"))
+data = bytearray(small)
+data[sof + 5 : sof + 9] = (7744).to_bytes(2, "big") * 2  # 59.97 MP
+before = resource.getrusage(resource.RUSAGE_SELF).ru_maxrss
+t0 = time.perf_counter()
+try:
+    decode_jpeg(bytes(data))
+except ValueError as e:
+    err = str(e)
+else:
+    err = None
+dt = time.perf_counter() - t0
+grew_mb = (resource.getrusage(resource.RUSAGE_SELF).ru_maxrss - before) / 1024
+print(repr(err), dt, grew_mb)
+"""
+
+
+@pytest.mark.parametrize("progressive", [False, True])
+def test_huge_declared_jpeg_with_short_entropy_data_fails_cheaply(progressive):
+    """A few hundred bytes that declare a ~60 MP raster (just under
+    MAX_DECODE_PIXELS) and carry one block of entropy data must raise
+    fast, without committing the declared coefficient store (~480 MB of
+    int64 slots): pages the decoder never writes stay untouched. Run in a
+    child process so the peak-RSS reading is this decode's alone."""
+    root = Path(__file__).resolve().parents[1]
+    env = dict(os.environ, PYTHONPATH=str(root))
+    out = subprocess.run(
+        [sys.executable, "-c", _HUGE_HEADER_CHILD, str(int(progressive))],
+        capture_output=True, text=True, timeout=120, cwd=root, env=env,
+    )
+    assert out.returncode == 0, out.stderr[-1500:]
+    err, dt, grew_mb = out.stdout.strip().rsplit(" ", 2)
+    assert err == "'truncated entropy-coded data'", out.stdout
+    assert float(dt) < 2.0, out.stdout
+    assert float(grew_mb) < 64, out.stdout

@@ -342,3 +342,44 @@ def test_backward_prior_shape_and_semantics():
     i8 = CHAR_VECTOR.index("8")
     iB = CHAR_VECTOR.index("B")
     assert bwd[i5, i8] > bwd[i5, iB]  # next digit: prev digit beats upper
+
+
+@pytest.mark.parametrize("decoder", ["greedy", "beam_bi"])
+def test_window_trim_matches_per_strip_and_full_width_decode(decoder):
+    """The batch is scored only up to its longest line. A mixed batch —
+    one long line, several short ones, a width-0 slot — must decode each
+    strip exactly as that strip recognized alone (``font`` is the greedy
+    decoder, ``font_beam_bi`` the bidirectional one), and the greedy
+    texts must equal a CTC decode of full-width 64-window logits."""
+    from ocr_spark.kernels.ctc import ctc_greedy_decode_batch
+    from ocr_spark.kernels.font import GLYPH_W, font_line_logits
+
+    texts = ["LongLineOfText0123456789abcdefghijKLMN", "ab", "Q7", "xyz12"]
+    strips, widths = [], []
+    for i, t in enumerate(texts):
+        s, w = render_distorted_line(t, scale=2.0, sigma=0.1, seed=i)
+        strips.append(s)
+        widths.append(w)
+    strips.append(np.zeros_like(strips[0]))  # detected-but-empty slot
+    widths.append(0)
+    batch = np.stack(strips)
+    got = recognize_lines_font(batch, widths, decoder=decoder)
+    alone = [
+        recognize_lines_font(s[None], [w], decoder=decoder)[0]
+        for s, w in zip(strips, widths)
+    ]
+    assert got == alone
+    assert got[:len(texts)] == texts and got[-1] == ""
+    if decoder == "greedy":
+        full = font_line_logits(batch)
+        assert full.shape[1] == 64
+        seq_lens = np.asarray(widths) // GLYPH_W
+        assert got == ctc_greedy_decode_batch(full, seq_lens)
+
+
+@pytest.mark.parametrize("decoder", ["greedy", "beam_bi"])
+def test_all_empty_batch_decodes_to_empty_strings(decoder):
+    """Every slot width 0: one window is still scored (never zero), and
+    every line decodes to ''."""
+    batch = np.random.default_rng(0).random((3, 8, 384)).astype(np.float32)
+    assert recognize_lines_font(batch, [0, 0, 0], decoder=decoder) == ["", "", ""]

@@ -805,3 +805,71 @@ def test_fill_bytes_before_markers_decode():
         b[i:i] = b"\xff\xff\xff"  # fill bytes + the marker's own 0xFF
     out = decode_jpeg(bytes(b))
     assert np.array_equal(out, ref)
+
+
+# ---------------------------------------------------------------------------
+# The batched-matmul IDCT against the einsum it replaced
+# ---------------------------------------------------------------------------
+
+
+def _einsum_idct_blocks(coeffs):
+    """Reference IDCT: the three-operand einsum the finalizer used before
+    it became a batched matmul."""
+    pix = np.einsum("xu,nuv,yv->nxy", J._DCT.T, coeffs.astype(np.float64),
+                    J._DCT.T)
+    return np.clip(np.round(pix + 128.0), 0, 255).astype(np.uint8)
+
+
+def _fixture_jpegs(seed_base):
+    """The JPEG strips (baseline and progressive) that the noisy-OCR
+    fixture embeds for documents ``seed_base .. seed_base + 7``."""
+    import base64
+    import re
+
+    from ocr_spark.kernels.synth import wrap_html_with_font_images
+
+    out = []
+    for d in range(seed_base, seed_base + 8):
+        html = wrap_html_with_font_images(
+            "body text", f"u:{d}", [f"Line{d}abc", f"line{d}"], seed_base=d
+        ).decode()
+        for m in re.finditer(r'data-strip="([A-Za-z0-9+/=]*)"', html):
+            b = base64.b64decode(m.group(1))
+            if b[:2] == J.JPEG_MAGIC:
+                out.append(b)
+    assert {b"\xff\xc0" in b for b in out} == {True, False}  # both kinds
+    return out
+
+
+def test_idct_exact_on_dc_only_blocks():
+    """A DC-only block is one product per sample in both forms, so the
+    matmul IDCT equals the einsum reference on every DC value an 8-bit
+    stream can carry — the DC-exact JPEG/MJPEG media_features gate
+    depends on it."""
+    coeffs = np.zeros((4096, 8, 8), dtype=np.int64)
+    coeffs[:, 0, 0] = np.arange(-2048, 2048)
+    assert np.array_equal(J._idct_blocks(coeffs), _einsum_idct_blocks(coeffs))
+
+
+@pytest.mark.parametrize("density", [0.05, 1.0])
+def test_idct_within_one_level_on_random_blocks(density):
+    """Sparse and dense random blocks: the two summation orders may round
+    a .5 tie differently, never by more than one gray level."""
+    rng = np.random.default_rng(int(density * 100))
+    coeffs = rng.integers(-64, 64, (20000, 8, 8)) * 4
+    coeffs *= rng.random((20000, 8, 8)) < density
+    got = J._idct_blocks(coeffs).astype(np.int64)
+    ref = _einsum_idct_blocks(coeffs).astype(np.int64)
+    assert np.abs(got - ref).max() <= 1
+
+
+@pytest.mark.parametrize("seed_base", [1, 2])
+def test_idct_exact_on_fixture_strips(seed_base, monkeypatch):
+    """Decoded noisy-OCR fixture strips, baseline and progressive, are
+    byte-identical under the matmul IDCT and the einsum reference."""
+    blobs = _fixture_jpegs(seed_base)
+    got = [decode_jpeg(b) for b in blobs]
+    monkeypatch.setattr(J, "_idct_blocks", _einsum_idct_blocks)
+    for b, g in zip(blobs, got):
+        assert np.array_equal(decode_jpeg(b), g)
+
