@@ -326,7 +326,7 @@ def q_extract_pdf_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    from ocr_spark.kernels.blocks import assemble_quad_text, rect_to_quad
+    from ocr_spark.kernels.blocks import assemble_pdf_text, rect_to_quad
     from ocr_spark.kernels.synth_pdf import make_pdf_doc
 
     def rotated_fn(batches):
@@ -344,7 +344,7 @@ def q_extract_pdf_rotated(spark: SparkSession, sf_dir: str) -> DataFrame:
                 texts = [r["text"] for r in rows]
                 bids = np.array([r["block_id"] for r in rows])
                 quads = np.stack([rect_to_quad(b, angle) for b in boxes])
-                text, ids = assemble_quad_text(
+                text, ids = assemble_pdf_text(
                     pages_a, quads, scores, texts, bids
                 )
                 urls.append(rows[0]["url"])

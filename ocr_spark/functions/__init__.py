@@ -1,9 +1,7 @@
 from ocr_spark.functions.text import (  # noqa: F401
     host_of_url,
-    ngram_shingles,
     quality_expr,
     salt_of_url,
     url_host_bucket,
-    whitespace_tokens,
 )
 from ocr_spark.functions.url import canonical_url, dedup_by_url  # noqa: F401

@@ -3,7 +3,7 @@
 Everything here returns a ``pyspark.sql.Column`` built from built-in
 functions only — JVM-side, codegen-friendly, usable in any DataFrame
 pipeline. These are the engine's equivalents of the reference's scalar
-function layer (SURVEY §2.7): string cleanup, charset/token discipline,
+function layer (SURVEY §2.7): the quality score, url host extraction,
 hashing, and the partition-key derivations used by the sink.
 """
 
@@ -13,38 +13,13 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ocr_spark.config import HOST_HASH_BUCKETS, HOT_HOST_SALT
-
-
-def whitespace_tokens(col: str | Column = "text") -> Column:
-    """Whitespace-token array, empty strings dropped — the single token
-    definition shared by textstats, dedup, and the DuckDB oracles.
-
-    Accepts a column name or any ``Column`` expression; the Column form is
-    built from ``F.split``/``F.filter`` directly (same semantics as the SQL
-    string used by the name form).
-    """
-    c = F.col(col) if isinstance(col, str) else col
-    return F.filter(F.split(c, r"\s+"), lambda x: x != F.lit(""))
-
-
-def ngram_shingles(n: int = 3, col: str = "text") -> Column:
-    """Distinct word n-gram set of a text column (MinHash/Jaccard input).
-
-    ``col`` must be a column NAME (the expression is assembled as a SQL
-    string shared with the DuckDB oracles); a ``Column`` argument raises
-    rather than silently reading the wrong column.
-    """
-    from ocr_spark.operators.dedup import shingles
-
-    if not isinstance(col, str):
-        raise TypeError("ngram_shingles requires a column name, not a Column")
-    return F.expr(shingles(n, col=col))
+from ocr_spark.operators.textstats import _WORDS_EXPR
 
 
 def quality_expr(col: str = "text") -> Column:
     """The C4/Gopher-style composite quality score in [0, 1] (rounded 6dp),
     identical to ``operators.textstats.quality_score``'s output column."""
-    w = f"filter(split({col}, '\\\\s+'), x -> x != '')"
+    w = _WORDS_EXPR.format(col=col)
     stop = "'the','a','and','of','in','to','is'"
     return F.expr(
         f"round(least(size({w}) / 64.0, 1.0)"

@@ -1,22 +1,29 @@
 """Block geometry: locality-aware NMS (weighted merge) + x/y-cut reading order.
 
-Re-expresses the reference's box-domain post-processing in the axis-aligned
-page-block domain:
+Re-expresses the reference's box-domain post-processing in the page-block
+domain. A region is either an axis-aligned box ``[N, 4]`` (x0, y0, x1, y1)
+or a quad ``[N, 4, 2]`` (SURVEY D5). ``nms_merge_blocks`` and
+``assemble_pdf_text`` take either, and only the intersection test depends
+on the shape:
 
 * ``nms_merge_blocks`` — the semantics of ``nms_locality`` + ``standard_nms``
   + ``weighted_merge`` (``/root/reference/locality_aware_nms.py:18-58``):
-  a sequential locality pass merges each box into its running predecessor
-  when IoU > thres (coords score-weighted-averaged, scores ADDED —
-  ``g[:8]=(g8*g+p8*p)/(g8+p8); g8=g8+p8``), then a standard greedy NMS in
-  score-descending order suppresses remaining overlaps.
+  a sequential locality pass merges each region into its running
+  predecessor when IoU > thres (coords score-weighted-averaged, scores
+  ADDED — ``g[:8]=(g8*g+p8*p)/(g8+p8); g8=g8+p8``), then a standard greedy
+  NMS in score-descending order suppresses remaining overlaps. Boxes use
+  ``box_iou``; quads use the polygon IoU below.
 * ``xy_cut_order`` — recursive XY-cut reading order for page layouts; the
   generalization of the reference's ``(y, x)`` box sort
   (``/root/reference/DetectUtil.py:201-203``) that handles multi-column
   layouts correctly (cut on whitespace gaps, top/bottom before left/right).
+  Quads are read in the order of their axis-aligned hulls (``quad_aabb``).
 
-Pure NumPy; runs inside ``applyInPandas`` per url (groups are page-local and
-small, the same locality argument as the reference's per-image ``boxes_masks``
-grouping, ``/root/reference/DataPreprocess/DataGen.py:538-548``).
+Pure NumPy. ``operators/extract_pdf.py`` calls ``assemble_pdf_text`` once
+per url from a single ``mapInPandas`` that carries a url split across Arrow
+batches over to the next batch. Groups are page-local and small, the same
+locality argument as the reference's per-image ``boxes_masks`` grouping
+(reference ``DataPreprocess/DataGen.py:538-548``).
 """
 
 from __future__ import annotations
@@ -54,15 +61,30 @@ def nms_merge_blocks(
 ) -> tuple[np.ndarray, np.ndarray, list[list[int]]]:
     """Locality-aware NMS over blocks in their given (reading) order.
 
+    ``boxes`` holds axis-aligned boxes ``[N, 4]`` (``box_iou``) or quads
+    ``[N, 4, 2]`` (``polygon_iou``, so parallel rotated lines whose hulls
+    overlap do not falsely merge); the kept geometry has the same shape.
+
     Returns ``(kept_boxes, kept_scores, members)`` where ``members[i]`` lists
     the input indices merged into kept box ``i`` (first member = the
     highest-input-score constituent, used for text selection downstream).
     """
+    quads = boxes.ndim == 3
     n = len(boxes)
     if n == 0:
-        return boxes.reshape(0, 4), scores, []
+        return boxes.reshape((0, 4, 2) if quads else (0, 4)), scores, []
     boxes = boxes.astype(np.float64)
     scores = scores.astype(np.float64)
+    iou = polygon_iou if quads else box_iou
+    if quads:
+        # canonicalize (CCW orientation + sort_quad) so the weighted vertex
+        # average pairs corresponding corners: two overlapping quads
+        # expressed with different starting vertices or windings would
+        # otherwise average into a degenerate bow-tie with near-zero area
+        # and silently corrupt the subsequent IoU suppression
+        boxes = np.stack(
+            [sort_quad(q if polygon_area(q) >= 0 else q[::-1]) for q in boxes]
+        )
 
     # --- locality pass (nms_locality:44-54): merge into running predecessor
     merged_boxes: list[np.ndarray] = []
@@ -70,7 +92,7 @@ def nms_merge_blocks(
     merged_members: list[list[int]] = []
     cur_box, cur_score, cur_members = boxes[0].copy(), float(scores[0]), [0]
     for i in range(1, n):
-        if box_iou(boxes[i], cur_box) > thres:
+        if iou(boxes[i], cur_box) > thres:
             cur_box, cur_score = weighted_merge(
                 cur_box, cur_score, boxes[i], float(scores[i])
             )
@@ -99,7 +121,7 @@ def nms_merge_blocks(
         if order.size == 1:
             break
         rest = order[1:]
-        ious = np.array([box_iou(mb[i], mb[j]) for j in rest])
+        ious = np.array([iou(mb[i], mb[j]) for j in rest])
         order = rest[ious <= thres]
 
     keep_sorted = sorted(keep)  # restore reading order among survivors
@@ -115,13 +137,13 @@ def nms_merge_blocks(
 # ---------------------------------------------------------------------------
 # Rotated / polygon geometry (quad domain).
 #
-# Re-derives the semantics of the reference's polygon NMS
+# Re-derives the reference's polygon intersection
 # (``/root/reference/locality_aware_nms.py:5-15`` via shapely, C++
 # ``lanms/lanms.h:22-34`` via Clipper) in pure NumPy: convex-polygon
-# intersection by Sutherland–Hodgman clipping, shoelace areas, the same
-# score-weighted merge on the 8 coordinates, and the same two-pass
-# locality+greedy NMS — for layouts whose regions are rotated or otherwise
-# not axis-aligned, where the AABB ``box_iou`` above is wrong.
+# intersection by Sutherland–Hodgman clipping and shoelace areas. It is
+# the IoU ``nms_merge_blocks`` uses for quads — layouts whose regions are
+# rotated or otherwise not axis-aligned, where the AABB ``box_iou`` above
+# is wrong.
 # ---------------------------------------------------------------------------
 
 
@@ -198,167 +220,6 @@ def rect_to_quad(box: np.ndarray, angle: float = 0.0) -> np.ndarray:
     c, s = np.cos(angle), np.sin(angle)
     rot = np.array([[c, -s], [s, c]])
     return (corners - [cx, cy]) @ rot.T + [cx, cy]
-
-
-def nms_merge_quads(
-    quads: np.ndarray,
-    scores: np.ndarray,
-    thres: float = 0.3,
-) -> tuple[np.ndarray, np.ndarray, list[list[int]]]:
-    """Locality-aware NMS over quads [N, 4, 2] — the exact two-pass
-    structure of ``nms_merge_blocks`` with polygon IoU and the same
-    score-weighted coordinate merge (``locality_aware_nms.py:18-58``
-    semantics in the rotated domain).
-
-    Inputs are canonicalized first (CCW orientation + ``sort_quad``) so the
-    weighted vertex average pairs corresponding corners: two overlapping
-    quads expressed with different starting vertices or windings would
-    otherwise average into a degenerate bow-tie with near-zero area and
-    silently corrupt the subsequent IoU suppression.
-    """
-    n = len(quads)
-    if n == 0:
-        return quads.reshape(0, 4, 2), scores, []
-    quads = quads.astype(np.float64)
-    scores = scores.astype(np.float64)
-    quads = np.stack(
-        [
-            sort_quad(q if polygon_area(q) >= 0 else q[::-1])
-            for q in quads
-        ]
-    )
-
-    merged_q: list[np.ndarray] = []
-    merged_s: list[float] = []
-    merged_m: list[list[int]] = []
-    cur_q, cur_s, cur_m = quads[0].copy(), float(scores[0]), [0]
-    for i in range(1, n):
-        if polygon_iou(quads[i], cur_q) > thres:
-            cur_q = (cur_s * cur_q + float(scores[i]) * quads[i]) / (
-                cur_s + float(scores[i])
-            )
-            cur_s = cur_s + float(scores[i])
-            cur_m.append(i)
-        else:
-            merged_q.append(cur_q)
-            merged_s.append(cur_s)
-            merged_m.append(cur_m)
-            cur_q, cur_s, cur_m = quads[i].copy(), float(scores[i]), [i]
-    merged_q.append(cur_q)
-    merged_s.append(cur_s)
-    merged_m.append(cur_m)
-
-    mq = np.array(merged_q)
-    ms = np.array(merged_s)
-    order = np.argsort(-ms, kind="stable")
-    keep: list[int] = []
-    while order.size > 0:
-        i = int(order[0])
-        keep.append(i)
-        if order.size == 1:
-            break
-        rest = order[1:]
-        ious = np.array([polygon_iou(mq[i], mq[j]) for j in rest])
-        order = rest[ious <= thres]
-
-    keep_sorted = sorted(keep)
-    out_members = []
-    for i in keep_sorted:
-        m = merged_m[i]
-        best = max(m, key=lambda j: (scores[j], -j))
-        out_members.append([best] + [j for j in m if j != best])
-    return mq[keep_sorted], ms[keep_sorted], out_members
-
-
-def convex_hull(points: np.ndarray) -> np.ndarray:
-    """Andrew monotone-chain convex hull of points [N, 2], CCW order.
-    Deterministic (lexicographic sort, strict turns)."""
-    pts = np.unique(points.astype(np.float64), axis=0)
-    if len(pts) <= 2:
-        return pts
-
-    def half(seq):
-        out: list[np.ndarray] = []
-        for p in seq:
-            while (
-                len(out) >= 2
-                and np.cross(out[-1] - out[-2], p - out[-2]) <= 0
-            ):
-                out.pop()
-            out.append(p)
-        return out[:-1]
-
-    return np.array(half(list(pts)) + half(list(pts[::-1])))
-
-
-def min_area_rect(points: np.ndarray) -> np.ndarray:
-    """Minimum-area enclosing rotated rectangle of points [N, 2] → quad
-    [4, 2] (canonicalized with ``sort_quad``).
-
-    Rotating calipers over the convex hull: the minimal rectangle has one
-    side collinear with a hull edge, so trying each edge's frame and
-    taking the smallest bounding box is exact. This is the capability of
-    the reference's ``earn_rect_angle`` fixture-prep step
-    (``/root/reference/DataPreprocess/PrepareForGRB.py:235-307``, built on
-    shapely's minimum_rotated_rectangle) re-derived without dependencies.
-    Ties break on the first minimal edge — deterministic.
-    """
-    hull = convex_hull(points)
-    if len(hull) == 1:
-        return np.repeat(hull, 4, axis=0)
-    if len(hull) == 2:
-        return np.array([hull[0], hull[1], hull[1], hull[0]])
-    best_area = np.inf
-    best_quad: np.ndarray | None = None
-    m = len(hull)
-    for i in range(m):
-        edge = hull[(i + 1) % m] - hull[i]
-        norm = np.linalg.norm(edge)
-        if norm == 0:
-            continue
-        ux = edge / norm
-        uy = np.array([-ux[1], ux[0]])
-        proj_x = hull @ ux
-        proj_y = hull @ uy
-        w = proj_x.max() - proj_x.min()
-        h = proj_y.max() - proj_y.min()
-        area = w * h
-        if area < best_area - 1e-12:
-            best_area = area
-            x0, x1 = proj_x.min(), proj_x.max()
-            y0, y1 = proj_y.min(), proj_y.max()
-            best_quad = np.array(
-                [
-                    x0 * ux + y0 * uy,
-                    x1 * ux + y0 * uy,
-                    x1 * ux + y1 * uy,
-                    x0 * ux + y1 * uy,
-                ]
-            )
-    assert best_quad is not None
-    return sort_quad(best_quad)
-
-
-def shrink_quad(quad: np.ndarray, ratio: float = 0.3) -> np.ndarray:
-    """EAST-style inward shrink: each vertex moves along its two adjacent
-    edges by ``ratio · r_i`` where ``r_i`` is the shorter adjacent edge
-    length — the label-geometry step the reference builds score-map
-    interiors with (``/root/reference/DataPreprocess/PrepareForGRB.py:5-69``
-    semantics, deterministic single-pass form)."""
-    q = quad.astype(np.float64)
-    n = len(q)
-    lens = np.array(
-        [np.linalg.norm(q[(i + 1) % n] - q[i]) for i in range(n)]
-    )
-    r = np.array([min(lens[i - 1], lens[i]) for i in range(n)])
-    out = q.copy()
-    for i in range(n):
-        for j in (i - 1, i + 1):
-            d = q[j % n] - q[i]
-            norm = np.linalg.norm(d)
-            if norm > 0:
-                out[i] = out[i] + ratio * r[i] * d / norm
-    return out
 
 
 def quad_aabb(quads: np.ndarray) -> np.ndarray:
@@ -448,36 +309,6 @@ def xy_cut_order(boxes: np.ndarray, min_gap: float = 1.0) -> np.ndarray:
     return np.array(out, dtype=np.int64)
 
 
-def assemble_quad_text(
-    pages: np.ndarray,
-    quads: np.ndarray,
-    scores: np.ndarray,
-    texts: list[str],
-    block_ids: np.ndarray,
-    merge_thres: float = 0.3,
-    separator: str = "\n\n",
-) -> tuple[str, list[int]]:
-    """Rotated-domain twin of ``assemble_pdf_text``: quads [N, 4, 2] →
-    (extracted_text, block_ids in reading order). Reading order comes from
-    XY-cut over the quads' axis-aligned hulls; suppression and merging use
-    TRUE polygon IoU, so parallel rotated lines that AABB overlap do not
-    falsely merge."""
-    out_texts: list[str] = []
-    out_ids: list[int] = []
-    for page in np.unique(pages):
-        sel = np.flatnonzero(pages == page)
-        order = xy_cut_order(quad_aabb(quads[sel]))
-        ordered = sel[order]
-        _, _, members = nms_merge_quads(
-            quads[ordered], scores[ordered], thres=merge_thres
-        )
-        for m in members:
-            src = ordered[m[0]]
-            out_texts.append(texts[src])
-            out_ids.append(int(block_ids[src]))
-    return separator.join(out_texts), out_ids
-
-
 def assemble_pdf_text(
     pages: np.ndarray,
     boxes: np.ndarray,
@@ -489,17 +320,19 @@ def assemble_pdf_text(
 ) -> tuple[str, list[int]]:
     """One document's blocks → (extracted_text, block_ids in reading order).
 
-    Per page: XY-cut reading order → locality NMS merge in that order (a
-    merged block keeps its highest-score constituent's text) → assemble;
-    pages concatenate in ascending page order.
+    ``boxes`` holds axis-aligned boxes ``[N, 4]`` or quads ``[N, 4, 2]``.
+    Per page: XY-cut reading order (over the quads' axis-aligned hulls) →
+    locality NMS merge in that order (a merged block keeps its
+    highest-score constituent's text) → assemble; pages concatenate in
+    ascending page order.
     """
     out_texts: list[str] = []
     out_ids: list[int] = []
     for page in np.unique(pages):
         sel = np.flatnonzero(pages == page)
-        order = xy_cut_order(boxes[sel])
-        ordered = sel[order]
-        kept_boxes, kept_scores, members = nms_merge_blocks(
+        hulls = quad_aabb(boxes[sel]) if boxes.ndim == 3 else boxes[sel]
+        ordered = sel[xy_cut_order(hulls)]
+        _, _, members = nms_merge_blocks(
             boxes[ordered], scores[ordered], thres=merge_thres
         )
         for m in members:

@@ -31,8 +31,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-_WORDS_T = "filter(split({col}, '\\\\s+'), x -> x != '')"
-_WORDS = _WORDS_T.format(col="text")
+from ocr_spark.operators.textstats import _WORDS_EXPR
+
+_WORDS = _WORDS_EXPR.format(col="text")
 
 # hot-bucket cap for LSH banding: a bucket of m docs yields m(m-1)/2 pairs;
 # buckets beyond this are dropped (the reference's max_box_num rationale).
@@ -62,7 +63,7 @@ def shingles(n: int = 3, col: str = "text") -> str:
     [1, 0], not an empty array, so the naive form fabricates shingles for
     short documents.
     """
-    words = _WORDS_T.format(col=col)
+    words = _WORDS_EXPR.format(col=col)
     return (
         f"case when size({words}) < {n} then array() "
         f"else array_distinct(transform(sequence(1, size({words}) - {n - 1}),"

@@ -66,11 +66,6 @@ def sessionize(events: DataFrame, gap_seconds: int = GAP_SECONDS) -> DataFrame:
     )
 
 
-def _session_func(key, pdfs: Iterator[pd.DataFrame], state):
-    """applyInPandasWithState kernel: per-user open-session accumulator."""
-    return _session_func_gap(GAP_SECONDS)(key, pdfs, state)
-
-
 def _session_func_gap(gap_seconds: int):
     def fn(key, pdfs: Iterator[pd.DataFrame], state):
         yield from _session_events(key, pdfs, state, gap_seconds)

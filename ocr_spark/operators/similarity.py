@@ -110,19 +110,6 @@ def _hyperplanes_expr(dim: int, n_planes: int, seed: int, vec_col: str) -> str:
     return " + ".join(terms)
 
 
-def with_lsh_bucket(
-    embeddings: DataFrame,
-    dim: int,
-    n_planes: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Adds a deterministic ``bucket`` column (n_planes-bit sign code)."""
-    return embeddings.withColumn(
-        "bucket", F.expr(_hyperplanes_expr(dim, n_planes, seed, vec_col))
-    )
-
-
 def _bucketed_tables(
     df: DataFrame,
     id_select: list,

@@ -20,8 +20,9 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-# Whitespace-token split, empty strings dropped — the one token definition
-# used by every operator in this module (and mirrored by the DuckDB oracles).
+# Whitespace-token split, empty strings dropped — the one token definition,
+# shared by this module, ``operators.dedup`` and ``functions.quality_expr``
+# (and mirrored by the DuckDB oracles).
 _WORDS_EXPR = "filter(split({col}, '\\\\s+'), x -> x != '')"
 
 # Stopword lists for the n-gram/stopword language-ID heuristic.
@@ -38,7 +39,7 @@ def words(col: str = "text") -> Column:
     return F.expr(_WORDS_EXPR.format(col=col))
 
 
-def _count_in(words_col: Column, vocab: tuple[str, ...]) -> Column:
+def _count_in(vocab: tuple[str, ...]) -> Column:
     quoted = ", ".join(f"'{w}'" for w in vocab)
     return F.size(
         F.expr(f"filter({_WORDS_EXPR.format(col='text')}, x -> x in ({quoted}))")
@@ -129,12 +130,11 @@ def lang_id(docs: DataFrame) -> DataFrame:
 def lang_vote_cols() -> list[Column]:
     """The five per-language vote columns (aliased c_en..c_zh) — shared by
     ``lang_id`` and the curation funnel so the cascade never drifts."""
-    w = words()
     return [
-        _count_in(w, STOPWORDS_EN).alias("c_en"),
-        _count_in(w, STOPWORDS_DE).alias("c_de"),
-        _count_in(w, STOPWORDS_FR).alias("c_fr"),
-        _count_in(w, STOPWORDS_ES).alias("c_es"),
+        _count_in(STOPWORDS_EN).alias("c_en"),
+        _count_in(STOPWORDS_DE).alias("c_de"),
+        _count_in(STOPWORDS_FR).alias("c_fr"),
+        _count_in(STOPWORDS_ES).alias("c_es"),
         F.regexp_count(F.col("text"), F.lit(CJK_RANGE_RE))
         .cast("long")
         .alias("c_zh"),

@@ -25,12 +25,40 @@ from pyspark.sql.streaming import StreamingQuery
 from ocr_spark.sources.pages import PAGES_SCHEMA
 
 
+def _read_pages(spark: SparkSession, input_dir: str) -> DataFrame:
+    """File-source stream of page parquet files, 8 files per micro-batch."""
+    return (
+        spark.readStream.schema(PAGES_SCHEMA)
+        .option("maxFilesPerTrigger", 8)
+        .parquet(input_dir)
+    )
+
+
+def _write_partitioned(
+    extracted: DataFrame, out_dir: str, checkpoint_dir: str
+) -> StreamingQuery:
+    """Append extracted rows as parquet partitioned like the batch sink
+    (``crawl_date``/``host_bucket``), draining all input (AvailableNow)."""
+    from ocr_spark.sinks.partitioned import with_partition_keys
+
+    return (
+        with_partition_keys(extracted)
+        .drop("salt")
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .partitionBy("crawl_date", "host_bucket")
+        .outputMode("append")
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
 def stream_extract(
     spark: SparkSession,
     input_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Incremental extraction: parquet page files → extracted parquet.
 
@@ -39,24 +67,10 @@ def stream_extract(
     path, two execution modes.
     """
     from ocr_spark.operators.extract_html import extract_pages
-    from ocr_spark.sinks.partitioned import with_partition_keys
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
+    return _write_partitioned(
+        extract_pages(_read_pages(spark, input_dir)), out_dir, checkpoint_dir
     )
-    extracted = with_partition_keys(extract_pages(pages)).drop("salt")
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("crawl_date", "host_bucket")
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_extract_full(
@@ -65,7 +79,6 @@ def stream_extract_full(
     out_dir: str,
     checkpoint_dir: str,
     recognizer: str = "font",
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Incremental FUSED extraction (html blocks + embedded-image OCR) —
     the streaming twin of ``operators.pipeline.extract_full``, one code
@@ -81,24 +94,18 @@ def stream_extract_full(
     """
     from ocr_spark.operators.pipeline import extract_full
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         extract_full(batch_df, recognizer=recognizer).write.mode(
             "append"
         ).parquet(out_dir)
 
-    writer = (
-        pages.writeStream.foreachBatch(write_batch)
+    return (
+        _read_pages(spark, input_dir)
+        .writeStream.foreachBatch(write_batch)
         .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def stream_dedup_extract(
@@ -118,29 +125,15 @@ def stream_dedup_extract(
     """
     from ocr_spark.functions.url import canonical_url
     from ocr_spark.operators.extract_html import extract_pages
-    from ocr_spark.sinks.partitioned import with_partition_keys
 
-    pages = (
-        spark.readStream.schema(PAGES_SCHEMA)
-        .option("maxFilesPerTrigger", 8)
-        .parquet(input_dir)
-    )
     deduped = (
-        pages.withColumn("_curl", canonical_url("url"))
+        _read_pages(spark, input_dir)
+        .withColumn("_curl", canonical_url("url"))
         .withWatermark("warc_ts", watermark)
         .dropDuplicatesWithinWatermark(["_curl"])
         .drop("_curl")
     )
-    extracted = with_partition_keys(extract_pages(deduped)).drop("salt")
-    return (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("crawl_date", "host_bucket")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return _write_partitioned(extract_pages(deduped), out_dir, checkpoint_dir)
 
 
 def stream_event_counts(
@@ -191,7 +184,6 @@ def stream_extract_warc(
     warc_dir: str,
     out_dir: str,
     checkpoint_dir: str,
-    available_now: bool = True,
 ) -> StreamingQuery:
     """Incremental WARC ingestion: newly-landed ``.warc(.gz)`` archives →
     parsed pages → fused extraction → partitioned parquet, exactly-once
@@ -200,18 +192,7 @@ def stream_extract_warc(
     swaps the trigger; the parse/extract stages are byte-identical to the
     batch ``read_warc`` path (shared ``_warc_pages_fn``)."""
     from ocr_spark.operators.extract_html import extract_pages
-    from ocr_spark.sinks.partitioned import with_partition_keys
     from ocr_spark.sources.warc import read_warc_stream
 
     pages = read_warc_stream(spark, warc_dir)
-    extracted = with_partition_keys(extract_pages(pages)).drop("salt")
-    writer = (
-        extracted.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("crawl_date", "host_bucket")
-        .outputMode("append")
-    )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _write_partitioned(extract_pages(pages), out_dir, checkpoint_dir)

@@ -1,22 +1,19 @@
 """Property-based verification of the polygon geometry kernels: the
 clipping/IoU math is checked against an independent Monte-Carlo estimate
-(no shared code path), and the structural invariants of min-area-rect and
-quad NMS are asserted over randomized rotated rectangles."""
+(no shared code path), and the structural invariants of quad NMS are
+asserted over randomized rotated rectangles."""
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from ocr_spark.kernels.blocks import (
     clip_polygon,
-    min_area_rect,
-    nms_merge_quads,
+    nms_merge_blocks,
     polygon_area,
     polygon_iou,
-    quad_aabb,
     rect_to_quad,
 )
 
@@ -70,22 +67,6 @@ def test_clip_area_matches_monte_carlo(spec_a, spec_b):
     assert abs(analytic - est) <= 0.03 * box_area + 1e-6
 
 
-@settings(max_examples=60, deadline=None)
-@given(_rects)
-def test_min_area_rect_contains_points_and_is_minimal(spec):
-    quad = _quad(spec)
-    rec = min_area_rect(quad)
-    assert _point_in_convex(rec, quad).all()
-    # minimal: never larger than the AABB (a valid enclosing rectangle),
-    # and for an exact rotated rectangle it recovers the exact area
-    aabb = quad_aabb(quad[None])[0]
-    aabb_area = (aabb[2] - aabb[0]) * (aabb[3] - aabb[1])
-    rec_area = abs(polygon_area(rec))
-    assert rec_area <= aabb_area + 1e-9
-    true_area = spec[2] * spec[3]
-    assert rec_area == pytest.approx(true_area, rel=1e-6)
-
-
 @settings(max_examples=40, deadline=None)
 @given(st.lists(_rects, min_size=1, max_size=6))
 def test_quad_nms_idempotent(specs):
@@ -93,7 +74,7 @@ def test_quad_nms_idempotent(specs):
     mutually below the IoU threshold by construction."""
     quads = np.stack([_quad(s) for s in specs])
     scores = np.linspace(1.0, 0.5, len(specs))
-    kept, ks, _ = nms_merge_quads(quads, scores, thres=0.3)
-    kept2, _, members2 = nms_merge_quads(kept, ks, thres=0.3)
+    kept, ks, _ = nms_merge_blocks(quads, scores, thres=0.3)
+    kept2, _, members2 = nms_merge_blocks(kept, ks, thres=0.3)
     assert len(kept2) == len(kept)
     assert all(m == [i] for i, m in enumerate(members2))

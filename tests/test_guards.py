@@ -6,6 +6,7 @@ import re
 from pathlib import Path
 
 import numpy as np
+import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -46,12 +47,21 @@ def test_no_rng_in_kernels():
 
 # --- XY-cut order stability under input permutation -------------------------
 
+@pytest.mark.parametrize(
+    "angle",
+    [
+        pytest.param(None, id="boxes"),
+        pytest.param(0.16, id="quads+0.16"),
+        pytest.param(-0.16, id="quads-0.16"),
+    ],
+)
 @settings(max_examples=100, deadline=None)
 @given(st.permutations(list(range(8))), st.integers(min_value=0, max_value=2))
-def test_pdf_assembly_permutation_invariant(perm, fam_doc):
+def test_pdf_assembly_permutation_invariant(angle, perm, fam_doc):
     """assemble_pdf_text must give identical output regardless of the
-    input row order (blocks arrive in arbitrary shuffle order)."""
-    from ocr_spark.kernels.blocks import assemble_pdf_text
+    input row order (blocks arrive in arbitrary shuffle order), for
+    axis-aligned boxes and for the same blocks as rotated quads."""
+    from ocr_spark.kernels.blocks import assemble_pdf_text, rect_to_quad
     from ocr_spark.kernels.synth_pdf import make_pdf_doc
 
     rows, expected_text, _ = make_pdf_doc(fam_doc)
@@ -60,9 +70,12 @@ def test_pdf_assembly_permutation_invariant(perm, fam_doc):
     shuffled = [rows[i] for i in idx]
 
     def run(rlist):
+        boxes = np.array([[r["x0"], r["y0"], r["x1"], r["y1"]] for r in rlist])
+        if angle is not None:
+            boxes = np.stack([rect_to_quad(b, angle) for b in boxes])
         return assemble_pdf_text(
             np.array([r["page"] for r in rlist], dtype=np.int64),
-            np.array([[r["x0"], r["y0"], r["x1"], r["y1"]] for r in rlist]),
+            boxes,
             np.array([r["score"] for r in rlist]),
             [r["text"] for r in rlist],
             np.array([r["block_id"] for r in rlist], dtype=np.int64),

@@ -15,7 +15,6 @@ from ocr_spark.kernels.blocks import (
     box_iou,
     clip_polygon,
     nms_merge_blocks,
-    nms_merge_quads,
     polygon_area,
     polygon_iou,
     quad_aabb,
@@ -80,8 +79,8 @@ def test_sort_quad_canonicalization():
 
 
 def test_quad_nms_matches_aabb_nms_at_angle_zero():
-    """Differential: with axis-aligned quads, nms_merge_quads must keep the
-    same members and equivalent geometry as nms_merge_blocks."""
+    """Differential: given axis-aligned quads, nms_merge_blocks must keep
+    the same members and equivalent geometry as given the boxes."""
     boxes = np.array(
         [
             [0, 0, 10, 4],
@@ -94,7 +93,7 @@ def test_quad_nms_matches_aabb_nms_at_angle_zero():
     scores = np.array([0.9, 0.8, 0.7, 0.6])
     kb, ks, km = nms_merge_blocks(boxes, scores, thres=0.3)
     quads = np.stack([rect_to_quad(b) for b in boxes])
-    kq, qs, qm = nms_merge_quads(quads, scores, thres=0.3)
+    kq, qs, qm = nms_merge_blocks(quads, scores, thres=0.3)
     assert km == qm
     np.testing.assert_allclose(qs, ks)
     np.testing.assert_allclose(quad_aabb(kq), kb, atol=1e-12)
@@ -113,7 +112,7 @@ def test_rotated_near_duplicates_merge_where_aabb_would_not():
     # but their AABBs overlap substantially — the axis-aligned metric lies
     a1, a3 = quad_aabb(np.stack([q1, q3]))
     assert box_iou(a1, a3) > 0.3
-    _, _, members = nms_merge_quads(
+    _, _, members = nms_merge_blocks(
         np.stack([q1, q2, q3]), np.array([0.9, 0.8, 0.7]), thres=0.3
     )
     assert members == [[0, 1], [2]]
@@ -131,61 +130,8 @@ def test_rotated_layout_reading_order_fixture():
         [rect_to_quad(b, angle=0.15) for _, _, b in rows]
     )
     scores = np.full(len(rows), 0.9)
-    kept, _, members = nms_merge_quads(quads, scores, thres=0.3)
+    kept, _, members = nms_merge_blocks(quads, scores, thres=0.3)
     assert len(kept) == len(rows)  # nothing spuriously merged
     order = xy_cut_order(quad_aabb(kept), min_gap=1.0)
     labels = [(rows[members[i][0]][0], rows[members[i][0]][1]) for i in order]
     assert labels == [(0, 0), (0, 1), (0, 2), (1, 0), (1, 1), (1, 2)]
-
-
-def test_convex_hull_square_with_interior_points():
-    from ocr_spark.kernels.blocks import convex_hull
-
-    pts = np.array(
-        [[0, 0], [4, 0], [4, 4], [0, 4], [2, 2], [1, 3], [3, 1]], dtype=float
-    )
-    hull = convex_hull(pts)
-    assert len(hull) == 4
-    assert abs(polygon_area(hull)) == pytest.approx(16.0)
-
-
-def test_min_area_rect_recovers_rotated_rectangle():
-    from ocr_spark.kernels.blocks import min_area_rect
-
-    for angle in (0.0, 0.3, -0.5, 1.1):
-        quad = rect_to_quad(np.array([2, 1, 10, 4.0]), angle=angle)
-        rec = min_area_rect(quad)
-        assert abs(polygon_area(rec)) == pytest.approx(8 * 3, abs=1e-6)
-        assert polygon_iou(rec, quad) == pytest.approx(1.0, abs=1e-6)
-
-
-def test_min_area_rect_beats_aabb_on_rotated_points():
-    from ocr_spark.kernels.blocks import min_area_rect
-
-    quad = rect_to_quad(np.array([0, 0, 20, 2.0]), angle=np.pi / 4)
-    rec_area = abs(polygon_area(min_area_rect(quad)))
-    aabb = quad_aabb(quad[None])[0]
-    aabb_area = (aabb[2] - aabb[0]) * (aabb[3] - aabb[1])
-    assert rec_area == pytest.approx(40.0, abs=1e-6)
-    assert aabb_area > 2 * rec_area
-
-
-def test_shrink_quad_axis_aligned_known_result():
-    from ocr_spark.kernels.blocks import shrink_quad
-
-    q = rect_to_quad(np.array([0, 0, 10, 4.0]))  # edges 10 and 4, r_i = 4
-    s = shrink_quad(q, ratio=0.25)  # each vertex moves 1.0 along both edges
-    expect = np.array([[1, 1], [9, 1], [9, 3], [1, 3]], dtype=float)
-    np.testing.assert_allclose(s, expect, atol=1e-12)
-
-
-def test_shrink_quad_stays_inside_and_smaller():
-    from ocr_spark.kernels.blocks import shrink_quad
-
-    q = rect_to_quad(np.array([5, 5, 30, 12.0]), angle=0.4)
-    s = shrink_quad(q, ratio=0.3)
-    assert abs(polygon_area(s)) < abs(polygon_area(q))
-    inter = clip_polygon(s, q)
-    assert abs(polygon_area(inter)) == pytest.approx(
-        abs(polygon_area(s)), abs=1e-9
-    )
