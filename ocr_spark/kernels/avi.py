@@ -14,8 +14,9 @@ Huffman tables per the OpenDML convention). Other fourccs raise
 row skip.
 
 The frame explosion consumer (``operators.multimodal.sample_frames``)
-needs only "payload bytes → list of (H, W) float rasters", which is the
-exact seam a real ffmpeg-backed deployment would fill.
+needs only "payload bytes → lazy stream of (H, W) uint8 rasters"
+(``iter_avi_frames``), which is the exact seam a real ffmpeg-backed
+deployment would fill.
 """
 
 from __future__ import annotations
@@ -23,8 +24,6 @@ from __future__ import annotations
 import struct
 
 import numpy as np
-
-AVI_MAGIC = b"RIFF"
 
 
 def _pad4(n: int) -> int:
@@ -108,15 +107,6 @@ def _walk_chunks(data: bytes, pos: int, end: int):
             raise ValueError("truncated AVI chunk")
         yield tag, body_start, length
         pos = body_start + length + (length & 1)
-
-
-def decode_avi(data: bytes) -> list[np.ndarray]:
-    """AVI bytes → list of (H, W) uint8 grayscale frames (BGR averaged).
-
-    Eager wrapper over ``iter_avi_frames``; prefer the iterator for long
-    videos — it decodes one frame at a time (peak memory one raster, not
-    N) and never decodes skipped frames."""
-    return [frame for _, frame in iter_avi_frames(data)]
 
 
 def iter_avi_frames(

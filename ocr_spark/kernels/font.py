@@ -406,7 +406,6 @@ for _c in "0123456789":
 for _o in range(26):
     _CLS_OF[chr(ord("a") + _o)] = 1  # lower
     _CLS_OF[chr(ord("A") + _o)] = 2  # upper
-_N_CLS = {0: 10, 1: 26, 2: 26, 3: 94 - 62}  # members per class
 # RELATIVE class-transition penalties (max 1 per row), NOT probability
 # mass. Two measured failure modes force this form: (a) absolute mass
 # (P/|class|) makes every emission pay ~log(1/26) that the blank path

@@ -449,10 +449,6 @@ def tokenize_html(html_bytes: bytes | str, fast: bool = True) -> list[dict]:
 # Vectorized scoring over a batch-level node table (NumPy struct-of-arrays).
 # --------------------------------------------------------------------------
 
-_LEN_NORM_KEYS = np.array(list(_LEN_NORM.keys()), dtype=object)
-_LEN_NORM_VALS = np.array(list(_LEN_NORM.values()), dtype=np.float64)
-
-
 def len_norms_for_tags(tags: np.ndarray) -> np.ndarray:
     """Per-tag length normalizer lookup. Dict-get beats 18 masked vector
     assignments below ~10^4 nodes (the per-document regime); both are
@@ -513,19 +509,16 @@ def extract_main_text(
     records = tokenize_html(html_bytes)
     if not records:
         return ("", [], 0, (0, 0)) if with_stats else ("", [], 0)
-    scores = score_nodes(
-        np.array([r["tag"] for r in records], dtype=object),
-        np.array([r["text_len"] for r in records], dtype=np.int64),
-        np.array([r["link_text_len"] for r in records], dtype=np.int64),
-        np.array([r["negative"] for r in records], dtype=bool),
-        np.array([r["attr_pos"] for r in records], dtype=bool),
-    )
-    keep = scores >= SCORE_THRESH
     tags_a = np.array([r["tag"] for r in records], dtype=object)
     depths = np.array([r["depth"] for r in records], dtype=np.int64)
     tl = np.array([r["text_len"] for r in records], dtype=np.float64)
     ll = np.array([r["link_text_len"] for r in records], dtype=np.float64)
     neg = np.array([r["negative"] for r in records], dtype=bool)
+    scores = score_nodes(
+        tags_a, tl, ll, neg,
+        np.array([r["attr_pos"] for r in records], dtype=bool),
+    )
+    keep = scores >= SCORE_THRESH
     link_density = np.where(tl > 0, ll / np.maximum(tl, 1.0), 0.0)
     if not keep.any():
         # Arc90 candidate fallback: when nothing clears the absolute

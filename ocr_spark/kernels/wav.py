@@ -19,8 +19,6 @@ import struct
 
 import numpy as np
 
-WAV_MAGIC = b"RIFF"
-
 
 def _g711_luts() -> tuple[np.ndarray, np.ndarray]:
     """256-entry code → linear tables from the ITU-T G.711 expansion

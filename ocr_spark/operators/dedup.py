@@ -28,16 +28,14 @@ find near-identical members, keep one representative.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ocr_spark.operators.textstats import _WORDS_EXPR
 
 _WORDS = _WORDS_EXPR.format(col="text")
 
-# hot-bucket cap for LSH banding: a bucket of m docs yields m(m-1)/2 pairs;
-# buckets beyond this are dropped (the reference's max_box_num rationale).
-# Any oracle re-implementation must apply the SAME cap.
+# hot-bucket cap of the LSH self-join (see ``_bucket_pairs``)
 MAX_LSH_BUCKET = 1024
 
 
@@ -120,27 +118,62 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 4, shingle_n: int = 3) -
     return sig_arr.select("doc_id", *cols)
 
 
-def _materialize_pairs(
-    pairs: DataFrame, materialize: str, table_path: str | None
-) -> DataFrame:
-    """Materialize a candidate-pair table one of two ways:
+def _materialize(df: DataFrame, materialize: str, path: str | None) -> DataFrame:
+    """Materialize a pair or label table one of two ways:
 
     - ``"local"``: eager ``localCheckpoint`` — cheapest, but the blocks
       live in executor storage and are NOT resilient to executor loss;
       right for interactive/short jobs.
-    - ``"table"``: write the pairs to ``table_path`` as parquet and read
-      them back — the cluster-resilient path for multi-hour jobs (the
-      pair table is the natural checkpoint artifact; any executor can
-      re-read it after a loss).
+    - ``"table"``: write the rows to ``path`` as parquet and read them
+      back — the cluster-resilient path for multi-hour jobs (the table is
+      the natural checkpoint artifact; any executor can re-read it after
+      a loss).
     """
     if materialize == "table":
-        if not table_path:
+        if not path:
             raise ValueError("materialize='table' requires table_path")
-        pairs.write.mode("overwrite").parquet(table_path)
-        return pairs.sparkSession.read.parquet(table_path)
+        df.write.mode("overwrite").parquet(path)
+        return df.sparkSession.read.parquet(path)
     if materialize != "local":
         raise ValueError(f"unknown materialize mode {materialize!r}")
-    return pairs.localCheckpoint(eager=True)
+    return df.localCheckpoint(eager=True)
+
+
+def _bucket_pairs(bands: DataFrame) -> DataFrame:
+    """Banded self-join shared by both LSH families: ``(doc_id, band,
+    bucket)`` rows → distinct ``(doc_id_a, doc_id_b)`` pairs, a < b, for
+    docs sharing any (band, bucket).
+
+    Pair generation is a hash self-join on (band, bucket) — equi-keyed,
+    AQE-skew-splittable, never a global O(N²). A census of bucket sizes
+    runs first: a bucket of m docs would emit m(m-1)/2 pairs, so buckets
+    over ``MAX_LSH_BUCKET`` (the hot-bucket skew case, same rationale as
+    the reference's ``max_box_num`` cap) are dropped before the join, and
+    any oracle re-implementation must apply the same cap. ``bands`` feeds
+    the census and both join sides, so callers pass it persisted.
+    """
+    sizes = bands.groupBy("band", "bucket").agg(F.count("*").alias("m"))
+    ok = sizes.filter(
+        (F.col("m") > 1) & (F.col("m") <= MAX_LSH_BUCKET)
+    ).select("band", "bucket")
+    pruned = bands.join(ok, ["band", "bucket"])
+    a, b = pruned.alias("a"), pruned.alias("b")
+    return (
+        a.join(b, ["band", "bucket"])
+        .filter(F.col("a.doc_id") < F.col("b.doc_id"))
+        .select(
+            F.col("a.doc_id").alias("doc_id_a"),
+            F.col("b.doc_id").alias("doc_id_b"),
+        )
+        .distinct()
+    )
+
+
+def _jaccard(a: Column | str, b: Column | str) -> Column:
+    """Set Jaccard of two array columns, rounded to 6 dp."""
+    inter = F.size(F.array_intersect(a, b))
+    union = F.size(F.array_union(a, b))
+    return F.round(inter / F.greatest(union, F.lit(1)), 6)
 
 
 def lsh_candidate_pairs(
@@ -154,12 +187,8 @@ def lsh_candidate_pairs(
     """LSH banding: docs sharing any band bucket become candidate pairs.
 
     signature length = n_bands * rows_per_band min-hashes; band bucket =
-    md5(concat of that band's rows). Pair generation is a hash self-join on
-    (band, bucket) — equi-keyed, AQE-skew-splittable, never a global O(N²).
-    Pathological buckets (the hot-bucket skew case, same rationale as the
-    reference's ``max_box_num`` cap) are dropped before the join: a bucket
-    of m docs would emit m(m-1)/2 pairs. Returns (doc_id_a, doc_id_b)
-    distinct, a < b.
+    md5(concat of that band's rows); pairs come from ``_bucket_pairs``,
+    which drops hot buckets. Returns (doc_id_a, doc_id_b) distinct, a < b.
     """
     k = n_bands * rows_per_band
     # persist the signature projection BEFORE banding: Catalyst collapses
@@ -203,23 +232,7 @@ def lsh_candidate_pairs(
     # the pairs to parquet instead — the natural checkpoint artifact.)
     bands = bands.persist()
     try:
-        sizes = bands.groupBy("band", "bucket").agg(F.count("*").alias("m"))
-        ok = sizes.filter(
-            (F.col("m") > 1) & (F.col("m") <= MAX_LSH_BUCKET)
-        ).select("band", "bucket")
-        pruned = bands.join(ok, ["band", "bucket"])
-        a = pruned.alias("a")
-        b = pruned.alias("b")
-        pairs = (
-            a.join(b, ["band", "bucket"])
-            .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-            .select(
-                F.col("a.doc_id").alias("doc_id_a"),
-                F.col("b.doc_id").alias("doc_id_b"),
-            )
-            .distinct()
-        )
-        return _materialize_pairs(pairs, materialize, table_path)
+        return _materialize(_bucket_pairs(bands), materialize, table_path)
     finally:
         bands.unpersist()
         sigs.unpersist()
@@ -251,9 +264,7 @@ def verify_pairs(
     a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
     joined = pairs.join(a, "doc_id_a").join(b, "doc_id_b")
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size(F.array_union("sh_a", "sh_b"))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
+    jac = _jaccard("sh_a", "sh_b")
     return joined.select("doc_id_a", "doc_id_b", jac.alias("jaccard")).filter(
         F.col("jaccard") >= F.lit(min_jaccard)
     )
@@ -278,9 +289,7 @@ def ngram_jaccard_pairs(
     a = sh.alias("a")
     b = sh.alias("b")
     joined = a.join(b, on="g").filter(F.col("a.doc_id") < F.col("b.doc_id"))
-    inter = F.size(F.array_intersect(F.col("a.sh"), F.col("b.sh")))
-    union = F.size(F.array_union(F.col("a.sh"), F.col("b.sh")))
-    jac = F.round(inter / F.greatest(union, F.lit(1)), 6)
+    jac = _jaccard(F.col("a.sh"), F.col("b.sh"))
     return (
         joined.select(
             F.col("a.doc_id").alias("doc_id_a"),
@@ -362,17 +371,15 @@ def simhash_band_pairs(
     Pigeonhole guarantee: split the 64 signature bits into ``n_bands``
     equal bands; two signatures within Hamming distance < n_bands must
     agree EXACTLY on at least one band, so an equi self-join on
-    (band, band_bits) finds every pair with distance ≤ n_bands − 1 — the
+    (band, bucket) finds every pair with distance ≤ n_bands − 1 — the
     default ``max_hamming``. Recall is exactly 1.0 in that radius, unlike
     MinHash banding's probabilistic recall.
 
     Physical shape mirrors ``lsh_candidate_pairs``: persisted signature
     projection (Catalyst would otherwise re-inline the 64-vote aggregate
-    into every band expression), band explode to slim (doc_id, band, bits)
-    rows, hot-bucket census cap (a degenerate band value shared by m docs
-    would emit m²/2 pairs — capped at ``MAX_LSH_BUCKET``, mirrored in the
-    contract oracle), bucketed equi self-join, then exact XOR-popcount
-    verification of candidates only. Returns (doc_id_a, doc_id_b, hamming)
+    into every band expression), band explode to slim (doc_id, band,
+    bucket) rows, the capped self-join of ``_bucket_pairs``, then exact
+    XOR-popcount verification of candidates only. Returns (doc_id_a, doc_id_b, hamming)
     distinct with a < b, hamming ≤ max_hamming.
     """
     if 64 % n_bands or 32 % (64 // n_bands):
@@ -391,61 +398,45 @@ def simhash_band_pairs(
             f"{n_bands - 1} of {n_bands} bands; use more/wider bands"
         )
     sigs = simhash64(docs).persist()
+    band_vals = [
+        F.expr(
+            f"shiftright(simhash_{'lo' if i * bits < 32 else 'hi'}, "
+            f"{(i * bits) % 32}) & {mask}"
+        )
+        for i in range(n_bands)
+    ]
+    bands = sigs.select(
+        "doc_id",
+        F.posexplode(F.array(*band_vals)).alias("band", "bucket"),
+    ).persist()
     try:
-        band_vals = [
-            F.expr(
-                f"shiftright(simhash_{'lo' if i * bits < 32 else 'hi'}, "
-                f"{(i * bits) % 32}) & {mask}"
-            ).alias("bits")
-            for i in range(n_bands)
-        ]
-        bands = sigs.select(
-            "doc_id",
-            F.posexplode(F.array(*band_vals)).alias("band", "bits"),
-        ).persist()
-        try:
-            sizes = bands.groupBy("band", "bits").agg(F.count("*").alias("m"))
-            ok = sizes.filter(
-                (F.col("m") > 1) & (F.col("m") <= MAX_LSH_BUCKET)
-            ).select("band", "bits")
-            pruned = bands.join(ok, ["band", "bits"])
-            a, b = pruned.alias("a"), pruned.alias("b")
-            cand = (
-                a.join(b, ["band", "bits"])
-                .filter(F.col("a.doc_id") < F.col("b.doc_id"))
-                .select(
-                    F.col("a.doc_id").alias("doc_id_a"),
-                    F.col("b.doc_id").alias("doc_id_b"),
-                )
-                .distinct()
+        sa = sigs.select(
+            F.col("doc_id").alias("doc_id_a"),
+            F.col("simhash_hi").alias("hi_a"),
+            F.col("simhash_lo").alias("lo_a"),
+        )
+        sb = sigs.select(
+            F.col("doc_id").alias("doc_id_b"),
+            F.col("simhash_hi").alias("hi_b"),
+            F.col("simhash_lo").alias("lo_b"),
+        )
+        ham = F.bit_count(
+            F.col("hi_a").bitwiseXOR(F.col("hi_b"))
+        ) + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
+        pairs = (
+            _bucket_pairs(bands)
+            .join(sa, "doc_id_a")
+            .join(sb, "doc_id_b")
+            .select(
+                "doc_id_a",
+                "doc_id_b",
+                ham.cast("long").alias("hamming"),
             )
-            sa = sigs.select(
-                F.col("doc_id").alias("doc_id_a"),
-                F.col("simhash_hi").alias("hi_a"),
-                F.col("simhash_lo").alias("lo_a"),
-            )
-            sb = sigs.select(
-                F.col("doc_id").alias("doc_id_b"),
-                F.col("simhash_hi").alias("hi_b"),
-                F.col("simhash_lo").alias("lo_b"),
-            )
-            ham = F.bit_count(
-                F.col("hi_a").bitwiseXOR(F.col("hi_b"))
-            ) + F.bit_count(F.col("lo_a").bitwiseXOR(F.col("lo_b")))
-            pairs = (
-                cand.join(sa, "doc_id_a")
-                .join(sb, "doc_id_b")
-                .select(
-                    "doc_id_a",
-                    "doc_id_b",
-                    ham.cast("long").alias("hamming"),
-                )
-                .filter(F.col("hamming") <= max_hamming)
-            )
-            return _materialize_pairs(pairs, materialize, table_path)
-        finally:
-            bands.unpersist()
+            .filter(F.col("hamming") <= max_hamming)
+        )
+        return _materialize(pairs, materialize, table_path)
     finally:
+        bands.unpersist()
         sigs.unpersist()
 
 
@@ -550,7 +541,7 @@ def dup_clusters(
     slim (id, id) rows; lineage is cut per round so the plan does not
     grow with iterations. Deterministic.
 
-    Durability (the same two modes as ``_materialize_pairs``):
+    Durability (the two modes of ``_materialize``):
 
     - ``materialize="local"``: per-round ``localCheckpoint`` — cheapest,
       right for interactive jobs, but the blocks live in executor storage
@@ -568,13 +559,7 @@ def dup_clusters(
     spark = pairs.sparkSession
 
     def persist(df: DataFrame, name: str) -> DataFrame:
-        if materialize == "table":
-            path = f"{table_path}/{name}"
-            df.write.mode("overwrite").parquet(path)
-            return spark.read.parquet(path)
-        if materialize != "local":
-            raise ValueError(f"unknown materialize mode {materialize!r}")
-        return df.localCheckpoint(eager=True)
+        return _materialize(df, materialize, f"{table_path}/{name}")
 
     start_round = 0
     labels = None

@@ -31,6 +31,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ocr_spark.operators.textstats import _WORDS_EXPR
+
 MAX_MODEL_SIZE = 100_000
 
 
@@ -150,7 +152,7 @@ def contamination_check(
     shuffles. Word shingles are hashed to md5 so only 16-byte keys move.
     """
     def shingles(df: DataFrame, id_col: str | None):
-        words = f"filter(split({text_col}, '\\\\s+'), x -> x != '')"
+        words = _WORDS_EXPR.format(col=text_col)
         expr = (
             f"CASE WHEN size({words}) < {n_words} THEN array() "
             f"ELSE transform(sequence(1, size({words}) - {n_words} + 1), "

@@ -143,39 +143,18 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
             frame_sum = None
             fmt = sniff(payload)
             try:
-                if fmt == "avi":
-                    # video container: real AVI parse (DIB or MJPG). The
-                    # decode checksum covers ALL frames — it only exists
-                    # after the full container decode — while dims and the
-                    # pooled feature come from the first frame.
-                    from ocr_spark.kernels.avi import iter_avi_frames
-
-                    # streamed decode: the all-frame checksum accumulates
-                    # one raster at a time (peak memory one frame, not N)
+                if fmt in _VIDEO_FMTS:
+                    # video container (AVI: DIB or MJPG; GIF: palette
+                    # image or animation). The checksum spans ALL frames
+                    # — it only exists after the full container decode —
+                    # while dims and the pooled feature come from frame 0.
+                    # Streamed: peak memory is one frame, not N.
                     frame_sum = 0
                     img = None
-                    for _fno, frame in iter_avi_frames(payload):
+                    for _no, frame in _iter_gray_frames(payload):
                         frame_sum += int(frame.astype(np.int64).sum())
                         if img is None:
                             img = frame.astype(np.float32) / 255.0
-                    if img is None:
-                        continue
-                elif fmt == "gif":
-                    # GIF: palette image OR animation. The checksum spans
-                    # ALL composited frames (gray = channel mean, exact
-                    # for gray palettes); dims/feature from frame 0 —
-                    # streamed, one canvas + frame in memory.
-                    from ocr_spark.kernels.gif import iter_gif_frames
-
-                    frame_sum = 0
-                    img = None
-                    for _no, rgb in iter_gif_frames(payload):
-                        gray = np.rint(
-                            rgb.astype(np.float32).mean(axis=2)
-                        ).astype(np.int64)
-                        frame_sum += int(gray.sum())
-                        if img is None:
-                            img = gray.astype(np.float32) / 255.0
                     if img is None:
                         continue
                 elif fmt == "wav":
@@ -426,86 +405,6 @@ def recognize_video_frames(
     return media.filter(F.col("kind") == "video").select(
         "media_id", "payload"
     ).mapInPandas(fn, schema=FRAME_TEXT_SCHEMA)
-
-
-def decode_audio(payload: bytes, sample_rate: int, n_samples: int) -> np.ndarray:
-    """Audio codec seam: WAV (RIFF/PCM) payloads decode FOR REAL via the
-    engine's own container parser (``kernels.wav`` — 8/16-bit PCM, any
-    channel count, averaged to mono; declared meta is advisory, the RIFF
-    header wins). Other containers (mp3/ogg — codecs not in this
-    container) keep the deterministic sha256-seeded fake of ``n_samples``,
-    honestly labeled; the float32 1-D [-1, 1] contract is identical
-    either way."""
-    from ocr_spark.kernels.wav import WAV_MAGIC, decode_wav
-
-    if payload.startswith(WAV_MAGIC):
-        wave, _sr = decode_wav(payload)
-        return wave
-    digest = hashlib.sha256(payload + b"#audio").digest()
-    seed = np.frombuffer(digest, dtype=np.uint8).astype(np.float32)
-    reps = int(np.ceil(n_samples / len(seed)))
-    wave = np.tile(seed, reps)[:n_samples]
-    return (wave / 127.5) - 1.0
-
-
-AUDIO_WINDOWS_SCHEMA = T.StructType(
-    [
-        T.StructField("media_id", T.LongType()),
-        T.StructField("window_no", T.IntegerType()),
-        T.StructField("start_sample", T.LongType()),
-        T.StructField("rms", T.FloatType()),
-        T.StructField("zero_crossings", T.IntegerType()),
-    ]
-)
-
-
-def sample_audio_windows(
-    media: DataFrame, window_samples: int = 512, hop: int = 256
-) -> DataFrame:
-    """Windowed audio features for audio rows: one output row per analysis
-    window (RMS energy + zero-crossing count — the classic VAD features).
-
-    Same scale discipline as frame sampling: the waveform/payload never
-    leaves the stage; the (much taller) window table carries only scalars.
-    """
-
-    def fn(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, wnos, starts, rmss, zcs = [], [], [], [], []
-            for mid, payload, meta in zip(
-                pdf["media_id"], pdf["payload"], pdf["meta"]
-            ):
-                if payload is None or meta is None:
-                    continue
-                sr = int(meta["sample_rate"] or 16000)
-                try:
-                    # real WAV: length comes from the container; stub
-                    # path: one fake second at the declared rate
-                    wave = decode_audio(bytes(payload), sr, sr)
-                except ValueError:
-                    continue  # corrupt container: skip, never crash
-                n_samples = len(wave)
-                for w, s0 in enumerate(range(0, n_samples - window_samples + 1, hop)):
-                    win = wave[s0 : s0 + window_samples]
-                    ids.append(int(mid))
-                    wnos.append(w)
-                    starts.append(s0)
-                    rmss.append(float(np.sqrt(np.mean(win * win))))
-                    zcs.append(int((np.diff(np.sign(win)) != 0).sum()))
-            if ids:
-                yield pd.DataFrame(
-                    {
-                        "media_id": ids,
-                        "window_no": wnos,
-                        "start_sample": starts,
-                        "rms": rmss,
-                        "zero_crossings": zcs,
-                    }
-                )
-
-    return media.filter(F.col("kind") == "audio").select(
-        "media_id", "payload", "meta"
-    ).mapInPandas(fn, schema=AUDIO_WINDOWS_SCHEMA)
 
 
 def synth_media(spark, n: int = 64) -> DataFrame:

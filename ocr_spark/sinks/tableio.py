@@ -4,7 +4,7 @@ parquet otherwise — identical partition spec and write semantics either way.
 The north rule targets an Iceberg table keyed by (crawl-date bucket,
 url-host hash). This sandbox ships no iceberg-spark-runtime jar, so the
 seam (SURVEY §7 "Iceberg in sandbox" risk) keeps every caller
-format-agnostic: `write_table` / `read_table` take a logical identifier;
+format-agnostic: `write_table` takes a logical identifier;
 with Iceberg present the identifier is a catalog table and writes go
 through `writeTo(...)` (hidden-partition `days(warc_ts)` / `bucket(N,
 host)` transforms, snapshot isolation, atomic commit); without it, the
@@ -54,9 +54,3 @@ def write_table(
         .partitionBy(*partition_cols)
         .parquet(identifier)
     )
-
-
-def read_table(spark: SparkSession, identifier: str) -> DataFrame:
-    if iceberg_available(spark) and "/" not in identifier:
-        return spark.read.table(identifier)
-    return spark.read.parquet(identifier)

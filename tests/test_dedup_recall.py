@@ -384,3 +384,46 @@ def test_dup_clusters_table_mode_resumes(spark, tmp_path):
         for r in dup_clusters(chain, max_iter=30).collect()
     }
     assert got == want
+
+
+# ---- hot-bucket cap of the banded self-join ----
+
+_CLONE = " ".join(f"boiler{i % 11} plate{i}" for i in range(30))
+_PLANTED = " ".join(f"tok{(i * 7919) % 1009}" for i in range(120))
+
+
+def _cap_corpus(spark, n_clones):
+    """``n_clones`` identical docs (ids 0..n-1, one bucket per band) plus a
+    planted near-duplicate pair at ids 100000/100001 (last word differs)."""
+    rows = [(i, _CLONE) for i in range(n_clones)]
+    rows += [(100_000, _PLANTED), (100_001, _PLANTED.rsplit(" ", 1)[0] + " tail")]
+    return spark.createDataFrame(rows, "doc_id long, text string")
+
+
+_FAMILIES = {
+    "minhash": lambda d: lsh_candidate_pairs(d, n_bands=4, rows_per_band=2),
+    "simhash": lambda d: simhash_band_pairs(d, n_bands=8),
+}
+
+
+@pytest.mark.parametrize("family", sorted(_FAMILIES))
+def test_lsh_hot_bucket_cap(spark, family):
+    """Buckets over MAX_LSH_BUCKET are dropped before the self-join; a
+    bucket of exactly MAX_LSH_BUCKET docs still joins."""
+    from ocr_spark.operators.dedup import MAX_LSH_BUCKET
+
+    pairs = _FAMILIES[family]
+    planted = (100_000, 100_001)
+
+    over = {
+        (r.doc_id_a, r.doc_id_b)
+        for r in pairs(_cap_corpus(spark, MAX_LSH_BUCKET + 6)).collect()
+    }
+    assert over == {planted}
+
+    at_cap = pairs(_cap_corpus(spark, MAX_LSH_BUCKET))
+    n = MAX_LSH_BUCKET
+    assert at_cap.count() == n * (n - 1) // 2 + 1 == 523_777
+    assert at_cap.filter(
+        (F.col("doc_id_a") == planted[0]) & (F.col("doc_id_b") == planted[1])
+    ).count() == 1

@@ -1,4 +1,4 @@
-"""Multimodal plumbing: feature extraction, frame sampling, audio windows."""
+"""Multimodal plumbing: feature extraction and frame sampling."""
 
 from __future__ import annotations
 
@@ -30,25 +30,6 @@ def test_sample_frames(spark):
     # distinct frames hash differently
     one = [r for r in rows if r.media_id == rows[0].media_id]
     assert len({r.frame_crc for r in one}) == 4
-
-
-def test_sample_audio_windows(spark):
-    from ocr_spark.operators.multimodal import sample_audio_windows
-
-    m = synth_media(spark, 24)
-    out = sample_audio_windows(m)
-    rows = out.collect()
-    # audio rows: media_id % 3 == 1 → 8 of 24; 16000 samples, 512 window,
-    # 256 hop → floor((16000-512)/256)+1 = 61 windows each
-    assert len(rows) == 8 * 61
-    for r in rows[:10]:
-        assert 0.0 <= r.rms <= 1.0
-        assert 0 <= r.zero_crossings < 512
-    # deterministic
-    again = sample_audio_windows(m).collect()
-    assert {(r.media_id, r.window_no, r.rms) for r in rows} == {
-        (r.media_id, r.window_no, r.rms) for r in again
-    }
 
 
 def test_feature_fmt_sniff_and_jpeg_decode(spark):

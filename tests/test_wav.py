@@ -1,5 +1,5 @@
 """WAV codec: roundtrips, stereo downmix, malformed inputs, and the
-decode_audio seam sniffing."""
+media-feature audio seam sniffing."""
 
 from __future__ import annotations
 
@@ -60,15 +60,22 @@ def test_malformed_raises(mutate):
         decode_wav(mutate(wav))
 
 
-def test_decode_audio_seam_sniffs_wav():
-    from ocr_spark.operators.multimodal import decode_audio
+def test_decode_audio_seam_sniffs_wav(spark):
+    """The feature extractor's audio seam reads the RIFF header, not the
+    advisory meta: a lying ``sample_rate`` leaves decoded_w at the RIFF
+    sample count."""
+    from ocr_spark.operators.multimodal import MEDIA_SCHEMA, extract_media_features
 
     x = _tone()
-    y = decode_audio(encode_wav(x), 999, 5)  # advisory meta lies
-    assert len(y) == len(x)  # RIFF wins
-    assert np.abs(y - x).max() < 1e-3
-    fake = decode_audio(b"not audio", 16000, 256)
-    assert fake.shape == (256,)  # stub path intact
+    media = spark.createDataFrame(
+        [(1, "u", "audio", bytearray(encode_wav(x)), (None, None, None, 999, "audio/wav"))],
+        MEDIA_SCHEMA,
+    )
+    (row,) = extract_media_features(media).collect()
+    assert row.fmt == "wav"
+    assert (row.decoded_w, row.decoded_h) == (len(x), 1)  # RIFF wins
+    y, _sr = decode_wav(encode_wav(x))
+    assert row.pixel_sum == int(np.rint(y * 32767.0).astype(np.int64).sum())
 
 
 # ---- hostile-input fuzz ----
