@@ -7,7 +7,7 @@ payloads on the web, and ANIMATED GIF is the web's most common lightweight
 video container — so this codec feeds BOTH the image feature path and the
 frame-sampling/video-OCR path of ``operators.multimodal``.
 
-- ``decode_gif`` / ``iter_gif_frames``: full LZW decode (variable code
+- ``iter_gif_frames``: full LZW decode (variable code
   width to 12 bits, clear/EOI, the KwKwK case), global and local color
   tables, the 4-pass GIF interlace, frame composition on the logical
   screen with disposal methods 0/1 (leave), 2 (restore background) and
@@ -338,8 +338,3 @@ def iter_gif_frames(
         disposal = 0
         transparent = None
         frame_no += 1
-
-
-def decode_gif(data: bytes) -> list[np.ndarray]:
-    """GIF bytes → list of (H, W, 3) uint8 RGB composited frames."""
-    return [frame for _, frame in iter_gif_frames(data)]

@@ -26,17 +26,18 @@ Everything is deterministic (RNG-free) — the reference's trap of randomness
 inside geometry code (``DataGen.py:319-333``) is deliberately not
 reproduced.
 
-Parsing uses the stdlib ``html.parser`` (no external deps). Per-document
-parsing is an irreducible Python loop, but it runs inside an Arrow batch in
-``mapInPandas`` — the scoring over the resulting node table is vectorized
-NumPy across the whole batch.
+Tag scanning is one compiled regex (``kernels.html_scan``, no external
+deps) driving ``_Tokenizer``'s handlers. Per-document parsing is an
+irreducible Python loop, but it runs inside an Arrow batch in
+``mapInPandas``, and it hands back one list per node field, so scoring
+builds its NumPy arrays straight from those columns.
 """
 
 from __future__ import annotations
 
 import re
 from dataclasses import dataclass, field
-from html.parser import HTMLParser
+from operator import itemgetter
 
 import numpy as np
 
@@ -45,6 +46,14 @@ from ocr_spark.config import (
     BLOCK_THRESH,
     MAX_NODES_PER_PAGE,
     SCORE_THRESH,
+)
+from ocr_spark.kernels.charset import decode_html
+from ocr_spark.kernels.html_scan import scan
+
+# The node columns ``tokenize_html`` returns, one list per field.
+NODE_FIELDS = (
+    "node_id", "tag", "depth", "text", "text_len", "link_text_len",
+    "n_tags", "n_links", "span_start", "span_end", "negative", "attr_pos",
 )
 
 # Tags whose entire subtree is dropped (never text content). Form
@@ -168,16 +177,15 @@ class _Elem:
     is_pre: bool
 
 
-class _Tokenizer(HTMLParser):
-    """Single-pass DOM flattener: emits one record per block container that
+class _Tokenizer:
+    """Single-pass DOM flattener: emits one row per block container that
     holds *direct* (non-nested-block) text. Nesting can therefore never
-    duplicate text across records — a div's record carries only text not
+    duplicate text across rows — a div's row carries only text not
     claimed by a nested block, the span-domain equivalent of the reference
     emitting disjoint pixel contours (``DetectUtil.py:156-169``)."""
 
     def __init__(self) -> None:
-        super().__init__(convert_charrefs=True)
-        self.records: list[dict] = []
+        self.rows: list[tuple] = []
         self._elems: list[_Elem] = []
         # open-element count per tag: a close tag that matches no open
         # element is rejected in O(1) instead of by a walk of _elems
@@ -363,9 +371,9 @@ class _Tokenizer(HTMLParser):
             blk.link_parts.append(data)
         self._text_pos += len(data)
 
-    # -- record emission --------------------------------------------------
+    # -- row emission -----------------------------------------------------
     def _emit(self, blk: _Block) -> None:
-        if len(self.records) >= MAX_NODES_PER_PAGE:
+        if len(self.rows) >= MAX_NODES_PER_PAGE:
             return
         if blk.pre:
             # verbatim interior; the newline hugging the start tag and any
@@ -378,70 +386,58 @@ class _Tokenizer(HTMLParser):
             if not text:
                 return
         link_text = _WS_RE.sub(" ", "".join(blk.link_parts)).strip()
-        self.records.append(
-            {
-                "tag": blk.tag,
-                "depth": blk.depth,
-                "text": text,
-                "text_len": len(text),
-                "link_text_len": len(link_text),
-                "n_tags": blk.n_tags,
-                "n_links": blk.n_links,
-                "first_pos": blk.first_pos,
-                "negative": blk.negative,
-                "attr_pos": blk.attr_pos,
-            }
+        self.rows.append(
+            (
+                blk.first_pos, blk.tag, blk.depth, text, len(text),
+                len(link_text), blk.n_tags, blk.n_links, blk.negative,
+                blk.attr_pos,
+            )
         )
 
-    def finish(self) -> list[dict]:
+    def finish(self) -> dict[str, list]:
         while self._elems:
             self._pop_elem()
         while self._blocks:
             self._emit(self._blocks.pop())
+        if not self.rows:
+            return {k: [] for k in NODE_FIELDS}
         # document (reading) order = position of first text chunk — the
         # linear-text analog of the reference's (y, x) reading-order sort
         # (/root/reference/DetectUtil.py:201-203).
-        self.records.sort(key=lambda r: r["first_pos"])
-        cursor = 0
-        for nid, r in enumerate(self.records):
-            r["node_id"] = nid
-            r["span_start"] = cursor
-            r["span_end"] = cursor + r["text_len"]
-            cursor = r["span_end"] + 1
-            del r["first_pos"]
-        return self.records
+        self.rows.sort(key=itemgetter(0))
+        _, tag, depth, text, text_len, link_len, n_tags, n_links, neg, pos = map(
+            list, zip(*self.rows)
+        )
+        span_start, span_end, cursor = [], [], 0
+        for n in text_len:
+            span_start.append(cursor)
+            span_end.append(cursor + n)
+            cursor += n + 1
+        return dict(zip(NODE_FIELDS, (
+            list(range(len(tag))), tag, depth, text, text_len, link_len,
+            n_tags, n_links, span_start, span_end, neg, pos,
+        )))
 
 
-def tokenize_html(html_bytes: bytes | str, fast: bool = True) -> list[dict]:
-    """Parse one document's HTML into flattened block-node records, in
-    document reading order.
-
-    ``fast=True`` (production default) drives the handlers with the
-    C-regex scanner (``kernels.html_scan``, ~3× per-doc); ``fast=False``
-    uses stdlib ``html.parser`` — kept as the independent reference
-    implementation for the differential test.
+def tokenize_html(html_bytes: bytes | str) -> dict[str, list]:
+    """Parse one document's HTML into flattened block-node columns, in
+    document reading order: a dict of one list per ``NODE_FIELDS`` key
+    (node_id, tag, depth, text, text_len, link_text_len, n_tags, n_links,
+    span_start, span_end, negative, attr_pos), every list one entry per
+    node. Bytes are charset-sniffed by ``decode_html``; an empty page, or
+    one that fails to parse, gives empty lists.
     """
-    if isinstance(html_bytes, (bytes, bytearray)):
-        from ocr_spark.kernels.charset import decode_html
-
-        html_text = decode_html(html_bytes)
-    else:
-        html_text = html_bytes
+    is_bytes = isinstance(html_bytes, (bytes, bytearray))
+    html_text = decode_html(html_bytes) if is_bytes else html_bytes
     tok = _Tokenizer()
     try:
-        if fast:
-            from ocr_spark.kernels.html_scan import scan
-
-            scan(html_text, tok)
-        else:
-            tok.feed(html_text)
-            tok.close()
+        scan(html_text, tok)
     except Exception:
         # One poisonous document must not kill a 10^12-doc job's task, but a
         # SILENT PARTIAL result would break the byte-identical contract
         # undetectably — so a parse failure yields an EMPTY extraction
         # (n_blocks=0), a clean signal downstream metrics can count.
-        return []
+        return {k: [] for k in NODE_FIELDS}
     return tok.finish()
 
 
@@ -490,34 +486,29 @@ def score_nodes(
     return score
 
 
-def extract_main_text(
-    html_bytes: bytes | str,
-    with_stats: bool = False,
-):
+def extract_main_text(html_bytes: bytes | str):
     """Full per-document extraction: tokenize → score → threshold → assemble.
 
-    Returns ``(text, spans, n_blocks)`` where ``spans`` are char offsets of
-    each retained block inside the returned text (separator-aware), matching
-    the output contract D12 (``/root/reference/test_img.py:127-132`` emits
-    one ``coords,text`` row per retained box; we emit the joined text plus
-    per-block spans). With ``with_stats=True`` a fourth element is appended:
-    ``(total_chars, kept_chars)`` — the char mass of ALL block nodes vs the
-    retained ones, from which the per-document boilerplate ratio derives
-    (an extraction-confidence signal the sink can carry at no extra parse
-    cost; both sums are over text already in memory).
+    Returns ``(text, spans, n_blocks, (total_chars, kept_chars))``.
+    ``spans`` are char offsets of each retained block inside the returned
+    text (separator-aware), matching the output contract D12 (the
+    reference's ``test_img.py:127-132`` emits one ``coords,text`` row per
+    retained box; we emit the joined text plus per-block spans).
+    ``(total_chars, kept_chars)`` is the char mass of ALL block nodes vs
+    the retained ones, from which the per-document boilerplate ratio
+    derives (an extraction-confidence signal the sink can carry at no
+    extra parse cost; both sums are over text already in memory). An empty
+    page gives ``("", [], 0, (0, 0))``.
     """
-    records = tokenize_html(html_bytes)
-    if not records:
-        return ("", [], 0, (0, 0)) if with_stats else ("", [], 0)
-    tags_a = np.array([r["tag"] for r in records], dtype=object)
-    depths = np.array([r["depth"] for r in records], dtype=np.int64)
-    tl = np.array([r["text_len"] for r in records], dtype=np.float64)
-    ll = np.array([r["link_text_len"] for r in records], dtype=np.float64)
-    neg = np.array([r["negative"] for r in records], dtype=bool)
-    scores = score_nodes(
-        tags_a, tl, ll, neg,
-        np.array([r["attr_pos"] for r in records], dtype=bool),
-    )
+    cols = tokenize_html(html_bytes)
+    if not cols["tag"]:
+        return ("", [], 0, (0, 0))
+    tags_a = np.array(cols["tag"], dtype=object)
+    depths = np.array(cols["depth"], dtype=np.int64)
+    tl = np.array(cols["text_len"], dtype=np.float64)
+    ll = np.array(cols["link_text_len"], dtype=np.float64)
+    neg = np.array(cols["negative"], dtype=bool)
+    scores = score_nodes(tags_a, tl, ll, neg, np.array(cols["attr_pos"], dtype=bool))
     keep = scores >= SCORE_THRESH
     link_density = np.where(tl > 0, ll / np.maximum(tl, 1.0), 0.0)
     if not keep.any():
@@ -577,7 +568,7 @@ def extract_main_text(
                 break
             keep |= rescued
             cand &= ~rescued
-    texts = [records[i]["text"] for i in np.flatnonzero(keep)]
+    texts = [cols["text"][i] for i in np.flatnonzero(keep)]
     spans: list[tuple[int, int]] = []
     cursor = 0
     for i, t in enumerate(texts):
@@ -585,9 +576,5 @@ def extract_main_text(
             cursor += len(BLOCK_SEPARATOR)
         spans.append((cursor, cursor + len(t)))
         cursor += len(t)
-    result = (BLOCK_SEPARATOR.join(texts), spans, len(texts))
-    if with_stats:
-        total_chars = int(tl.sum())
-        kept_chars = int(tl[keep].sum())
-        return (*result, (total_chars, kept_chars))
-    return result
+    chars = (int(tl.sum()), int(tl[keep].sum()))
+    return (BLOCK_SEPARATOR.join(texts), spans, len(texts), chars)

@@ -1,15 +1,15 @@
-"""Fast HTML tag scanner: regex-driven replacement for html.parser's
-``goahead`` loop.
+"""HTML tag scanner: the one event source for ``kernels.html._Tokenizer``.
 
-Profiling the extraction kernel showed ~75% of per-document time inside
-stdlib ``html.parser`` dispatch (``goahead``/``parse_starttag``/
-``updatepos``), not in our handlers. This scanner walks the byte stream
-with a single compiled regex (C-speed ``finditer``), handles CDATA
-containers (script/style — raw text until the literal close tag, matching
-html.parser's semantics) and comments, and drives the SAME ``_Tokenizer``
-handler methods — so the record stream is identical by construction and
-verified by a differential test against the stdlib path
-(``tests/test_html_fast.py``).
+It replaces stdlib ``html.parser``'s ``goahead`` loop, where profiling
+once found ~75% of per-document time (``goahead``/``parse_starttag``/
+``updatepos`` dispatch, not our handlers). This scanner walks the text
+with a single compiled regex (C-speed search), handles CDATA containers
+(script/style — raw text until the literal close tag, matching
+html.parser's semantics) and comments, and calls the tokenizer's
+``handle_*`` methods with html.parser's event signatures. The stdlib
+parser survives only as the test-side reference: ``stdlib_tokenize`` in
+``tests/test_html_fast.py`` drives the same handlers from an
+``HTMLParser``, and the differential tests require equal node columns.
 
 The reference's analogous move is ``@tf.function`` graph compilation of
 its eager ops (``/root/reference/Module/DetectBackbone.py:21-23``): same

@@ -65,9 +65,7 @@ def _extract_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     for pdf in batches:
         texts, spans_col, n_blocks, bp_ratio = [], [], [], []
         for html in pdf["html"]:
-            text, spans, nb, (total, kept) = extract_main_text(
-                html, with_stats=True
-            )
+            text, spans, nb, (total, kept) = extract_main_text(html)
             texts.append(text)
             spans_col.append([{"start": s, "end": e} for s, e in spans])
             n_blocks.append(nb)

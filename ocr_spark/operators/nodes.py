@@ -18,7 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 
-from ocr_spark.kernels.html import score_nodes, tokenize_html
+from ocr_spark.kernels.html import NODE_FIELDS, score_nodes, tokenize_html
 
 NODE_SCHEMA = T.StructType(
     [
@@ -40,32 +40,23 @@ NODE_SCHEMA = T.StructType(
 
 
 def _tokenize_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    col_keys = (
-        "node_id", "tag", "depth", "text", "text_len", "link_text_len",
-        "n_tags", "n_links", "span_start", "span_end", "negative",
-    )
     for pdf in batches:
-        # parse every doc in the batch, concatenating node records; column
-        # extraction is one comprehension per key over the record list (a
-        # struct-of-arrays transpose), not per-row dict appends
-        recs: list[dict] = []
-        urls: list[str] = []
+        # parse every doc in the batch, extending one list per node field
+        rows: dict[str, list] = {k: [] for k in ("url", *NODE_FIELDS)}
         for url, html in zip(pdf["url"], pdf["html"]):
-            rs = tokenize_html(html)
-            recs.extend(rs)
-            urls.extend([url] * len(rs))
-        if not recs:
+            cols = tokenize_html(html)
+            for k in NODE_FIELDS:
+                rows[k].extend(cols[k])
+            rows["url"].extend([url] * len(cols["node_id"]))
+        if not rows["url"]:
             continue
-        rows: dict[str, list] = {"url": urls}
-        for k in col_keys:
-            rows[k] = [r[k] for r in recs]
         # vectorized scoring across ALL nodes of the batch at once
         scores = score_nodes(
             np.array(rows["tag"], dtype=object),
             np.array(rows["text_len"], dtype=np.int64),
             np.array(rows["link_text_len"], dtype=np.int64),
             np.array(rows["negative"], dtype=bool),
-            np.fromiter((r["attr_pos"] for r in recs), dtype=bool, count=len(recs)),
+            np.array(rows.pop("attr_pos"), dtype=bool),
         )
         rows["score"] = scores.tolist()
         yield pd.DataFrame(rows)

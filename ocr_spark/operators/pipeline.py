@@ -39,29 +39,53 @@ from ocr_spark.config import BLOCK_SEPARATOR, LINE_HEIGHT, MAX_LINE_WIDTH
 from ocr_spark.kernels.image import decode_gray
 from ocr_spark.operators.extract_ocr import _check_recognizer, _recognize_fn
 
-# embedded-line detector: the stand-in for the reference's detection head
-# over image content (score map → boxes); here lines announce themselves
-# via the data-strip attribute written by the fixture generator, a base64
-# image container (PNG, JPEG or GIF). Strips of any height are resampled
-# through ``normalize_strip`` (the RoIRotate analog: arbitrary-height crop
-# → fixed 8×⌈8w/h⌉ pad-384 geometry,
-# ``/root/reference/Module/RRotateLayer.py:94-107``).
-_IMG_RE = re.compile(
-    r'<img[^>]*?data-width="(\d+)"[^>]*?data-strip="([A-Za-z0-9+/=]*)"'
-)
+_WIDTH_RE = re.compile(r'data-width="(\d+)"')
+_STRIP_RE = re.compile(r'data-strip="([A-Za-z0-9+/=]*)"')
 _EMPTY_STRIP = np.zeros((LINE_HEIGHT, MAX_LINE_WIDTH), np.float32)
 _EMPTY_RASTER = np.zeros((0, 0), np.float32)
 
 
+def _img_strips(html_text: str):
+    """Yield (width, payload) per ``<img`` tag holding ``data-width="W"``
+    then ``data-strip="B64"`` (a base64 PNG, JPEG or GIF line written by
+    the fixture generator) before its first ``>``: the stand-in for the
+    reference's detection head over image content. Forward-only cursors
+    on the next ``>``, width and strip keep the scan linear on ``<img``
+    soup, where a lazy regex over the tag backtracks cubically."""
+    find, n = html_text.find, len(html_text)
+    none = (n + 1, n + 1, "")  # no match at or after any later position
+    gt, w, s = -1, (-1, -1, ""), (-1, -1, "")
+    p = find("<img")
+    while p >= 0:
+        a = p + 4
+        if gt < a:
+            gt = find(">", a)
+            gt = n if gt < 0 else gt
+        if w[0] < a:
+            m = _WIDTH_RE.search(html_text, a)
+            w = (m.start(), m.end(), m.group(1)) if m else none
+        if w[0] < gt:
+            if s[0] < w[1]:
+                m = _STRIP_RE.search(html_text, w[1])
+                s = (m.start(), m.end(), m.group(1)) if m else none
+            if s[0] < gt:
+                yield int(w[2]), s[2]
+                p = find("<img", s[1])
+                continue
+        p = find("<img", p + 1)
+
+
 def _lines_of_doc(html_text: str):
     """Yield (line_id, strip, width) for every embedded line of ONE decoded
-    document (malformed payloads are skipped, never crash a task)."""
+    document (malformed payloads are skipped, never crash a task). Strips
+    of any height are resampled through ``normalize_strip`` (the RoIRotate
+    analog: arbitrary-height crop → fixed 8×⌈8w/h⌉ pad-384 geometry, the
+    reference's ``Module/RRotateLayer.py:94-107``)."""
     from ocr_spark.kernels.ocr import normalize_strip
 
-    for i, m in enumerate(_IMG_RE.finditer(html_text)):
-        width = int(m.group(1))
+    for i, (width, b64) in enumerate(_img_strips(html_text)):
         try:
-            payload = base64.b64decode(m.group(2))
+            payload = base64.b64decode(b64)
             # an empty payload is a zero-size raster (the slot rule below)
             img = decode_gray(payload) if payload else _EMPTY_RASTER
         except (ValueError, zlib.error):
@@ -114,7 +138,7 @@ def _fused_stage(recognizer: str):
             parts, owners, strips, widths = [], [], [], []
             for doc, html in enumerate(pdf["html"]):
                 decoded = decode_html(bytes(html))
-                block_text, _, _ = extract_main_text(decoded)
+                block_text = extract_main_text(decoded)[0]
                 parts.append([block_text] if block_text else [])
                 for _i, strip, width in _lines_of_doc(decoded):
                     owners.append(doc)

@@ -7,6 +7,7 @@ import datetime
 import gc
 import math
 import os
+import re
 import statistics
 import subprocess
 import sys
@@ -23,7 +24,9 @@ from hypothesis import strategies as st
 from ocr_spark.kernels.html import tokenize_html
 from ocr_spark.kernels.jpeg import decode_jpeg, encode_jpeg
 from ocr_spark.operators.extract_html import extract_pages
+from ocr_spark.operators.pipeline import _img_strips, _lines_of_doc
 from ocr_spark.sources.pages import PAGES_SCHEMA
+from tests.test_html_fast import stdlib_tokenize
 
 TS = datetime.datetime(2024, 1, 1)
 
@@ -168,11 +171,11 @@ def test_phantom_empty_payload_with_declared_width_is_skipped(spark):
 @given(st.binary(min_size=0, max_size=600))
 def test_fuzz_extract_main_text_never_raises(data):
     """The extractor runs over raw crawl bytes — arbitrary input must
-    yield (str, spans, int), never an exception (one hostile page must
-    not kill a 10^12-document task)."""
+    yield (str, spans, int, char counts), never an exception (one hostile
+    page must not kill a 10^12-document task)."""
     from ocr_spark.kernels.html import extract_main_text
 
-    text, spans, n_blocks = extract_main_text(data)
+    text, spans, n_blocks, _ = extract_main_text(data)
     assert isinstance(text, str) and isinstance(n_blocks, int)
 
 
@@ -183,7 +186,7 @@ def test_fuzz_extract_main_text_unicode_soup(fragment):
     from ocr_spark.kernels.html import extract_main_text
 
     html = f"<body><main><article><p>{fragment}</p></article></main></body>"
-    text, spans, n_blocks = extract_main_text(html.encode("utf-8"))
+    text, spans, n_blocks, _ = extract_main_text(html.encode("utf-8"))
     assert isinstance(text, str)
 
 
@@ -226,17 +229,64 @@ def _assert_near_linear(fn, small, large, reps=7, min_sample_s=0.05):
     assert statistics.median(ratios) < 6, (calls, sorted(ratios))
 
 
-@pytest.mark.parametrize("fast", [True, False])
-def test_stray_close_tags_over_deep_stack_scale_linearly(fast):
+def _stray_closes(n):
+    return "<body>" + "<div>" * n + "x" + "</span>" * n + "</body>"
+
+
+@pytest.mark.parametrize(
+    "fast,page",
+    [
+        (True, _stray_closes),
+        (False, _stray_closes),
+        (True, lambda n: "<a" * n),
+        (True, lambda n: "<a>" * n),
+        (True, lambda n: '<div class="' + "<p>x</p>" * n),
+        (True, lambda n: "<!--" * n),
+        (True, lambda n: "</" * n),
+    ],
+    ids=["True", "False", "a_soup", "a_tag_soup", "open_class_quote", "comment_soup", "close_soup"],
+)
+def test_stray_close_tags_over_deep_stack_scale_linearly(fast, page):
     """Every close tag that matches no open element is rejected without
-    walking the open-element stack."""
+    walking the open-element stack, whether the regex scanner (True) or
+    the stdlib reference parser (False) drives the handlers. The other
+    hostile soups, markup that never closes (an unterminated tag, quote
+    or comment) or never opens a block, are scanned once, not rescanned
+    from every ``<``."""
+    tokenize = tokenize_html if fast else stdlib_tokenize
+    _assert_near_linear(tokenize, page(2000).encode(), page(8000).encode())
 
-    def page(n):
-        return ("<body>" + "<div>" * n + "x" + "</span>" * n + "</body>").encode()
 
-    _assert_near_linear(
-        lambda html: tokenize_html(html, fast=fast), page(2000), page(8000)
-    )
+# The backtracking regex ``_img_strips`` replaced: the reference semantics.
+_IMG_RE = re.compile(
+    r'<img[^>]*?data-width="(\d+)"[^>]*?data-strip="([A-Za-z0-9+/=]*)"'
+)
+_IMG_SOUP = st.lists(
+    st.sampled_from(
+        [
+            "<img", "<img ", 'data-width="', 'data-width="12"', 'data-width="3"',
+            "7", '"', 'data-strip="', 'data-strip="QUJD"', 'data-strip=""',
+            "QUJD", ">", " ", "x", "<", "=", "data-",
+        ]
+    ),
+    max_size=40,
+).map("".join)
+
+
+@settings(max_examples=500, deadline=None)
+@given(_IMG_SOUP)
+def test_img_strips_match_backtracking_regex(soup):
+    ref = [(int(m.group(1)), m.group(2)) for m in _IMG_RE.finditer(soup)]
+    assert list(_img_strips(soup)) == ref
+
+
+@pytest.mark.parametrize(
+    "unit,n", [('<img data-width="1" ', 50), ("<img ", 500)], ids=["width_soup", "img_soup"]
+)
+def test_img_strip_scan_scales_linearly(unit, n):
+    """``<img`` soup whose tags never carry a strip: a backtracking
+    regex is cubic on the first shape and quadratic on the second."""
+    _assert_near_linear(lambda html: list(_lines_of_doc(html)), unit * n, unit * 4 * n)
 
 
 @pytest.mark.parametrize("progressive", [False, True])

@@ -15,14 +15,14 @@ def test_utf8_bom():
     raw = codecs.BOM_UTF8 + PAGE.format(CONTENT).encode("utf-8")
     assert sniff_charset(raw) == "utf-8-sig"
     assert CONTENT in decode_html(raw)
-    text, _, _ = extract_main_text(raw)
+    text, _, _, _ = extract_main_text(raw)
     assert text.startswith(CONTENT)
 
 
 def test_utf16_le_bom():
     raw = codecs.BOM_UTF16_LE + PAGE.format(CONTENT).encode("utf-16-le")
     assert sniff_charset(raw) == "utf-16-le"
-    text, _, _ = extract_main_text(raw)
+    text, _, _, _ = extract_main_text(raw)
     assert text.startswith(CONTENT)
 
 
@@ -33,7 +33,7 @@ def test_meta_charset_windows1252():
         f"<body><p>{body}</p></body></html>"
     ).encode("windows-1252")
     assert sniff_charset(doc) == "windows-1252"
-    text, _, _ = extract_main_text(doc)
+    text, _, _, _ = extract_main_text(doc)
     assert "café naïve résumé" in text
 
 
@@ -44,7 +44,7 @@ def test_meta_http_equiv_latin1_maps_to_cp1252():
         "<body><p>plain ascii words survive any single byte codec fine</p></body>"
     ).encode("latin-1")
     assert sniff_charset(doc) == "windows-1252"
-    text, _, _ = extract_main_text(doc)
+    text, _, _, _ = extract_main_text(doc)
     assert "plain ascii words" in text
 
 
@@ -54,20 +54,20 @@ def test_gb2312_alias():
         "<body><p>中文网页的正文内容应当完整地被抽取出来并且不会乱码</p></body>"
     ).encode("gb18030")
     assert sniff_charset(doc) == "gb18030"
-    text, _, _ = extract_main_text(doc)
+    text, _, _, _ = extract_main_text(doc)
     assert "中文网页的正文内容" in text
 
 
 def test_bogus_declared_charset_falls_back():
     doc = b'<head><meta charset="totally-bogus-enc"></head><body><p>fallback path words here stay</p></body>'
     assert sniff_charset(doc) == "utf-8"
-    text, _, _ = extract_main_text(doc)
+    text, _, _, _ = extract_main_text(doc)
     assert "fallback path words" in text
 
 
 def test_undecodable_bytes_never_raise():
     doc = b'<meta charset="utf-8"><body><p>broken \xff\xfe\xfa bytes inside the text</p></body>'
-    text, _, _ = extract_main_text(doc)
+    text, _, _, _ = extract_main_text(doc)
     assert "broken" in text and "bytes inside" in text
 
 
@@ -75,7 +75,7 @@ def test_meta_utf16_label_maps_to_utf8():
     # WHATWG: a readable meta proves the doc is not utf-16
     doc = b'<meta charset="utf-16"><body><p>Hello world stays readable text here</p></body>'
     assert sniff_charset(doc) == "utf-8"
-    text, _, _ = extract_main_text(doc)
+    text, _, _, _ = extract_main_text(doc)
     assert "Hello world" in text
 
 
@@ -85,7 +85,7 @@ def test_commented_out_meta_is_ignored():
         b"<body><p>caf\xc3\xa9 real declaration wins over the commented one</p></body>"
     )
     assert sniff_charset(doc) == "utf-8"
-    text, _, _ = extract_main_text(doc)
+    text, _, _, _ = extract_main_text(doc)
     assert "café" in text
 
 

@@ -12,10 +12,14 @@ import pytest
 from ocr_spark.kernels.gif import (
     _lzw_decode,
     _lzw_encode,
-    decode_gif,
     encode_gif,
     iter_gif_frames,
 )
+
+
+def _all_frames(data):
+    """All composited frames of a GIF, materialized from the lazy iterator."""
+    return [frame for _, frame in iter_gif_frames(data)]
 
 
 def _rng(seed=0):
@@ -27,7 +31,7 @@ def _rng(seed=0):
 )
 def test_roundtrip_gray(shape):
     frames = _rng(3).integers(0, 256, shape, np.uint8)
-    back = decode_gif(encode_gif(frames))
+    back = _all_frames(encode_gif(frames))
     assert len(back) == shape[0]
     for f, rgb in zip(frames, back):
         for c in range(3):  # identity gray palette: all channels equal
@@ -38,7 +42,7 @@ def test_roundtrip_custom_palette_and_interlace():
     pal = _rng(1).integers(0, 256, (256, 3), np.uint8)
     idx = _rng(2).integers(0, 256, (1, 29, 17), np.uint8)
     for interlace in (False, True):
-        rgb, = decode_gif(encode_gif(idx, palette=pal, interlace=interlace))
+        rgb, = _all_frames(encode_gif(idx, palette=pal, interlace=interlace))
         np.testing.assert_array_equal(rgb, pal[idx[0]])
 
 
@@ -46,7 +50,7 @@ def test_lzw_dictionary_reset_path():
     """>4096 dictionary entries forces the encoder's clear-code reset and
     the decoder's table rebuild — random data at 100x100 overflows."""
     f = _rng(7).integers(0, 256, (1, 100, 100), np.uint8)
-    np.testing.assert_array_equal(decode_gif(encode_gif(f))[0][:, :, 0], f[0])
+    np.testing.assert_array_equal(_all_frames(encode_gif(f))[0][:, :, 0], f[0])
 
 
 def test_lzw_kwkwk_case():
@@ -86,7 +90,7 @@ def test_animation_composition_transparency_and_disposal():
     out += image_block(patch, 2, 2, 4, 4)
     out.append(0x3B)
 
-    frames = decode_gif(bytes(out))
+    frames = _all_frames(bytes(out))
     assert len(frames) == 2
     assert frames[0][0, 0, 0] == 10
     f2 = frames[1][:, :, 0]
@@ -109,7 +113,7 @@ def test_hostile_headers_fail_closed():
     bad = bytearray(encode_gif(np.zeros((1, 4, 4), np.uint8)))
     struct.pack_into("<HH", bad, 6, 65535, 65535)
     with pytest.raises(ValueError, match="hostile|refusing"):
-        decode_gif(bytes(bad))
+        _all_frames(bytes(bad))
     # frame rectangle outside the screen (descriptor sits at the fixed
     # offset 6 header + 7 LSD + 768 GCT for a single-frame file; byte
     # 0x2C also occurs INSIDE the gray palette, so no index() search)
@@ -118,7 +122,7 @@ def test_hostile_headers_fail_closed():
     assert bad[pos] == 0x2C
     struct.pack_into("<HH", bad, pos + 1, 3, 3)  # x,y offset pushes out
     with pytest.raises(ValueError, match="rectangle"):
-        decode_gif(bytes(bad))
+        _all_frames(bytes(bad))
 
 
 def test_fuzz_single_byte_corruption_never_crashes():
@@ -130,7 +134,7 @@ def test_fuzz_single_byte_corruption_never_crashes():
         b = bytearray(base)
         b[rng.integers(6, len(b))] ^= 1 << rng.integers(0, 8)
         try:
-            decode_gif(bytes(b))
+            _all_frames(bytes(b))
         except ValueError:
             pass
 
@@ -139,7 +143,7 @@ def test_truncation_fail_closed():
     base = encode_gif(_rng(4).integers(0, 256, (1, 8, 8), np.uint8))
     for cut in (7, 12, 20, len(base) // 2, len(base) - 2):
         try:
-            decode_gif(base[:cut])
+            _all_frames(base[:cut])
         except ValueError:
             pass
 

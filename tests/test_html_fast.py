@@ -1,16 +1,35 @@
 """Differential test: regex scanner vs stdlib html.parser tokenizer.
 
-The fast scanner must produce byte-identical node records on every
+The scanner must produce byte-identical node columns on every
 well-formed fixture; on garbage input it must not crash and must be
 deterministic (run-twice identical)."""
 
 from __future__ import annotations
 
+from html.parser import HTMLParser
+
 import duckdb
 import pytest
 
-from ocr_spark.kernels.html import extract_main_text, tokenize_html
+from ocr_spark.kernels.charset import decode_html
+from ocr_spark.kernels.html import _Tokenizer, extract_main_text, tokenize_html
 from ocr_spark.kernels.synth import url_for_doc, wrap_html
+
+
+def stdlib_tokenize(html: bytes | str) -> dict[str, list]:
+    """The reference tokenizer: stdlib ``html.parser`` drives the same
+    ``_Tokenizer`` handlers that ``html_scan.scan`` drives in production."""
+    if isinstance(html, (bytes, bytearray)):
+        html = decode_html(html)
+    tok = _Tokenizer()
+    parser = HTMLParser(convert_charrefs=True)
+    parser.handle_starttag = tok.handle_starttag
+    parser.handle_startendtag = tok.handle_startendtag
+    parser.handle_endtag = tok.handle_endtag
+    parser.handle_data = tok.handle_data
+    parser.feed(html)
+    parser.close()
+    return tok.finish()
 
 CASES = [
     "<body><p>plain paragraph with enough words to be a real content block</p></body>",
@@ -37,7 +56,7 @@ CASES = [
 @pytest.mark.parametrize("i", range(len(CASES)))
 def test_differential_cases(i):
     html = CASES[i]
-    assert tokenize_html(html, fast=True) == tokenize_html(html, fast=False)
+    assert tokenize_html(html) == stdlib_tokenize(html)
 
 
 def test_differential_synth_suite():
@@ -48,8 +67,8 @@ def test_differential_synth_suite():
     for doc_id, text, source in rows:
         for n_par in (1, 3):
             html = wrap_html(text, url_for_doc(doc_id, source), n_paragraphs=n_par)
-            fast = tokenize_html(html, fast=True)
-            ref = tokenize_html(html, fast=False)
+            fast = tokenize_html(html)
+            ref = stdlib_tokenize(html)
             assert fast == ref, f"doc {doc_id} n_par {n_par}"
 
 

@@ -13,7 +13,7 @@ from ocr_spark.kernels.synth import url_for_doc, wrap_html
 
 def test_single_paragraph_roundtrip():
     t = "the quick brown fox jumps over the lazy dog again and again"
-    got, spans, nb = extract_main_text(wrap_html(t, url_for_doc(1)))
+    got, spans, nb, _ = extract_main_text(wrap_html(t, url_for_doc(1)))
     assert got == t
     assert nb == 1 and spans == [(0, len(t))]
 
@@ -30,7 +30,7 @@ def test_roundtrip_many_urls_deterministic():
 
 def test_multi_paragraph_separator_policy():
     words = " ".join(f"w{i}" for i in range(60))
-    got, spans, nb = extract_main_text(wrap_html(words, url_for_doc(3), n_paragraphs=3))
+    got, spans, nb, _ = extract_main_text(wrap_html(words, url_for_doc(3), n_paragraphs=3))
     assert nb == 3
     parts = got.split(BLOCK_SEPARATOR)
     assert len(parts) == 3
@@ -46,20 +46,20 @@ def test_script_style_comments_stripped():
         "<script>drop('this');</script><style>p{color:red}</style>"
         "<!-- a comment --><noscript>nope</noscript></body></html>"
     )
-    got, _, nb = extract_main_text(html)
+    got, _, nb, _ = extract_main_text(html)
     assert got == "keep this sentence of adequate length here"
     assert nb == 1
 
 
 def test_entities_unescaped():
     html = "<p>a &amp; b &lt;c&gt; caf&eacute; long enough text ok</p>"
-    got, _, _ = extract_main_text(html)
+    got, _, _, _ = extract_main_text(html)
     assert got == "a & b <c> café long enough text ok"
 
 
 def test_unicode_cjk_and_combining():
     t = "汉字内容测试 with mixed ascii and 더 많은 텍스트 plus étude words"
-    got, _, _ = extract_main_text(f"<article><p>{t}</p></article>")
+    got, _, _, _ = extract_main_text(f"<article><p>{t}</p></article>")
     assert got == t  # no unicode normalization applied — bytes preserved
 
 
@@ -68,7 +68,7 @@ def test_nested_blocks_no_duplication():
         "<div>outer direct text that is long enough to score well here"
         "<p>inner paragraph also long enough to score well indeed</p></div>"
     )
-    got, _, nb = extract_main_text(html)
+    got, _, nb, _ = extract_main_text(html)
     # both blocks retained, each text appears exactly once
     assert got.count("outer direct text") == 1
     assert got.count("inner paragraph") == 1
@@ -81,7 +81,7 @@ def test_reading_order_is_document_order():
         "<div>middle direct div text long enough to be kept around here too</div>"
         "<p>last paragraph with plenty of words to retain too</p></div>"
     )
-    got, _, _ = extract_main_text(html)
+    got, _, _, _ = extract_main_text(html)
     i1 = got.index("first")
     i2 = got.index("middle")
     i3 = got.index("last")
@@ -95,7 +95,7 @@ def test_nav_footer_aside_dropped():
         "<aside><p>aside paragraph long enough to otherwise score fine</p></aside>"
         "<footer><p>footer paragraph long enough to otherwise score fine</p></footer></body>"
     )
-    got, _, nb = extract_main_text(html)
+    got, _, nb, _ = extract_main_text(html)
     assert got == "real content paragraph long enough to be retained ok"
     assert nb == 1
 
@@ -106,49 +106,49 @@ def test_negative_class_patterns_dropped():
         "<p>the genuine article content with lots of words here</p>"
         '<div class="share social"><p>share buttons text long enough to score</p></div>'
     )
-    got, _, _ = extract_main_text(html)
+    got, _, _, _ = extract_main_text(html)
     assert got == "the genuine article content with lots of words here"
 
 
 def test_link_dense_block_dropped():
     links = "".join(f'<a href="/{i}">link text {i}</a> ' for i in range(10))
     html = f"<div>{links}</div><p>body text with enough words to be retained</p>"
-    got, _, _ = extract_main_text(html)
+    got, _, _, _ = extract_main_text(html)
     assert got == "body text with enough words to be retained"
 
 
 def test_empty_main_edge_case():
     html = "<html><body><nav><a href='/'>Home</a></nav></body></html>"
-    got, spans, nb = extract_main_text(html)
+    got, spans, nb, _ = extract_main_text(html)
     assert got == "" and spans == [] and nb == 0
 
 
 def test_empty_and_garbage_inputs():
-    assert extract_main_text(b"") == ("", [], 0)
+    assert extract_main_text(b"") == ("", [], 0, (0, 0))
     assert extract_main_text(b"\x80\x81 not html at all")[2] in (0, 1)
-    got, _, _ = extract_main_text("plain text no tags but long enough to retain maybe")
+    got, _, _, _ = extract_main_text("plain text no tags but long enough to retain maybe")
     # stray top-level text is captured by the implicit body block
     assert "plain text" in got
 
 
 def test_malformed_html_tolerated():
     html = "<div><p>unclosed paragraph long enough to retain easily here<div><b>x</div>"
-    got, _, _ = extract_main_text(html)
+    got, _, _, _ = extract_main_text(html)
     assert "unclosed paragraph" in got
 
 
 def test_whitespace_collapse_policy():
     html = "<p>a  b\tc\nd   e plus padding words to clear the length bar</p>"
-    got, _, _ = extract_main_text(html)
+    got, _, _, _ = extract_main_text(html)
     assert got == "a b c d e plus padding words to clear the length bar"
 
 
 def test_inline_whitespace_between_anchors_preserved():
     html = '<p><a href="/a">Alpha</a> <a href="/b">Beta</a> gamma delta epsilon zeta eta</p>'
     recs = tokenize_html(html)
-    assert recs[0]["text"] == "Alpha Beta gamma delta epsilon zeta eta"
+    assert recs["text"][0] == "Alpha Beta gamma delta epsilon zeta eta"
     # inter-anchor whitespace is not link text: "AlphaBeta" = 9 chars
-    assert recs[0]["link_text_len"] == 9
+    assert recs["link_text_len"][0] == 9
 
 
 def test_large_page_node_cap():
@@ -157,8 +157,8 @@ def test_large_page_node_cap():
         for i in range(1500)
     )
     recs = tokenize_html(f"<body>{blocks}</body>")
-    assert len(recs) == 1500  # under MAX_NODES_PER_PAGE, all kept
-    got, _, nb = extract_main_text(f"<body>{blocks}</body>")
+    assert len(recs["node_id"]) == 1500  # under MAX_NODES_PER_PAGE, all kept
+    got, _, nb, _ = extract_main_text(f"<body>{blocks}</body>")
     assert nb == 1500
 
 
@@ -166,9 +166,9 @@ def test_span_offsets_contiguous():
     recs = tokenize_html(
         "<p>alpha beta gamma delta epsilon zeta</p><p>second block of words here</p>"
     )
-    assert recs[0]["span_start"] == 0
-    assert recs[1]["span_start"] == recs[0]["span_end"] + 1
-    assert [r["node_id"] for r in recs] == [0, 1]
+    assert recs["span_start"][0] == 0
+    assert recs["span_start"][1] == recs["span_end"][0] + 1
+    assert recs["node_id"] == [0, 1]
 
 
 def test_score_nodes_vectorized_semantics():
@@ -196,7 +196,7 @@ def test_pre_mode_edges():
     from ocr_spark.kernels.html import extract_main_text, tokenize_html
 
     # negative ancestry wins over pre
-    t, _, _ = extract_main_text(
+    t, _, _, _ = extract_main_text(
         b"<body><nav><pre>chrome code\nnever leaks</pre></nav>"
         b"<main><article><p>Long enough paragraph of real content "
         b"for scoring baseline here.</p></article></main></body>"
@@ -208,8 +208,8 @@ def test_pre_mode_edges():
         b"<body><main><article><pre><div>x = 1\ny = 2</div></pre>"
         b"</article></main></body>"
     )
-    by_tag = {r["tag"]: r for r in recs}
-    assert by_tag["div"]["text"] == "x = 1\ny = 2"
+    by_tag = dict(zip(recs["tag"], recs["text"]))
+    assert by_tag["div"] == "x = 1\ny = 2"
 
     # span-fragmented pre keeps line structure; sibling p still collapses
     recs = tokenize_html(
@@ -219,6 +219,6 @@ def test_pre_mode_edges():
         b"    <span>return</span> 1</pre>"
         b"</article></main></body>"
     )
-    by_tag = {r["tag"]: r for r in recs}
-    assert by_tag["pre"]["text"] == "def f():\n    return 1"
-    assert by_tag["p"]["text"] == "some wrapped paragraph text"
+    by_tag = dict(zip(recs["tag"], recs["text"]))
+    assert by_tag["pre"] == "def f():\n    return 1"
+    assert by_tag["p"] == "some wrapped paragraph text"

@@ -18,7 +18,7 @@ from ocr_spark.kernels.html import extract_main_text
 )
 def test_wild_extraction_byte_identical(fid, name, html, expected):
     raw = html if isinstance(html, bytes) else html.encode("utf-8")
-    got, spans, n_blocks = extract_main_text(raw)
+    got, spans, n_blocks, _ = extract_main_text(raw)
     assert got == expected, f"{name}:\nGOT: {got!r}\nEXP: {expected!r}"
 
 
@@ -38,7 +38,7 @@ def test_wild_spans_cover_extracted_text():
     slice appears verbatim in the extracted text."""
     for fid, name, html, expected in WILD_CASES:
         raw = html if isinstance(html, bytes) else html.encode("utf-8")
-        text, spans, n_blocks = extract_main_text(raw)
+        text, spans, n_blocks, _ = extract_main_text(raw)
         assert len(spans) == n_blocks, name
         prev_end = -1
         for start, end in spans:

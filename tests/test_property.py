@@ -12,8 +12,9 @@ from hypothesis import strategies as st
 
 from ocr_spark.config import BLANK_INDEX, CHAR_VECTOR, NUM_CLASSES
 from ocr_spark.kernels.ctc import ctc_greedy_decode_batch
-from ocr_spark.kernels.html import tokenize_html
+from ocr_spark.kernels.html import NODE_FIELDS, tokenize_html
 from ocr_spark.kernels.ocr import recognize_lines, render_line
+from tests.test_html_fast import stdlib_tokenize
 
 # --- grammar for well-formed HTML documents --------------------------------
 
@@ -52,21 +53,27 @@ _doc = st.lists(_node, max_size=8).map(
 @settings(max_examples=200, deadline=None)
 @given(_doc)
 def test_fast_scanner_matches_stdlib_on_wellformed(doc):
-    assert tokenize_html(doc, fast=True) == tokenize_html(doc, fast=False)
+    assert tokenize_html(doc) == stdlib_tokenize(doc)
 
 
 @settings(max_examples=200, deadline=None)
 @given(_doc)
 def test_tokenizer_invariants(doc):
-    records = tokenize_html(doc)
+    cols = tokenize_html(doc)
+    assert tuple(cols) == NODE_FIELDS
+    n = len(cols["node_id"])
+    assert all(len(v) == n for v in cols.values())
+    assert cols["node_id"] == list(range(n))
     cursor = 0
-    for i, r in enumerate(records):
-        assert r["node_id"] == i
-        assert r["text_len"] == len(r["text"]) > 0
-        assert 0 <= r["link_text_len"] <= r["text_len"]
-        assert r["span_start"] == cursor and r["span_end"] == cursor + r["text_len"]
-        cursor = r["span_end"] + 1
-        assert "  " not in r["text"] and r["text"] == r["text"].strip()
+    for text, n_chars, n_link, start, end in zip(
+        cols["text"], cols["text_len"], cols["link_text_len"],
+        cols["span_start"], cols["span_end"],
+    ):
+        assert n_chars == len(text) > 0
+        assert 0 <= n_link <= n_chars
+        assert start == cursor and end == cursor + n_chars
+        cursor = end + 1
+        assert "  " not in text and text == text.strip()
 
 
 # --- OCR round-trip ---------------------------------------------------------

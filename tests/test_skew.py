@@ -92,8 +92,8 @@ def test_mega_page_node_cap_bounds_memory():
         + "</article></main></body>"
     ).encode()
     records = tokenize_html(html)
-    assert len(records) == MAX_NODES_PER_PAGE
-    text, spans, n_blocks = extract_main_text(html)
+    assert len(records["node_id"]) == MAX_NODES_PER_PAGE
+    text, spans, n_blocks, _ = extract_main_text(html)
     assert 0 < n_blocks <= MAX_NODES_PER_PAGE
     assert text.startswith("Paragraph 0")
 
