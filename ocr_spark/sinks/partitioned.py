@@ -25,15 +25,21 @@ Design decisions, written for the 1000-executor case:
 * **Lineage.** Per (crawl_date, host_bucket): row count, byte count, and
   an order-insensitive checksum (``bit_xor(xxhash64(url, text))`` —
   commutative and overflow-free under ANSI mode, so partition-internal
-  ordering is free to vary). Appended to ``_lineage`` in the same driver
-  step as the data commit.
-* **Resume.** The unit of commit is one crawl_date. A date is appended to
-  ``_manifest`` only AFTER its data + lineage writes return; restart
-  recomputes ``pending = input dates ANTI JOIN manifest`` and re-runs only
-  those. Partially-written dates are re-written wholesale (dynamic
-  partition overwrite), so the sink is idempotent at date granularity —
-  the same determinism-first discipline as the reference's fixture-driven
-  pipeline, minus its RNG trap.
+  ordering is free to vary). Read back from the written data and
+  dynamic-overwritten into ``_lineage`` by date, so a rewrite replaces a
+  date's audit rows instead of duplicating them.
+* **Resume.** The commit unit is a chunk of up to MAX_DATES_PER_WRITE (30)
+  pending crawl_dates, about a month: one data write, one lineage write,
+  then one ``_manifest`` append of the chunk's dates. A crash late in a
+  365-date backfill loses at most that chunk. Restart recomputes
+  ``pending = input dates ANTI JOIN manifest`` and re-runs only those;
+  partially-written dates are re-written wholesale (dynamic partition
+  overwrite, set per write, never on the session), so the sink is
+  idempotent at date granularity — the same determinism-first discipline
+  as the reference's fixture-driven pipeline, minus its RNG trap.
+* **Format.** Hive-style partitioned parquet, one write path. A catalog
+  table sink (Iceberg) waits until an Iceberg runtime ships with the
+  engine (SURVEY §7).
 
 The reference has no distribution story at all (SURVEY §2.9, §4) — this
 module is where our engine earns the 10^12-document claim.
@@ -45,6 +51,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ocr_spark.config import HOST_HASH_BUCKETS, HOT_HOST_SALT
+
+MAX_DATES_PER_WRITE = 30  # dates per commit (see module docstring)
 
 
 def with_partition_keys(extracted: DataFrame) -> DataFrame:
@@ -84,56 +92,47 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    try:
-        return spark.read.parquet(f"{out_dir}/_manifest")
-    except Exception:
-        return None  # first run: no manifest yet
-
-
-def _partition_exists(spark: SparkSession, path: str) -> bool:
+def _path_exists(spark: SparkSession, path: str) -> bool:
     """Hadoop-FS existence check (works on local FS and any cluster FS)."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
     fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
     return bool(fs.exists(jpath))
 
 
+def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
+    """The committed dates, or None on a first run (no ``_manifest`` yet).
+
+    The explicit schema makes a manifest that holds only ``_temporary/``
+    (a kill during the first append) read as zero committed dates; any
+    other read error, such as a corrupt part file, raises.
+    """
+    path = f"{out_dir}/_manifest"
+    if not _path_exists(spark, path):
+        return None
+    return spark.read.schema("crawl_date date, committed_at timestamp").parquet(path)
+
+
 def extract_and_write(
-    spark: SparkSession,
-    pages: DataFrame,
-    out_dir: str,
-    resume: bool = True,
-    max_dates_per_write: int | None = 30,
+    spark: SparkSession, pages: DataFrame, out_dir: str, resume: bool = True
 ) -> dict:
     """Full production job: extract → salt-partitioned write → lineage →
     manifest commit, resumable at crawl_date granularity.
 
-    Pending dates are written in BATCHES of ``max_dates_per_write``
-    (default 30 — about a month per commit, so a crash late in a 365-date
-    backfill loses at most one month's work, not the whole run; an
-    unconfigured long backfill must not silently adopt the riskiest
-    granularity). The commit unit stays the crawl_date: manifest rows are
-    per-date, and a crash mid-batch commits nothing for that batch, so
-    restart re-extracts exactly the uncommitted dates (idempotent — the
-    dynamic overwrite replaces any partial partitions). Raise
-    ``max_dates_per_write`` (or pass ``None`` for one all-dates job: one
-    data write, one lineage write, one manifest append) when per-job
-    fixed costs dominate and the operator accepts the crash-loss window.
+    Pending dates are committed in chunks of MAX_DATES_PER_WRITE (see the
+    module docstring). Raises ValueError before any write when a page has
+    no ``warc_ts``, since its rows would have no date to commit under.
 
     Returns {"dates_processed": [...], "dates_skipped": [...]}.
     """
     from ocr_spark.operators.extract_html import extract_pages
-    from ocr_spark.sinks.tableio import write_table
-
-    # dynamic overwrite: re-running a partially-committed date replaces
-    # only that date's directories, making the job idempotent
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
 
     keyed_input = pages.withColumn("crawl_date", F.to_date("warc_ts"))
-    all_dates = sorted(
-        r.crawl_date
-        for r in keyed_input.select("crawl_date").distinct().collect()
-    )
+    input_dates = {
+        r.crawl_date for r in keyed_input.select("crawl_date").distinct().collect()
+    }
+    if None in input_dates:
+        raise ValueError("pages with a null warc_ts have no crawl_date to commit")
+    all_dates = sorted(input_dates)
     if resume:
         # resume = input dates ANTI manifest dates; the input was already
         # scanned once above, so only the (tiny) manifest is read here
@@ -148,46 +147,38 @@ def extract_and_write(
         todo = all_dates
     skipped = [d for d in all_dates if d not in set(todo)]
 
-    step = max_dates_per_write or max(len(todo), 1)
-    for at in range(0, len(todo), step):
-        chunk = todo[at : at + step]
+    for at in range(0, len(todo), MAX_DATES_PER_WRITE):
+        chunk = todo[at : at + MAX_DATES_PER_WRITE]
         chunk_pages = keyed_input.filter(
             F.col("crawl_date").isin(chunk)
         ).drop("crawl_date")
         keyed = with_partition_keys(extract_pages(chunk_pages))
         # salt in the exchange, not the layout (see module docstring)
-        write_table(
-            keyed.repartition("crawl_date", "host_bucket", "salt").drop("salt"),
-            f"{out_dir}/data",
-            ["crawl_date", "host_bucket"],
-            mode="overwrite_partitions",
+        (
+            keyed.repartition("crawl_date", "host_bucket", "salt")
+            .drop("salt")
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("crawl_date", "host_bucket")
+            .parquet(f"{out_dir}/data")
         )
         # lineage + manifest commit AFTER the data write returns. Lineage
         # is dynamic-overwritten BY DATE (not appended): a crash between
         # the lineage and manifest writes re-runs the chunk on restart,
         # and the rewrite replaces those dates' lineage rows instead of
-        # duplicating them — audits stay exactly-once. Zero-row dates
-        # write no data directory at all (nothing to audit), detected
-        # EXPLICITLY via the filesystem — any other lineage-write failure
-        # (disk full, permissions, schema) must propagate, or the dates
-        # would be committed with their audit trail silently missing.
-        audited = [
-            d
-            for d in chunk
-            if _partition_exists(spark, f"{out_dir}/data/crawl_date={d}")
-        ]
-        if audited:
-            out_keyed = spark.read.parquet(f"{out_dir}/data").filter(
-                F.col("crawl_date").isin(audited)
-            )
-            write_table(
-                lineage_metrics(out_keyed).withColumn(
-                    "committed_at", F.current_timestamp()
-                ),
-                f"{out_dir}/_lineage",
-                ["crawl_date"],
-                mode="overwrite_partitions",
-            )
+        # duplicating them — audits stay exactly-once. Every page yields
+        # one row, so every date of the chunk has data to audit.
+        out_keyed = spark.read.parquet(f"{out_dir}/data").filter(
+            F.col("crawl_date").isin(chunk)
+        )
+        (
+            lineage_metrics(out_keyed)
+            .withColumn("committed_at", F.current_timestamp())
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("crawl_date")
+            .parquet(f"{out_dir}/_lineage")
+        )
         spark.createDataFrame(
             [(d,) for d in chunk], "crawl_date date"
         ).withColumn("committed_at", F.current_timestamp()).write.mode(

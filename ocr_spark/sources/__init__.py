@@ -1,1 +1,1 @@
-"""Sources/sinks: pages-table synthesis and the TableIO seam."""
+"""Sources: pages tables, synthesized from testdata documents or read from WARC files."""

@@ -3,14 +3,17 @@
 from __future__ import annotations
 
 import glob
+import os
 
 import pyspark.sql.functions as F
 import pytest
+from pyspark.sql import Window
 
 from ocr_spark.config import HOST_HASH_BUCKETS, HOT_HOST_SALT
 from ocr_spark.sinks.partitioned import (
     extract_and_write,
     lineage_metrics,
+    read_manifest,
     with_partition_keys,
 )
 from ocr_spark.sources.pages import expected_from_documents, pages_from_documents
@@ -120,21 +123,107 @@ def test_verify_lineage_clean_and_detects_tamper(spark, pages, tmp_path):
     assert verify_lineage(spark, out).count() >= 1
 
 
-def test_batched_write_equals_chunked_write(spark, pages, tmp_path):
-    """One all-dates dynamic-overwrite write and a max_dates_per_write=1
-    per-date loop must produce identical data, lineage totals, and
-    manifest date sets."""
-    out_a = str(tmp_path / "batched")
-    out_b = str(tmp_path / "chunked")
-    ra = extract_and_write(spark, pages, out_a)
-    rb = extract_and_write(spark, pages, out_b, max_dates_per_write=1)
-    assert ra["dates_processed"] == rb["dates_processed"]
-    da = spark.read.parquet(f"{out_a}/data")
-    db = spark.read.parquet(f"{out_b}/data")
-    cols = ["crawl_date", "host_bucket", "n_rows", "n_bytes", "checksum"]
-    la = lineage_metrics(da).select(cols)
-    lb = lineage_metrics(db).select(cols)
-    assert la.exceptAll(lb).count() == 0 and lb.exceptAll(la).count() == 0
-    ma = {r.crawl_date for r in spark.read.parquet(f"{out_a}/_manifest").collect()}
-    mb = {r.crawl_date for r in spark.read.parquet(f"{out_b}/_manifest").collect()}
-    assert ma == mb
+def test_two_chunk_backfill(spark, pages, tmp_path):
+    """45 dates run as two commits (30 + 15): every date lands, every
+    url's text is the extractor's, the audit is clean and a rerun is a
+    no-op."""
+    from ocr_spark.operators.extract_html import extract_pages
+    from ocr_spark.sinks.partitioned import verify_lineage
+
+    day = (F.row_number().over(Window.orderBy("url")) - 1) % 45
+    shifted = pages.withColumn(
+        "warc_ts", F.timestamp_seconds(F.lit(1704110400) + day * 86400)
+    ).cache()
+    out = str(tmp_path / "out")
+    r1 = extract_and_write(spark, shifted, out)
+    assert len(r1["dates_processed"]) == 45 and not r1["dates_skipped"]
+    manifest = spark.read.parquet(f"{out}/_manifest")
+    assert manifest.count() == 45
+    assert manifest.select("committed_at").distinct().count() == 2
+
+    cols = ["url", "extracted_text"]
+    got = spark.read.parquet(f"{out}/data").select(cols)
+    exp = extract_pages(shifted).select(cols)
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
+    assert verify_lineage(spark, out).count() == 0
+
+    assert not extract_and_write(spark, shifted, out)["dates_processed"]
+
+
+@pytest.mark.parametrize("nulls", ["one", "all"])
+def test_null_warc_ts_raises_before_any_write(spark, pages, tmp_path, nulls):
+    """A page with no warc_ts has no crawl_date to commit under: the sink
+    refuses the input instead of crashing mid-sort (one null) or
+    committing a None date with zero rows (all null)."""
+    first = pages.agg(F.min("url")).first()[0]
+    hit = F.col("url") == first if nulls == "one" else F.lit(True)
+    bad = pages.withColumn(
+        "warc_ts", F.when(hit, F.lit(None).cast("timestamp")).otherwise(F.col("warc_ts"))
+    )
+    out = str(tmp_path / "out")
+    with pytest.raises(ValueError, match="warc_ts"):
+        extract_and_write(spark, bad, out)
+    assert not os.path.exists(out)
+
+
+def test_corrupt_manifest_raises(spark, pages, tmp_path):
+    """A manifest that cannot be read is an error, not a first run: a
+    silent re-extract would append onto the corrupt directory forever."""
+    out = str(tmp_path / "out")
+    extract_and_write(spark, pages, out)
+    for part in glob.glob(f"{out}/_manifest/part-*.parquet"):
+        with open(part, "wb") as f:
+            f.write(b"not a parquet file")
+    with pytest.raises(Exception):
+        extract_and_write(spark, pages, out)
+
+
+def test_manifest_with_only_temporary_reads_as_empty(spark, pages, tmp_path):
+    """A kill during the first manifest append leaves only ``_temporary/``:
+    no date is committed, so every date runs, and the next run resumes."""
+    out = str(tmp_path / "out")
+    attempt = tmp_path / "out" / "_manifest" / "_temporary" / "0" / "_temporary"
+    attempt.mkdir(parents=True)
+    (attempt / "part-00000.parquet").write_bytes(b"PAR1")  # torn write
+    manifest = read_manifest(spark, out)
+    assert manifest is None or manifest.count() == 0
+
+    dates = pages.select(F.to_date("warc_ts")).distinct().count()
+    r = extract_and_write(spark, pages, out)
+    assert len(r["dates_processed"]) == dates
+    assert not extract_and_write(spark, pages, out)["dates_processed"]
+
+
+def test_session_conf_untouched_and_rewrite_replaces_one_date(spark, pages, tmp_path):
+    """The sink sets dynamic partition overwrite per write, never on the
+    caller's session; rewriting one date replaces that date's rows and
+    leaves every other date as it was."""
+    from ocr_spark.operators.extract_html import extract_pages
+
+    key = "spark.sql.sources.partitionOverwriteMode"
+    saved = spark.conf.get(key)
+    spark.conf.set(key, "static")
+    try:
+        out = str(tmp_path / "out")
+        extract_and_write(spark, pages, out)
+        assert spark.conf.get(key) == "static"
+
+        day = pages.agg(F.min(F.to_date("warc_ts"))).first()[0]
+        on_day = F.to_date("warc_ts") == F.lit(day)
+        before = spark.read.parquet(f"{out}/data").filter(~on_day).collect()
+        edited = pages.filter(on_day).withColumn(
+            "html", F.regexp_replace("html", "<p>", "<p>rewritten ")
+        )
+        r = extract_and_write(spark, edited, out, resume=False)
+        assert r["dates_processed"] == [day]
+        assert spark.conf.get(key) == "static"
+    finally:
+        spark.conf.set(key, saved)
+
+    data = spark.read.parquet(f"{out}/data")
+    cols = ["url", "extracted_text"]
+    got = data.filter(on_day).select(cols)
+    exp = extract_pages(edited).select(cols)
+    assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
+    assert got.filter(F.col("extracted_text").contains("rewritten")).count() > 0
+    assert sorted(data.filter(~on_day).collect()) == sorted(before)
