@@ -15,7 +15,10 @@ Spark-first:
   any O(N²) comparison.
 * **ngram_jaccard_pairs** — exact verification of candidate pairs (or an
   intra-group O(n²) sweep for small groups) via ``array_intersect`` /
-  ``array_union`` sizes.
+  ``array_union`` sizes. Shingles come from the shared n-gram helper
+  ``textstats.word_ngrams_expr``, which slices a word array bound once
+  per row (boilerplate chunks slice the same array), so building them is
+  O(words) per document.
 * **simhash64** — 64-bit SimHash over token hashes using bit-arithmetic
   column expressions (sum of per-bit votes via ``aggregate``); near-dup =
   small Hamming distance, computed with ``bit_count(x ^ y)``.
@@ -31,7 +34,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.operators.textstats import _WORDS_EXPR
+from ocr_spark.operators.textstats import _WORDS_EXPR, word_ngrams_expr, words
 
 _WORDS = _WORDS_EXPR.format(col="text")
 
@@ -52,21 +55,12 @@ def ensure_min_partitions(df: DataFrame) -> DataFrame:
     return df
 
 
-def shingles(n: int = 3, col: str = "text") -> str:
-    """SQL expression producing the distinct word n-gram set of ``col``.
-
-    Built once as a string so the DataFrame side and test oracles share one
-    definition. ``slice`` is 1-based. Guarded with an explicit empty-array
-    branch for size < n: Spark's ``sequence(1, 0)`` yields a DESCENDING
-    [1, 0], not an empty array, so the naive form fabricates shingles for
-    short documents.
-    """
-    words = _WORDS_EXPR.format(col=col)
-    return (
-        f"case when size({words}) < {n} then array() "
-        f"else array_distinct(transform(sequence(1, size({words}) - {n - 1}),"
-        f" i -> concat_ws(' ', slice({words}, i, {n})))) end"
-    )
+def shingles(n: int = 3, w: str = "_w") -> str:
+    """SQL expression producing the distinct word n-gram set of the word
+    array ``w``: a column bound to ``textstats.words()`` in an earlier
+    projection, never the split itself (see ``textstats.word_ngrams_expr``,
+    which this wraps in ``array_distinct``)."""
+    return f"array_distinct({word_ngrams_expr(w, n)})"
 
 
 def exact_dedup(docs: DataFrame, key_col: str = "text") -> DataFrame:
@@ -92,13 +86,15 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 4, shingle_n: int = 3) -
     oracle). Pure higher-order-function expressions; no UDF, no shuffle.
     Returns (doc_id, sig_0..sig_{k-1}); empty shingle set → NULL signature.
 
-    Spelled as ONE ``aggregate`` pass carrying all k running minima
-    (init = 'g' sentinels, lexicographically above any hex digest;
-    ``zip_with``/``least`` element-wise update): the document is
-    tokenized and shingled exactly once per row regardless of k. The
-    per-signature spelling (k separate ``array_min(transform(...))``
-    columns) re-evaluates the shingle construction per signature —
-    measured 3.3× slower at k=8 on the bench corpus, identical output.
+    The word array is bound once per row in its own projection, so each
+    shingle slices it (O(words) per document, not a re-split per
+    shingle). The signatures are ONE ``aggregate`` pass carrying all k
+    running minima (init = 'g' sentinels, lexicographically above any hex
+    digest; ``zip_with``/``least`` element-wise update), so the shingle
+    set is built once per row regardless of k. The per-signature spelling
+    (k separate ``array_min(transform(...))`` columns) re-evaluates the
+    shingle construction per signature — measured 3.3× slower at k=8 on
+    the bench corpus, identical output.
     """
     k = n_hashes
     init = "array(" + ", ".join(["'g'"] * k) + ")"
@@ -108,8 +104,10 @@ def minhash_signatures(docs: DataFrame, n_hashes: int = 4, shingle_n: int = 3) -
         + "), (x, y) -> least(x, y))"
     )
     expr = f"aggregate({shingles(shingle_n)}, {init}, (acc, s) -> {upd})"
-    sig_arr = ensure_min_partitions(docs).select(
-        "doc_id", F.expr(expr).alias("_sig")
+    sig_arr = (
+        ensure_min_partitions(docs)
+        .select("doc_id", words().alias("_w"))
+        .select("doc_id", F.expr(expr).alias("_sig"))
     )
     cols = [
         F.expr(f"if(_sig[{i}] = 'g', null, _sig[{i}])").alias(f"sig_{i}")
@@ -258,8 +256,10 @@ def verify_pairs(
     shingle projection (doc_id, sh) — shuffle keys are doc ids, text
     itself never moves. Returns (doc_id_a, doc_id_b, jaccard), 6 dp.
     """
-    sh = ensure_min_partitions(docs).select(
-        "doc_id", F.expr(shingles(shingle_n)).alias("sh")
+    sh = (
+        ensure_min_partitions(docs)
+        .select("doc_id", words().alias("_w"))
+        .select("doc_id", F.expr(shingles(shingle_n)).alias("sh"))
     )
     a = sh.select(F.col("doc_id").alias("doc_id_a"), F.col("sh").alias("sh_a"))
     b = sh.select(F.col("doc_id").alias("doc_id_b"), F.col("sh").alias("sh_b"))
@@ -284,8 +284,8 @@ def ngram_jaccard_pairs(
     and jaccard >= min_jaccard, rounded to 6 dp.
     """
     sh = docs.select(
-        F.col(group_col).alias("g"), "doc_id", F.expr(shingles(shingle_n)).alias("sh")
-    )
+        F.col(group_col).alias("g"), "doc_id", words().alias("_w")
+    ).select("g", "doc_id", F.expr(shingles(shingle_n)).alias("sh"))
     a = sh.alias("a")
     b = sh.alias("b")
     joined = a.join(b, on="g").filter(F.col("a.doc_id") < F.col("b.doc_id"))
@@ -440,6 +440,31 @@ def simhash_band_pairs(
         sigs.unpersist()
 
 
+def _chunk_rows(docs: DataFrame, cw: int) -> DataFrame:
+    """(doc_id, pos, chunk, h): each doc's consecutive ``cw``-word chunks,
+    sliced from the word array bound once per row (``_w``), with the md5
+    of each chunk."""
+    chunks_expr = (
+        "CASE WHEN size(_w) = 0 THEN array() "
+        # sequence(0, -1) would yield DESCENDING [0, -1], not empty —
+        # the guarded spelling (engine rule: never unguarded sequence)
+        f"ELSE transform(sequence(0, CAST(ceil(size(_w) / {cw}.0) AS INT) - 1), "
+        f"i -> array_join(slice(_w, i * {cw} + 1, {cw}), ' ')) END"
+    )
+    # frequency is keyed on md5(chunk) while the DuckDB oracle groups on
+    # the raw chunk text: an md5 collision between distinct chunks would
+    # over-remove content and diverge from the oracle. Same documented
+    # collision assumption as every other md5-keyed dedup oracle here
+    # (exact_dedup, minhash, LSH buckets) — astronomically unlikely, and
+    # accepted for the 16-byte-key shuffle it buys.
+    return (
+        ensure_min_partitions(docs)
+        .select("doc_id", words().alias("_w"))
+        .select("doc_id", F.posexplode(F.expr(chunks_expr)).alias("pos", "chunk"))
+        .withColumn("h", F.md5("chunk"))
+    )
+
+
 def remove_boilerplate_chunks(
     docs: DataFrame, chunk_words: int = 8, min_docs: int = 2
 ) -> DataFrame:
@@ -459,27 +484,7 @@ def remove_boilerplate_chunks(
     corpus. Returns (doc_id, clean_text, n_chunks, n_removed) — docs whose
     chunks are ALL boilerplate come back with clean_text = ''.
     """
-    cw = int(chunk_words)
-    chunks_expr = (
-        f"CASE WHEN size({_WORDS}) = 0 THEN array() "
-        # sequence(0, -1) would yield DESCENDING [0, -1], not empty —
-        # the guarded spelling (engine rule: never unguarded sequence)
-        f"ELSE transform(sequence(0, CAST(ceil(size({_WORDS}) / {cw}.0) "
-        f"AS INT) - 1), i -> array_join(slice({_WORDS}, i * {cw} + 1, {cw})"
-        f", ' ')) END"
-    )
-    # frequency is keyed on md5(chunk) while the DuckDB oracle groups on
-    # the raw chunk text: an md5 collision between distinct chunks would
-    # over-remove content and diverge from the oracle. Same documented
-    # collision assumption as every other md5-keyed dedup oracle here
-    # (exact_dedup, minhash, LSH buckets) — astronomically unlikely, and
-    # accepted for the 16-byte-key shuffle it buys.
-    exploded = (
-        ensure_min_partitions(docs)
-        .select("doc_id", F.posexplode(F.expr(chunks_expr)).alias("pos", "chunk"))
-        .withColumn("h", F.md5("chunk"))
-    )
-    exploded = exploded.persist()
+    exploded = _chunk_rows(docs, int(chunk_words)).persist()
     try:
         freq = exploded.groupBy("h").agg(
             F.countDistinct("doc_id").alias("nd")

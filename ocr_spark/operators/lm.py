@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from ocr_spark.operators.textstats import _WORDS_EXPR
+from ocr_spark.operators.textstats import word_ngrams_expr, words
 
 MAX_MODEL_SIZE = 100_000
 
@@ -150,18 +150,17 @@ def contamination_check(
     are thousands of rows) and BROADCASTS; the corpus side streams its
     shingle hashes past the broadcast semi-join — the big side never
     shuffles. Word shingles are hashed to md5 so only 16-byte keys move.
+    Each side's word array is bound once per row, so its shingles cost
+    O(words) per document.
     """
     def shingles(df: DataFrame, id_col: str | None):
-        words = _WORDS_EXPR.format(col=text_col)
-        expr = (
-            f"CASE WHEN size({words}) < {n_words} THEN array() "
-            f"ELSE transform(sequence(1, size({words}) - {n_words} + 1), "
-            f"i -> md5(array_join(slice({words}, i, {n_words}), ' '))) END"
+        ids = [id_col] if id_col else []
+        grams = F.expr(word_ngrams_expr("_w", n_words))
+        return (
+            df.select(*ids, words(text_col).alias("_w"))
+            .select(*ids, F.explode(grams).alias("g"))
+            .select(*ids, F.md5("g").alias("h"))
         )
-        cols = ([id_col] if id_col else []) + [
-            F.explode(F.expr(expr)).alias("h")
-        ]
-        return df.select(*cols)
 
     bench_h = shingles(benchmark, None).distinct()
     doc_h = shingles(docs, "doc_id")

@@ -21,9 +21,29 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Whitespace-token split, empty strings dropped — the one token definition,
-# shared by this module, ``operators.dedup`` and ``functions.quality_expr``
-# (and mirrored by the DuckDB oracles).
+# shared by this module, ``operators.dedup``, ``operators.lm`` and
+# ``functions.quality_expr`` (and mirrored by the DuckDB oracles).
 _WORDS_EXPR = "filter(split({col}, '\\\\s+'), x -> x != '')"
+
+
+def word_ngrams_expr(w: str, n: int) -> str:
+    """SQL array of the word n-grams (``concat_ws(' ', ...)``, in document
+    order, duplicates kept) of the word-array column ``w``.
+
+    ``w`` must be bound to ``words()`` in an earlier projection, never be
+    the split itself: a lambda is evaluated per element, so a split inside
+    it re-tokenizes the document for every n-gram (O(words²) per
+    document); bound once, each n-gram is a slice (O(words)). ``w`` is
+    referenced more than once here, so Catalyst keeps the binding
+    projection. ``sequence(1, 0)`` yields a DESCENDING [1, 0], not an
+    empty array, hence the explicit branch for size < n.
+    """
+    return (
+        f"case when size({w}) < {n} then array() "
+        f"else transform(sequence(1, size({w}) - {n - 1}), "
+        f"i -> concat_ws(' ', slice({w}, i, {n}))) end"
+    )
+
 
 # Stopword lists for the n-gram/stopword language-ID heuristic.
 STOPWORDS_EN = ("the", "a", "and", "of", "in", "to", "is")
@@ -175,22 +195,19 @@ def repetition_stats(docs: DataFrame) -> DataFrame:
     the standard machine-generated-text tells. Bigram counting is
     explode → (doc, bigram) groupBy → per-doc max, all JVM-side; the
     shuffle key is (doc_id, bigram), evenly spread by construction.
+    Both branches read the word array bound once per row (``_w``).
     """
-    w = words()
-    base = docs.select(
+    tok = docs.select("doc_id", words().alias("_w"))
+    base = tok.select(
         "doc_id",
         F.round(
             F.lit(1.0)
-            - F.size(F.array_distinct(w)) / F.greatest(F.size(w), F.lit(1)),
+            - F.size(F.array_distinct("_w")) / F.greatest(F.size("_w"), F.lit(1)),
             6,
         ).alias("dup_token_ratio"),
     )
-    bigrams = F.expr(
-        f"case when size({_WORDS_EXPR.format(col='text')}) < 2 then array() "
-        f"else transform(sequence(1, size({_WORDS_EXPR.format(col='text')}) - 1), "
-        f"i -> concat_ws(' ', slice({_WORDS_EXPR.format(col='text')}, i, 2))) end"
-    )
-    bg = docs.select("doc_id", F.explode(bigrams).alias("bg"))
+    bigrams = F.expr(word_ngrams_expr("_w", 2))
+    bg = tok.select("doc_id", F.explode(bigrams).alias("bg"))
     counts = bg.groupBy("doc_id", "bg").agg(F.count("*").alias("c"))
     top = counts.groupBy("doc_id").agg(
         F.round(F.max("c") / F.sum("c"), 6).alias("top_bigram_ratio")

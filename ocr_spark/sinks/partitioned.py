@@ -33,9 +33,10 @@ Design decisions, written for the 1000-executor case:
   then one ``_manifest`` append of the chunk's dates. A crash late in a
   365-date backfill loses at most that chunk. Restart recomputes
   ``pending = input dates ANTI JOIN manifest`` and re-runs only those;
-  partially-written dates are re-written wholesale (dynamic partition
-  overwrite, set per write, never on the session), so the sink is
-  idempotent at date granularity — the same determinism-first discipline
+  each date of a chunk is re-written wholesale (its ``crawl_date=D``
+  directory is deleted, then written with dynamic partition overwrite,
+  set per write, never on the session), so the sink is idempotent at
+  date granularity — the same determinism-first discipline
   as the reference's fixture-driven pipeline, minus its RNG trap.
 * **Format.** Hive-style partitioned parquet, one write path. A catalog
   table sink (Iceberg) waits until an Iceberg runtime ships with the
@@ -92,10 +93,14 @@ def verify_lineage(spark: SparkSession, out_dir: str) -> DataFrame:
     )
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    """Hadoop-FS existence check (works on local FS and any cluster FS)."""
+def _fs_path(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path`` — local FS or any cluster FS."""
     jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _path_exists(spark: SparkSession, path: str) -> bool:
+    fs, jpath = _fs_path(spark, path)
     return bool(fs.exists(jpath))
 
 
@@ -153,6 +158,15 @@ def extract_and_write(
             F.col("crawl_date").isin(chunk)
         ).drop("crawl_date")
         keyed = with_partition_keys(extract_pages(chunk_pages))
+        # replace each date wholesale: dynamic overwrite replaces only the
+        # (date, bucket) directories this write produces, so a rewrite
+        # from smaller input would leave the old rows in the other
+        # buckets. A pending date killed after the delete re-runs on
+        # resume; a committed date rewritten with resume=False and killed
+        # here is left empty, which verify_lineage reports.
+        for d in chunk:
+            fs, jpath = _fs_path(spark, f"{out_dir}/data/crawl_date={d}")
+            fs.delete(jpath, True)
         # salt in the exchange, not the layout (see module docstring)
         (
             keyed.repartition("crawl_date", "host_bucket", "salt")

@@ -21,6 +21,7 @@ import pytest
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
+from ocr_spark.kernels.gif import _lzw_decode, _lzw_encode
 from ocr_spark.kernels.html import tokenize_html
 from ocr_spark.kernels.jpeg import decode_jpeg, encode_jpeg
 from ocr_spark.operators.extract_html import extract_pages
@@ -300,6 +301,25 @@ def test_jpeg_noise_decode_scales_linearly(progressive):
         return encode_jpeg(img, quality=90, progressive=progressive)
 
     _assert_near_linear(decode_jpeg, noise_jpeg(48, 96), noise_jpeg(96, 192))
+
+
+@pytest.mark.parametrize("frame", ["solid", "noise"])
+def test_gif_lzw_decode_scales_linearly(frame):
+    """Each LZW table entry is built by copying its prefix, so a solid
+    frame's entries grow long; they also cover that many pixels, and the
+    ``expected`` bound stops the output at the frame size, so the decode
+    stays linear in pixels. A noise frame is the most codes per pixel."""
+    rng = np.random.default_rng(6)
+
+    def lzw(h, w):
+        idx = (
+            np.full(h * w, 7, np.uint8)
+            if frame == "solid"
+            else rng.integers(0, 256, h * w, dtype=np.uint8)
+        )
+        return _lzw_encode(idx, 8), 8, h * w
+
+    _assert_near_linear(lambda a: _lzw_decode(*a), lzw(128, 256), lzw(256, 512))
 
 
 _HUGE_HEADER_CHILD = r"""

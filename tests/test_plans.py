@@ -186,24 +186,13 @@ def test_dedup_chunks_no_cartesian_and_pruned_freq(spark):
     broadcast nested loop anywhere in the boilerplate-removal plan.
     q_dedup_chunks localCheckpoints its result (persist-lifecycle rule),
     which erases the plan — so this rebuilds the operator's pre-checkpoint
-    composition (explode → md5 → freq → anti-join) and inspects that."""
-    import pyspark.sql.functions as F
+    composition (chunk explode → freq → anti-join) and inspects that."""
+    from ocr_spark.operators.dedup import _chunk_rows
 
     docs = spark.read.parquet(f"{SF}/documents.parquet").select(
         "doc_id", "text"
     )
-    exploded = docs.select(
-        "doc_id",
-        F.posexplode(
-            F.expr(
-                "CASE WHEN size(filter(split(text, '\\\\s+'), x -> x != '')) = 0 "
-                "THEN array() ELSE transform(sequence(0, CAST(ceil("
-                "size(filter(split(text, '\\\\s+'), x -> x != '')) / 8.0) AS INT) - 1), "
-                "i -> array_join(slice(filter(split(text, '\\\\s+'), x -> x != ''), "
-                "i * 8 + 1, 8), ' ')) END"
-            )
-        ).alias("pos", "chunk"),
-    ).withColumn("h", F.md5("chunk"))
+    exploded = _chunk_rows(docs, 8)
     freq = exploded.groupBy("h").agg(F.countDistinct("doc_id").alias("nd"))
     boiler = freq.filter(F.col("nd") >= 2).select("h")
     kept = exploded.join(boiler, "h", "left_anti")

@@ -227,3 +227,26 @@ def test_session_conf_untouched_and_rewrite_replaces_one_date(spark, pages, tmp_
     assert got.exceptAll(exp).count() == 0 and exp.exceptAll(got).count() == 0
     assert got.filter(F.col("extracted_text").contains("rewritten")).count() > 0
     assert sorted(data.filter(~on_day).collect()) == sorted(before)
+
+
+def test_rewrite_from_smaller_input_leaves_no_stale_rows(spark, pages, tmp_path):
+    """A date is replaced wholesale: rewriting it from one of its pages
+    leaves exactly that page's row, not the old rows of every host bucket
+    the smaller input no longer produces, and the audit stays clean."""
+    from ocr_spark.sinks.partitioned import verify_lineage
+
+    out = str(tmp_path / "out")
+    extract_and_write(spark, pages, out)
+    day = pages.agg(F.min(F.to_date("warc_ts"))).first()[0]
+    on_day = F.to_date("warc_ts") == F.lit(day)
+    assert pages.filter(on_day).count() > 1
+    others = spark.read.parquet(f"{out}/data").filter(F.col("crawl_date") != day).count()
+
+    one_page = pages.filter(on_day).orderBy("url").limit(1)
+    r = extract_and_write(spark, one_page, out, resume=False)
+    assert r["dates_processed"] == [day]
+
+    data = spark.read.parquet(f"{out}/data")
+    assert data.filter(F.col("crawl_date") == day).count() == 1
+    assert data.filter(F.col("crawl_date") != day).count() == others
+    assert verify_lineage(spark, out).count() == 0
