@@ -420,33 +420,36 @@ def _extract_html_wild_oracle_sql() -> str:
     )
 
 
-def q_ocr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """OCR branch: render text → strip tensor → conv+CTC decode → text."""
+def _recognize_docs(
+    spark: SparkSession, sf_dir: str, render: Callable, recognizer: str
+) -> DataFrame:
+    """The OCR contract shape: the documents fan out, then ONE map stage
+    renders each doc's strips (``render(doc_id, text)`` → [(strip,
+    width)]), recognizes every strip of the Arrow batch in one call, and
+    joins each doc's texts in segment order → (doc_id, text_out). Strips
+    never leave the Python worker that rendered them."""
     import numpy as np
     import pandas as pd
 
-    from ocr_spark.kernels.ocr import render_line
-    from ocr_spark.operators.extract_ocr import recognize_line_strips
+    from ocr_spark.operators.pipeline import recognizer_fn
 
-    def strips_fn(batches):
+    recognize = recognizer_fn(recognizer)
+
+    def fn(batches):
         for pdf in batches:
-            ids, strips, widths = [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                # strip to alphanumerics so the rendered text is fully
-                # in-vocabulary — render_line silently drops OOV chars,
-                # which would diverge from the oracle's substr otherwise
-                s = re.sub(r"[^0-9a-zA-Z]", "", str(text))[:40]
-                strip, width = render_line(s)
-                ids.append(int(doc_id))
-                strips.append(strip.ravel().tolist())
-                widths.append(width)
+            parts, owners, strips, widths = [], [], [], []
+            for doc, (doc_id, text) in enumerate(zip(pdf["doc_id"], pdf["text"])):
+                parts.append([])
+                for strip, width in render(int(doc_id), str(text)):
+                    owners.append(doc)
+                    strips.append(strip)
+                    widths.append(width)
+            if strips:
+                texts = recognize(np.stack(strips), np.asarray(widths, np.int64))
+                for doc, text in zip(owners, texts):
+                    parts[doc].append(text)
             yield pd.DataFrame(
-                {
-                    "url": [str(i) for i in ids],
-                    "line_id": ids,
-                    "strip": strips,
-                    "width": widths,
-                }
+                {"doc_id": pdf["doc_id"], "text_out": ["".join(p) for p in parts]}
             )
 
     docs = (
@@ -454,14 +457,20 @@ def q_ocr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id", "text")
         .repartition(spark.sparkContext.defaultParallelism)
     )
-    lines = docs.mapInPandas(
-        strips_fn,
-        schema="url string, line_id int, strip array<float>, width long",
-    )
-    out = recognize_line_strips(lines)
-    return out.select(
-        F.col("line_id").cast("long").alias("doc_id"), F.col("text").alias("text_out")
-    )
+    return docs.mapInPandas(fn, schema="doc_id long, text_out string")
+
+
+def q_ocr_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """OCR branch: render text → strip tensor → conv+CTC decode → text."""
+    from ocr_spark.kernels.ocr import render_line
+
+    def render(doc_id, text):
+        # strip to alphanumerics so the rendered text is fully
+        # in-vocabulary — render_line silently drops OOV chars, which
+        # would diverge from the oracle's substr otherwise
+        return [render_line(re.sub(r"[^0-9a-zA-Z]", "", text)[:40])]
+
+    return _recognize_docs(spark, sf_dir, render, "conv")
 
 
 # 4 deterministic punctuation suffixes that jointly cover all 32
@@ -494,60 +503,18 @@ def q_ocr_noisy(spark: SparkSession, sf_dir: str) -> DataFrame:
     into a second strip; ``render_distorted_line_multi``), each strip
     bilinear-upscaled 2×, perturbed with seeded Gaussian noise (σ=0.1),
     resampled back to the 8-row geometry, recognized by normalized
-    cross-correlation + CTC, and reassembled in segment order. The oracle
+    cross-correlation + CTC, and joined in segment order. The oracle
     asserts exact text recovery — what reaches the recognizer is
     anti-aliased and noisy, never bit-identical to any template."""
-    import pandas as pd
-
     from ocr_spark.config import CHAR_VECTOR
     from ocr_spark.kernels.font import render_distorted_line_multi
-    from ocr_spark.operators.extract_ocr import recognize_line_strips
 
-    def strips_fn(batches):
-        for pdf in batches:
-            urls, segs, strips, widths = [], [], [], []
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                s = "".join(c for c in str(text) if c in CHAR_VECTOR)[:32]
-                s += _PUNCT_SUFFIXES[int(doc_id) % 4]
-                for k, (strip, width) in enumerate(
-                    render_distorted_line_multi(
-                        s, scale=2.0, sigma=0.1, seed=int(doc_id)
-                    )
-                ):
-                    urls.append(str(int(doc_id)))
-                    segs.append(k)
-                    strips.append(strip.ravel().tolist())
-                    widths.append(width)
-            yield pd.DataFrame(
-                {"url": urls, "line_id": segs, "strip": strips, "width": widths}
-            )
+    def render(doc_id, text):
+        s = "".join(c for c in text if c in CHAR_VECTOR)[:32]
+        s += _PUNCT_SUFFIXES[doc_id % 4]
+        return render_distorted_line_multi(s, scale=2.0, sigma=0.1, seed=doc_id)
 
-    docs = (
-        _docs(spark, sf_dir)
-        .select("doc_id", "text")
-        .repartition(spark.sparkContext.defaultParallelism)
-    )
-    lines = docs.mapInPandas(
-        strips_fn,
-        schema="url string, line_id int, strip array<float>, width long",
-    )
-    out = recognize_line_strips(lines, recognizer="font")
-    # reassemble continuation segments in order — url carries the doc_id,
-    # line_id the segment index; array_sort on (seg, text) structs orders
-    # by seg, all JVM-side
-    return (
-        out.groupBy("url")
-        .agg(
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("line_id", "text"))),
-                    lambda s: s["text"],
-                ),
-                "",
-            ).alias("text_out")
-        )
-        .select(F.col("url").cast("long").alias("doc_id"), "text_out")
-    )
+    return _recognize_docs(spark, sf_dir, render, "font")
 
 
 def q_media_features(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -54,15 +54,16 @@ def curate_corpus(
     n_tokens, quality, dup_token_ratio) — ``reason`` is 'keep' or the
     first entry of ``GATE_ORDER`` that fails.
     """
-    w = words()
     dup_token_ratio = F.round(
         F.lit(1.0)
-        - F.size(F.array_distinct(w)) / F.greatest(F.size(w), F.lit(1)),
+        - F.size(F.array_distinct("_w")) / F.greatest(F.size("_w"), F.lit(1)),
         6,
     ).alias("dup_token_ratio")
-    signals = docs.select(
-        "doc_id", *lang_vote_cols(), *quality_cols(), dup_token_ratio
-    ).withColumn("predicted_lang", lang_cascade_col())
+    signals = (
+        docs.select("doc_id", "text", words().alias("_w"))
+        .select("doc_id", *lang_vote_cols(), *quality_cols(), dup_token_ratio)
+        .withColumn("predicted_lang", lang_cascade_col())
+    )
 
     # exact-dup representatives: min doc_id per md5(text) group survives —
     # the one aggregate-shaped signal (same spelling as exact_dedup)
@@ -113,7 +114,10 @@ def stratified_sample(
     sees only k·n_salts slim rows per group. Returns (doc_id, group,
     quality, rank).
     """
-    q = docs.select("doc_id", F.col(group_col).alias("grp"), *quality_cols())
+    tok = docs.select(
+        "doc_id", F.col(group_col).alias("grp"), "text", words().alias("_w")
+    )
+    q = tok.select("doc_id", "grp", *quality_cols())
     order = [F.col("quality").desc(), F.col("doc_id").asc()]
     from pyspark.sql import Window
 

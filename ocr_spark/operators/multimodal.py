@@ -11,8 +11,9 @@ container), RIFF/PCM + G.711 WAV audio (``kernels.wav``), DIB + MJPG
 AVI video (``kernels.avi``). Only containers outside that family (WebP,
 mp3/ogg, mp4 — codecs genuinely absent here) fall back to a
 deterministic sha256-seeded fake, honestly labeled ``fmt='fake'``. The
-OCR branch (``operators/extract_ocr.py``) consumes the decoded strips, so
-the full binary → decode → normalize → recognize chain runs on real
+fused pipeline (``operators/pipeline.py``) decodes, normalizes and
+recognizes the embedded strips through the same decode seam, so the
+full binary → decode → normalize → recognize chain runs on real
 container parses end-to-end.
 
 Scale notes: payload columns are wide — every operator here projects the

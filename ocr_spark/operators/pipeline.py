@@ -22,6 +22,12 @@ pages' lines in the Arrow batch (the RECOG_BATCH discipline,
 instead of within one). Assembly is plain Python per page, so the stage
 emits one row per input page (the ``extract_pages`` contract) and adds
 no exchange over its source.
+
+``recognizer_fn`` is the one recognizer table: name → batched
+``(strips, widths) → texts`` callable. ``extract_full`` and the OCR
+contract queries bind it when the query is built, so an unknown name
+fails before any job, and every strip is recognized in the worker that
+produced it.
 """
 
 from __future__ import annotations
@@ -29,7 +35,8 @@ from __future__ import annotations
 import base64
 import re
 import zlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -37,12 +44,50 @@ from pyspark.sql import DataFrame
 
 from ocr_spark.config import BLOCK_SEPARATOR, LINE_HEIGHT, MAX_LINE_WIDTH
 from ocr_spark.kernels.image import decode_gray
-from ocr_spark.operators.extract_ocr import _check_recognizer, _recognize_fn
 
 _WIDTH_RE = re.compile(r'data-width="(\d+)"')
 _STRIP_RE = re.compile(r'data-strip="([A-Za-z0-9+/=]*)"')
 _EMPTY_STRIP = np.zeros((LINE_HEIGHT, MAX_LINE_WIDTH), np.float32)
 _EMPTY_RASTER = np.zeros((0, 0), np.float32)
+
+# recognizer name → font decoder; "conv" is the code-glyph matched filter
+_FONT_DECODERS = {
+    "font": "greedy",
+    "font_beam": "beam",
+    "font_beam_lm": "beam_lm",
+    "font_beam_bi": "beam_bi",
+}
+_RECOGNIZERS = ("conv", *_FONT_DECODERS)
+
+Recognizer = Callable[[np.ndarray, np.ndarray], list[str]]
+
+
+def recognizer_fn(recognizer: str) -> Recognizer:
+    """``recognizer`` → batched ``(strips [B, 8, 384], widths) → texts``;
+    an unknown name raises ``ValueError``, so callers bind it when the
+    query is built, before any job runs.
+    "conv" = the code-glyph matched filter (``kernels.ocr``), "font" = the
+    bitmap-atlas NCC recognizer (``kernels.font``) for anti-aliased /
+    noisy imagery, "font_beam" = the same NCC scores decoded by CTC prefix
+    beam search (alignment-summing), "font_beam_lm" = beam + the fixed
+    glyph-bigram context prior (the BiLSTM-analog; recovers O/0 and l/1
+    confusions at noise levels where per-window evidence fails),
+    "font_beam_bi" = bidirectional context (left prior in-beam +
+    right-context N-best rescoring — the full BiLSTM analog; fixes LEADING
+    ambiguous glyphs the forward prior cannot). The context decoders are
+    default-off: measured exact-equal to greedy at contract noise,
+    strictly better only on degraded inputs (tests/test_font_ocr.py)."""
+    if recognizer not in _RECOGNIZERS:
+        raise ValueError(
+            f"unknown recognizer {recognizer!r}; expected one of {_RECOGNIZERS}"
+        )
+    if recognizer == "conv":
+        from ocr_spark.kernels.ocr import recognize_lines
+
+        return recognize_lines
+    from ocr_spark.kernels.font import recognize_lines_font
+
+    return partial(recognize_lines_font, decoder=_FONT_DECODERS[recognizer])
 
 
 def _img_strips(html_text: str):
@@ -120,7 +165,7 @@ def _lines_of_doc(html_text: str):
         yield i, strip, out_w
 
 
-def _fused_stage(recognizer: str):
+def _fused_stage(recognize: Recognizer):
     def _extract_and_detect(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -133,7 +178,6 @@ def _fused_stage(recognizer: str):
         from ocr_spark.kernels.charset import decode_html
         from ocr_spark.kernels.html import extract_main_text
 
-        recognize = _recognize_fn(recognizer)
         for pdf in batches:
             parts, owners, strips, widths = [], [], [], []
             for doc, html in enumerate(pdf["html"]):
@@ -169,12 +213,12 @@ def extract_full(pages: DataFrame, recognizer: str = "conv") -> DataFrame:
     joined with BLOCK_SEPARATOR — the reading-order contract of the
     reference's result sink (its ``test_img.py:121-132``).
     ``recognizer`` is "conv", "font", "font_beam", "font_beam_lm" or
-    "font_beam_bi" (see ``extract_ocr._recognize_fn``); anything else raises
+    "font_beam_bi" (see ``recognizer_fn``); anything else raises
     ``ValueError`` before a job runs. Physical plan: one scan of pages,
     one map stage that detects, recognizes and assembles in Python, and
     no exchange over the source (asserted in tests/test_pipeline.py).
     """
-    _check_recognizer(recognizer)
     return pages.select("url", "html").mapInPandas(
-        _fused_stage(recognizer), schema="url string, extracted_text string"
+        _fused_stage(recognizer_fn(recognizer)),
+        schema="url string, extracted_text string",
     )

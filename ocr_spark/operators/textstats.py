@@ -56,14 +56,16 @@ CJK_RANGE_RE = r"[\x{4e00}-\x{9fff}]"
 
 
 def words(col: str = "text") -> Column:
+    """The word array of ``col``. Bind it once per row
+    (``words().alias("_w")``) in a projection before the columns that
+    read it, so each document is split once, not once per column."""
     return F.expr(_WORDS_EXPR.format(col=col))
 
 
 def _count_in(vocab: tuple[str, ...]) -> Column:
+    """Words of the bound word array ``_w`` that are in ``vocab``."""
     quoted = ", ".join(f"'{w}'" for w in vocab)
-    return F.size(
-        F.expr(f"filter({_WORDS_EXPR.format(col='text')}, x -> x in ({quoted}))")
-    ).cast("long")
+    return F.size(F.expr(f"filter(_w, x -> x in ({quoted}))")).cast("long")
 
 
 def token_stats(docs: DataFrame) -> DataFrame:
@@ -74,8 +76,8 @@ def token_stats(docs: DataFrame) -> DataFrame:
     ``n_subtokens`` (runs of letters / digits / single punctuation, the
     common pre-tokenizer regex), via ``regexp_count`` (JVM-side).
     """
-    w = words()
-    return docs.select(
+    w = F.col("_w")
+    return docs.select("doc_id", "text", words().alias("_w")).select(
         "doc_id",
         F.size(w).cast("long").alias("n_tokens"),
         F.length("text").cast("long").alias("n_chars_obs"),
@@ -98,20 +100,18 @@ def quality_score(docs: DataFrame) -> DataFrame:
     standard web-corpus quality gates (C4/Gopher-style rules). Deterministic
     closed-form so it is oracle-checkable in ANSI SQL.
     """
-    return docs.select("doc_id", *quality_cols())
+    tok = docs.select("doc_id", "text", words().alias("_w"))
+    return tok.select("doc_id", *quality_cols())
 
 
 def quality_cols() -> list[Column]:
     """The four quality columns (n_tokens, punct_ratio, stop_ratio,
-    quality) — shared by ``quality_score`` and the curation funnel."""
-    w = words()
-    n_tokens = F.size(w)
+    quality) — shared by ``quality_score`` and the curation funnel. They
+    read ``text`` and the word array bound as ``_w``."""
+    n_tokens = F.size("_w")
     n_chars = F.length("text")
     punct = F.regexp_count(F.col("text"), F.lit(r"[^a-zA-Z0-9\s]"))
-    quoted = ", ".join(f"'{s}'" for s in STOPWORDS_EN)
-    n_stop = F.size(
-        F.expr(f"filter({_WORDS_EXPR.format(col='text')}, x -> x in ({quoted}))")
-    )
+    n_stop = _count_in(STOPWORDS_EN)
     punct_ratio = punct / F.greatest(n_chars, F.lit(1))
     stop_ratio = n_stop / F.greatest(n_tokens, F.lit(1))
     len_sat = F.least(n_tokens / F.lit(64.0), F.lit(1.0))
@@ -119,7 +119,7 @@ def quality_cols() -> list[Column]:
         F.lit(0.5) + F.lit(0.5) * F.least(stop_ratio * F.lit(5.0), F.lit(1.0))
     )
     return [
-        F.size(w).cast("long").alias("n_tokens"),
+        n_tokens.cast("long").alias("n_tokens"),
         F.round(punct_ratio, 6).alias("punct_ratio"),
         F.round(stop_ratio, 6).alias("stop_ratio"),
         F.round(score, 6).alias("quality"),
@@ -141,7 +141,8 @@ def lang_id(docs: DataFrame) -> DataFrame:
     column expressions. Returns (doc_id, lang, predicted_lang, c_en, c_de,
     c_fr, c_es, c_zh).
     """
-    out = docs.select("doc_id", "lang", *lang_vote_cols())
+    tok = docs.select("doc_id", "lang", "text", words().alias("_w"))
+    out = tok.select("doc_id", "lang", *lang_vote_cols())
     return out.withColumn("predicted_lang", lang_cascade_col()).select(
         "doc_id", "lang", "predicted_lang", "c_en", "c_de", "c_fr", "c_es", "c_zh"
     )
@@ -149,7 +150,8 @@ def lang_id(docs: DataFrame) -> DataFrame:
 
 def lang_vote_cols() -> list[Column]:
     """The five per-language vote columns (aliased c_en..c_zh) — shared by
-    ``lang_id`` and the curation funnel so the cascade never drifts."""
+    ``lang_id`` and the curation funnel so the cascade never drifts. They
+    read ``text`` and the word array bound as ``_w``."""
     return [
         _count_in(STOPWORDS_EN).alias("c_en"),
         _count_in(STOPWORDS_DE).alias("c_de"),

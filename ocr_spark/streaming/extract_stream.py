@@ -88,9 +88,11 @@ def stream_extract_full(
     verbatim: the fused pipeline is a single map stage that assembles
     each page inside the Python worker (one input row → one output row),
     so it holds no cross-batch state and needs no watermark.
-    Restart resumes from the checkpoint's source offsets; the per-batch
-    parquet append composes with the manifest/lineage sink for
-    exactly-once semantics at date granularity.
+    Restart resumes from the checkpoint's source offsets. The append is
+    at-least-once per micro-batch: ``write_batch`` ignores ``batch_id``
+    and writes no manifest or lineage, so a batch replayed after a crash
+    between the append and the offset commit is appended again (ROADMAP
+    item 8).
     """
     from ocr_spark.operators.pipeline import extract_full
 

@@ -251,7 +251,7 @@ def test_stratified_sample_exact_vs_naive_window(spark):
     from pyspark.sql import Window
 
     from ocr_spark.operators.curation import stratified_sample
-    from ocr_spark.operators.textstats import quality_cols
+    from ocr_spark.operators.textstats import quality_cols, words
 
     docs = (
         spark.read.parquet(f"{SF}/documents.parquet")
@@ -263,7 +263,9 @@ def test_stratified_sample_exact_vs_naive_window(spark):
         (r.doc_id, r.source, r.rank)
         for r in stratified_sample(docs, per_group=10, n_salts=7).collect()
     }
-    q = docs.select("doc_id", F.col("source").alias("grp"), *quality_cols())
+    q = docs.select(
+        "doc_id", F.col("source").alias("grp"), "text", words().alias("_w")
+    ).select("doc_id", "grp", *quality_cols())
     w = Window.partitionBy("grp").orderBy(
         F.col("quality").desc(), F.col("doc_id").asc()
     )

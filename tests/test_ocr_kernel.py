@@ -72,11 +72,19 @@ def test_logits_shape_and_blank_dominance():
     assert lg[0, 0].max() == 32.0
 
 
+# punctuation-only and empty lines included
+LINE_TEXTS = [
+    "first-line!", "SECOND?", "", "aabbcc", "0123456789",
+    "MiXeD-CaSe.42", "~`<>'.:;^/|", "!?$%#@&*()", "[]{}_+=,\\\"",
+]
+
+
 def test_batched_matches_single():
-    texts = ["first-line", "second.one!", "", "THIRD?"]
+    texts = ["first-line", "second.one!", "", "THIRD?", *LINE_TEXTS]
     strips, widths = zip(*(render_line(t) for t in texts))
     got = recognize_lines(np.stack(strips), list(widths))
     assert got == list(texts)
+    assert [recognize_lines(s[None], [w])[0] for s, w in zip(strips, widths)] == got
 
 
 def test_normalize_strip_from_double_height():

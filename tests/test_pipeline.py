@@ -90,7 +90,7 @@ def test_unknown_recognizer_is_rejected_before_any_job(spark):
         extract_full(pages, recognizer="fnot")
 
 
-def test_batch_boundaries_do_not_leak(spark, monkeypatch):
+def test_batch_boundaries_do_not_leak(spark):
     """Assembly is per Arrow batch in the worker, so the output must not
     depend on where batches split: 2-row batches give the same rows as the
     default conf. The corpus holds a 2-row batch whose images are all
@@ -149,21 +149,15 @@ def test_batch_boundaries_do_not_leak(spark, monkeypatch):
     # the same 2-row batches through the stage in-process: the all-
     # malformed batch must reach neither np.stack nor the recognizer
     calls = []
-    real = pipeline._recognize_fn
+    conv = pipeline.recognizer_fn("conv")
 
-    def recording(name):
-        rec = real(name)
+    def recording(strips, widths):
+        calls.append(len(strips))
+        return conv(strips, widths)
 
-        def fn(strips, widths):
-            calls.append(len(strips))
-            return rec(strips, widths)
-
-        return fn
-
-    monkeypatch.setattr(pipeline, "_recognize_fn", recording)
     pdf = pages.select("url", "html").toPandas()
     batches = [pdf.iloc[i:i + 2].reset_index(drop=True) for i in range(0, 6, 2)]
-    out = list(pipeline._fused_stage("conv")(iter(batches)))
+    out = list(pipeline._fused_stage(recording)(iter(batches)))
     assert calls == [3, 3]
     assert sorted(
         (u, t) for o in out for u, t in zip(o["url"], o["extracted_text"])

@@ -124,13 +124,18 @@ def _exchange_output_columns(df) -> list[list[str]]:
 
 def test_round2_query_plan_budgets(spark):
     """Plan discipline for the noisy/rotated queries: the rotated PDF path
-    is map-only after its fan-out repartition; ocr_noisy (multi-strip since
-    round 3) adds one segment-reassembly groupBy over its fan-out — the
-    shuffle moves only slim (doc_id, seg, short-text) rows, never strips.
+    is map-only after its fan-out repartition; both OCR contract queries
+    render, recognize and join each doc's segments in the one map stage
+    after their fan-out, so no strip column and no segment-reassembly
+    groupBy ever appear.
     The fused noisy pipeline never shuffles the html blobs: with the
     fixture cache on, the scan of the cached files fans out by itself;
     with it off, only the slim documents rows cross the synth fan-out."""
-    assert count_exchanges(em.q_ocr_noisy(spark, SF)) == 2  # fan-out + assembly
+    for q in (em.q_ocr_roundtrip, em.q_ocr_noisy):
+        df = q(spark, SF)
+        assert count_exchanges(df) == 1  # the fan-out only
+        # every node of the optimized plan lists its output columns
+        assert "strip#" not in df._jdf.queryExecution().optimizedPlan().toString()
     assert count_exchanges(em.q_extract_pdf_rotated(spark, SF)) == 1
     for q in (em.q_extract_full, em.q_extract_full_noisy):
         outputs = _exchange_output_columns(q(spark, SF))

@@ -1,8 +1,9 @@
-"""Word n-gram expressions tokenize each document once.
+"""Word n-gram and word-count expressions tokenize each document once.
 
 Every word-n-gram operator binds the word array in a projection before
-any lambda and slices that array per n-gram. A split inside the lambda
-re-tokenizes the whole document for every n-gram (Spark evaluates
+any lambda and slices that array per n-gram; the per-document signal
+operators read the same bound array in every column. A split inside the
+lambda re-tokenizes the whole document for every n-gram (Spark evaluates
 higher-order-function lambdas once per element), which makes an n-gram
 set O(words²) per document. The plan pins fail if the optimizer ever
 inlines the bound array back into the lambda; the scaling test fails if
@@ -15,9 +16,10 @@ import random
 import statistics
 import time
 
+import pyspark.sql.functions as F
 import pytest
 
-from ocr_spark.operators import dedup, lm, textstats
+from ocr_spark.operators import curation, dedup, lm, textstats
 
 
 def _docs(spark, n_words: int, seed: int = 3):
@@ -48,6 +50,13 @@ OPERATORS = {
     # remove_boilerplate_chunks checkpoints its result, which erases the
     # plan; its chunk explode is the part that tokenizes
     "remove_boilerplate_chunks": (lambda s, d: dedup._chunk_rows(d, 8), 1),
+    # the per-document signals: every vote, ratio and count column reads
+    # the one bound word array
+    "lang_id": (lambda s, d: textstats.lang_id(d.withColumn("lang", F.lit("en"))), 1),
+    "token_stats": (lambda s, d: textstats.token_stats(d), 1),
+    "quality_score": (lambda s, d: textstats.quality_score(d), 1),
+    "curate_corpus": (lambda s, d: curation.curate_corpus(d), 1),
+    "stratified_sample": (lambda s, d: curation.stratified_sample(d), 1),
 }
 
 
