@@ -17,9 +17,8 @@ html blobs across 32 concurrent tasks; ~2 GB/core holds comfortably.
 
 Reads a pages table (or synthesizes one from a testdata sf dir when
 ``--input`` points at one), runs the fused extraction, writes the
-salt-partitioned output with lineage + manifest. A rerun resumes from
-the manifest and skips committed dates; ``--no-resume`` re-extracts
-every date. Prints one JSON line (``rows_out``, ``dates_processed``, ...).
+salt-partitioned output with lineage. A rerun skips the dates whose
+lineage is committed; ``--no-resume`` re-extracts every date. Prints one JSON line (``rows_out``, ``dates_processed``, ...).
 """
 
 from __future__ import annotations

@@ -1,6 +1,6 @@
 from ocr_spark.sinks.partitioned import (  # noqa: F401
+    committed_dates,
     extract_and_write,
     lineage_metrics,
-    read_manifest,
     with_partition_keys,
 )

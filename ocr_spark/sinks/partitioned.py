@@ -5,8 +5,8 @@ North-rule scale plumbing (SURVEY §7 M5). Layout:
 
     out_dir/
       data/crawl_date=YYYY-MM-DD/host_bucket=NN/part-*.parquet
-      _lineage/   per-(date, bucket) rows/bytes/checksum rows
-      _manifest/  one row per COMMITTED crawl_date (the resume unit)
+      _lineage/crawl_date=YYYY-MM-DD/   per-(date, bucket) rows/bytes/checksum
+                                        rows; the directory is the date's commit
 
 Design decisions, written for the 1000-executor case:
 
@@ -29,15 +29,18 @@ Design decisions, written for the 1000-executor case:
   dynamic-overwritten into ``_lineage`` by date, so a rewrite replaces a
   date's audit rows instead of duplicating them.
 * **Resume.** The commit unit is a chunk of up to MAX_DATES_PER_WRITE (30)
-  pending crawl_dates, about a month: one data write, one lineage write,
-  then one ``_manifest`` append of the chunk's dates. A crash late in a
-  365-date backfill loses at most that chunk. Restart recomputes
-  ``pending = input dates ANTI JOIN manifest`` and re-runs only those;
-  each date of a chunk is re-written wholesale (its ``crawl_date=D``
-  directory is deleted, then written with dynamic partition overwrite,
-  set per write, never on the session), so the sink is idempotent at
-  date granularity — the same determinism-first discipline
-  as the reference's fixture-driven pipeline, minus its RNG trap.
+  pending crawl_dates, about a month: one data write, then one lineage
+  write. A crash late in a 365-date backfill loses at most that chunk.
+  ``_lineage/crawl_date=D`` is the commit record: Spark moves it into
+  place at the lineage job's commit, after the data write has returned,
+  so if it exists the date is complete. Restart re-runs only ``pending
+  = input dates minus committed_dates``. A chunk's dates are re-written
+  wholesale: lineage then data ``crawl_date=D`` directories are deleted
+  first (so a rewrite killed before its commit leaves the date pending),
+  then written with dynamic partition overwrite, set per write, never on
+  the session. The sink is idempotent at date granularity — the same
+  determinism-first discipline as the reference's fixture-driven
+  pipeline, minus its RNG trap.
 * **Format.** Hive-style partitioned parquet, one write path. A catalog
   table sink (Iceberg) waits until an Iceberg runtime ships with the
   engine (SURVEY §7).
@@ -47,6 +50,8 @@ module is where our engine earns the 10^12-document claim.
 """
 
 from __future__ import annotations
+
+from datetime import date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -99,29 +104,29 @@ def _fs_path(spark: SparkSession, path: str):
     return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
-def _path_exists(spark: SparkSession, path: str) -> bool:
-    fs, jpath = _fs_path(spark, path)
-    return bool(fs.exists(jpath))
+def committed_dates(spark: SparkSession, out_dir: str) -> set[date]:
+    """The committed dates: one per ``_lineage/crawl_date=D`` directory.
 
-
-def read_manifest(spark: SparkSession, out_dir: str) -> DataFrame | None:
-    """The committed dates, or None on a first run (no ``_manifest`` yet).
-
-    The explicit schema makes a manifest that holds only ``_temporary/``
-    (a kill during the first append) read as zero committed dates; any
-    other read error, such as a corrupt part file, raises.
+    Lists the directory without running a Spark job. A kill mid-write
+    leaves only hidden ``_temporary/`` or ``.spark-staging-*`` entries,
+    which are not ``crawl_date=`` directories and so never count.
     """
-    path = f"{out_dir}/_manifest"
-    if not _path_exists(spark, path):
-        return None
-    return spark.read.schema("crawl_date date, committed_at timestamp").parquet(path)
+    fs, jpath = _fs_path(spark, f"{out_dir}/_lineage")
+    if not fs.exists(jpath):
+        return set()
+    names = (st.getPath().getName() for st in fs.listStatus(jpath))
+    return {
+        date.fromisoformat(n.removeprefix("crawl_date="))
+        for n in names
+        if n.startswith("crawl_date=")
+    }
 
 
 def extract_and_write(
     spark: SparkSession, pages: DataFrame, out_dir: str, resume: bool = True
 ) -> dict:
-    """Full production job: extract → salt-partitioned write → lineage →
-    manifest commit, resumable at crawl_date granularity.
+    """Full production job: extract → salt-partitioned write → lineage
+    commit, resumable at crawl_date granularity.
 
     Pending dates are committed in chunks of MAX_DATES_PER_WRITE (see the
     module docstring). Raises ValueError before any write when a page has
@@ -139,14 +144,7 @@ def extract_and_write(
         raise ValueError("pages with a null warc_ts have no crawl_date to commit")
     all_dates = sorted(input_dates)
     if resume:
-        # resume = input dates ANTI manifest dates; the input was already
-        # scanned once above, so only the (tiny) manifest is read here
-        manifest = read_manifest(spark, out_dir)
-        committed = (
-            {r.crawl_date for r in manifest.select("crawl_date").collect()}
-            if manifest is not None
-            else set()
-        )
+        committed = committed_dates(spark, out_dir)
         todo = [d for d in all_dates if d not in committed]
     else:
         todo = all_dates
@@ -161,12 +159,12 @@ def extract_and_write(
         # replace each date wholesale: dynamic overwrite replaces only the
         # (date, bucket) directories this write produces, so a rewrite
         # from smaller input would leave the old rows in the other
-        # buckets. A pending date killed after the delete re-runs on
-        # resume; a committed date rewritten with resume=False and killed
-        # here is left empty, which verify_lineage reports.
+        # buckets. The commit record goes first, so a rewrite killed
+        # from here on leaves the date pending and resume re-runs it.
         for d in chunk:
-            fs, jpath = _fs_path(spark, f"{out_dir}/data/crawl_date={d}")
-            fs.delete(jpath, True)
+            for tree in ("_lineage", "data"):
+                fs, jpath = _fs_path(spark, f"{out_dir}/{tree}/crawl_date={d}")
+                fs.delete(jpath, True)
         # salt in the exchange, not the layout (see module docstring)
         (
             keyed.repartition("crawl_date", "host_bucket", "salt")
@@ -176,12 +174,9 @@ def extract_and_write(
             .partitionBy("crawl_date", "host_bucket")
             .parquet(f"{out_dir}/data")
         )
-        # lineage + manifest commit AFTER the data write returns. Lineage
-        # is dynamic-overwritten BY DATE (not appended): a crash between
-        # the lineage and manifest writes re-runs the chunk on restart,
-        # and the rewrite replaces those dates' lineage rows instead of
-        # duplicating them — audits stay exactly-once. Every page yields
-        # one row, so every date of the chunk has data to audit.
+        # the lineage write is the commit, AFTER the data write returns.
+        # Every page yields one row, so every date of the chunk gets a
+        # lineage directory.
         out_keyed = spark.read.parquet(f"{out_dir}/data").filter(
             F.col("crawl_date").isin(chunk)
         )
@@ -193,10 +188,5 @@ def extract_and_write(
             .partitionBy("crawl_date")
             .parquet(f"{out_dir}/_lineage")
         )
-        spark.createDataFrame(
-            [(d,) for d in chunk], "crawl_date date"
-        ).withColumn("committed_at", F.current_timestamp()).write.mode(
-            "append"
-        ).parquet(f"{out_dir}/_manifest")
 
     return {"dates_processed": todo, "dates_skipped": skipped}

@@ -3,9 +3,10 @@
 The reference is batch-only (its generator loops forever but has no
 event-time/state semantics — ``/root/reference/DataPreprocess/
 DataGenerator.py:399``, SURVEY §2.9). The north rule asks for *checkpoint
-resume*; ``ocr_spark.sinks`` provides the manifest-based variant, and this
-module provides the engine-managed one: ``Trigger.AvailableNow`` over the
-input table with a ``checkpointLocation``. AvailableNow drains everything
+resume*; ``ocr_spark.sinks`` provides the date-granular variant (committed
+lineage dates), and this module provides the engine-managed one:
+``Trigger.AvailableNow`` over the input table with a
+``checkpointLocation``. AvailableNow drains everything
 available then stops — rerunning after a crash resumes from the
 checkpoint's source offsets, giving exactly-once file-sink semantics with
 zero custom bookkeeping. At 10^12 documents the same job string runs as a

@@ -11,9 +11,9 @@ from pyspark.sql import Window
 
 from ocr_spark.config import HOST_HASH_BUCKETS, HOT_HOST_SALT
 from ocr_spark.sinks.partitioned import (
+    committed_dates,
     extract_and_write,
     lineage_metrics,
-    read_manifest,
     with_partition_keys,
 )
 from ocr_spark.sources.pages import expected_from_documents, pages_from_documents
@@ -137,9 +137,9 @@ def test_two_chunk_backfill(spark, pages, tmp_path):
     out = str(tmp_path / "out")
     r1 = extract_and_write(spark, shifted, out)
     assert len(r1["dates_processed"]) == 45 and not r1["dates_skipped"]
-    manifest = spark.read.parquet(f"{out}/_manifest")
-    assert manifest.count() == 45
-    assert manifest.select("committed_at").distinct().count() == 2
+    assert committed_dates(spark, out) == set(r1["dates_processed"])
+    lineage = spark.read.parquet(f"{out}/_lineage")
+    assert lineage.select("committed_at").distinct().count() == 2
 
     cols = ["url", "extracted_text"]
     got = spark.read.parquet(f"{out}/data").select(cols)
@@ -166,31 +166,23 @@ def test_null_warc_ts_raises_before_any_write(spark, pages, tmp_path, nulls):
     assert not os.path.exists(out)
 
 
-def test_corrupt_manifest_raises(spark, pages, tmp_path):
-    """A manifest that cannot be read is an error, not a first run: a
-    silent re-extract would append onto the corrupt directory forever."""
+@pytest.mark.parametrize("leftover", ["none", "_temporary", ".spark-staging-x"])
+def test_committed_dates_ignore_uncommitted_lineage(spark, pages, tmp_path, leftover):
+    """Only a ``_lineage/crawl_date=D`` directory commits D. A kill during
+    the first lineage write leaves ``_temporary/`` or a staged
+    ``.spark-staging-*/crawl_date=D/``: no date is committed, so every
+    date runs, and the next run resumes."""
     out = str(tmp_path / "out")
-    extract_and_write(spark, pages, out)
-    for part in glob.glob(f"{out}/_manifest/part-*.parquet"):
-        with open(part, "wb") as f:
-            f.write(b"not a parquet file")
-    with pytest.raises(Exception):
-        extract_and_write(spark, pages, out)
-
-
-def test_manifest_with_only_temporary_reads_as_empty(spark, pages, tmp_path):
-    """A kill during the first manifest append leaves only ``_temporary/``:
-    no date is committed, so every date runs, and the next run resumes."""
-    out = str(tmp_path / "out")
-    attempt = tmp_path / "out" / "_manifest" / "_temporary" / "0" / "_temporary"
-    attempt.mkdir(parents=True)
-    (attempt / "part-00000.parquet").write_bytes(b"PAR1")  # torn write
-    manifest = read_manifest(spark, out)
-    assert manifest is None or manifest.count() == 0
+    if leftover != "none":
+        staged = tmp_path / "out" / "_lineage" / leftover / "crawl_date=2024-01-01"
+        staged.mkdir(parents=True)
+        (staged / "part-00000.parquet").write_bytes(b"PAR1")  # torn write
+    assert committed_dates(spark, out) == set()
 
     dates = pages.select(F.to_date("warc_ts")).distinct().count()
     r = extract_and_write(spark, pages, out)
     assert len(r["dates_processed"]) == dates
+    assert committed_dates(spark, out) == set(r["dates_processed"])
     assert not extract_and_write(spark, pages, out)["dates_processed"]
 
 
