@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ocr_spark.streaming.extract_stream import read_events_stream, stream_to_parquet
+
 GAP_SECONDS = 30 * 60
 
 SESSION_SCHEMA = T.StructType(
@@ -145,10 +147,6 @@ def sessionize_stream(
     """Streaming sessionization with per-user state and event-time timeout."""
     from pyspark.sql.streaming.state import GroupStateTimeout
 
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(input_dir)
     state_schema = T.StructType(
         [
             T.StructField("session_no", T.LongType()),
@@ -159,7 +157,8 @@ def sessionize_stream(
         ]
     )
     sessions = (
-        events.withWatermark("ts", watermark)
+        read_events_stream(spark, input_dir)
+        .withWatermark("ts", watermark)
         .groupBy("user_id")
         .applyInPandasWithState(
             _session_func_gap(gap_seconds),
@@ -169,11 +168,4 @@ def sessionize_stream(
             timeoutConf=GroupStateTimeout.EventTimeTimeout,
         )
     )
-    return (
-        sessions.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
+    return stream_to_parquet(sessions, out_dir, checkpoint_dir)

@@ -38,8 +38,12 @@ Design decisions, written for the 1000-executor case:
   wholesale: lineage then data ``crawl_date=D`` directories are deleted
   first (so a rewrite killed before its commit leaves the date pending),
   then written with dynamic partition overwrite, set per write, never on
-  the session. The sink is idempotent at date granularity — the same
-  determinism-first discipline as the reference's fixture-driven
+  the session. A run with pending dates first deletes every
+  ``.spark-staging-*`` directory under ``data/`` and ``_lineage/`` (the
+  partial output of a write killed mid-job), which assumes one writer
+  per ``out_dir`` at a time: a second concurrent writer's staging would
+  be deleted under it. The sink is idempotent at date granularity — the
+  same determinism-first discipline as the reference's fixture-driven
   pipeline, minus its RNG trap.
 * **Format.** Hive-style partitioned parquet, one write path. A catalog
   table sink (Iceberg) waits until an Iceberg runtime ships with the
@@ -149,6 +153,13 @@ def extract_and_write(
     else:
         todo = all_dates
     skipped = [d for d in all_dates if d not in set(todo)]
+
+    if todo:  # staging left by killed writes (single writer assumed)
+        for tree in ("data", "_lineage"):
+            fs, staged = _fs_path(spark, f"{out_dir}/{tree}/.spark-staging-*")
+            # globStatus returns null, not an empty array, on some filesystems
+            for st in fs.globStatus(staged) or []:
+                fs.delete(st.getPath(), True)
 
     for at in range(0, len(todo), MAX_DATES_PER_WRITE):
         chunk = todo[at : at + MAX_DATES_PER_WRITE]

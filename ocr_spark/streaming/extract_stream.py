@@ -1,15 +1,29 @@
-"""Structured Streaming surfaces: incremental extraction + windowed aggs.
+"""Structured Streaming: a streaming source, an unchanged batch operator,
+and one writer.
 
 The reference is batch-only (its generator loops forever but has no
-event-time/state semantics — ``/root/reference/DataPreprocess/
-DataGenerator.py:399``, SURVEY §2.9). The north rule asks for *checkpoint
+event-time/state semantics — its ``DataPreprocess/DataGenerator.py:399``,
+SURVEY §2.9). The north rule asks for *checkpoint
 resume*; ``ocr_spark.sinks`` provides the date-granular variant (committed
-lineage dates), and this module provides the engine-managed one:
-``Trigger.AvailableNow`` over the input table with a
-``checkpointLocation``. AvailableNow drains everything
-available then stops — rerunning after a crash resumes from the
-checkpoint's source offsets, giving exactly-once file-sink semantics with
-zero custom bookkeeping. At 10^12 documents the same job string runs as a
+lineage dates, partitioned and lineage-audited), and this module the
+engine-managed one. A stream composes a source (``read_pages_stream``,
+``read_events_stream`` or ``sources.warc.read_warc_stream``, optionally
+through ``drop_recrawls``), a batch operator as it is (``extract_pages``,
+``extract_full``: one map stage with no cross-batch state), and the one
+writer, ``stream_to_parquet``::
+
+    stream_to_parquet(
+        extract_full(read_pages_stream(spark, inp), recognizer="font"),
+        out, ckpt)
+
+The writer is the parquet file sink with a ``checkpointLocation`` and
+``Trigger.AvailableNow`` (drain everything available, then stop). A
+restart resumes from the checkpoint's source offsets, and the sink skips
+a replayed batch that its ``out_dir/_spark_metadata`` log already holds,
+so the output is exactly-once with zero custom bookkeeping. Read
+``out_dir`` through Spark: that log is what makes the output
+exactly-once, and part files of a batch killed before its log entry can
+stay on disk. At 10^12 documents the same job string runs as a
 continuous incremental crawl-ingest by swapping the trigger.
 
 ``stream_event_counts`` is the stateful-aggregation surface: event-time
@@ -23,10 +37,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
+from ocr_spark.functions.url import canonical_url
 from ocr_spark.sources.pages import PAGES_SCHEMA
 
+# re-crawls of a canonical url within this event-time window are dropped
+RECRAWL_WATERMARK = "24 hours"
 
-def _read_pages(spark: SparkSession, input_dir: str) -> DataFrame:
+
+def read_pages_stream(spark: SparkSession, input_dir: str) -> DataFrame:
     """File-source stream of page parquet files, 8 files per micro-batch."""
     return (
         spark.readStream.schema(PAGES_SCHEMA)
@@ -35,108 +53,45 @@ def _read_pages(spark: SparkSession, input_dir: str) -> DataFrame:
     )
 
 
-def _write_partitioned(
-    extracted: DataFrame, out_dir: str, checkpoint_dir: str
-) -> StreamingQuery:
-    """Append extracted rows as parquet partitioned like the batch sink
-    (``crawl_date``/``host_bucket``), draining all input (AvailableNow)."""
-    from ocr_spark.sinks.partitioned import with_partition_keys
+def read_events_stream(spark: SparkSession, input_dir: str) -> DataFrame:
+    """File-source stream of ``events`` parquet files."""
+    return spark.readStream.schema(
+        "event_id long, ts timestamp, user_id long, event_type string, "
+        "value double, props string"
+    ).parquet(input_dir)
 
+
+def drop_recrawls(pages: DataFrame) -> DataFrame:
+    """Streaming URL dedup: one page per canonical url.
+
+    ``dropDuplicatesWithinWatermark`` on the canonical url: re-crawls of a
+    page arriving within RECRAWL_WATERMARK are emitted once; state is
+    bounded by the watermark (at Common Crawl cadence a 24h window spans a
+    segment's re-fetches). Apply it before extraction so duplicate pages
+    never cost Python kernel time.
+    """
     return (
-        with_partition_keys(extracted)
-        .drop("salt")
-        .writeStream.format("parquet")
+        pages.withColumn("_curl", canonical_url("url"))
+        .withWatermark("warc_ts", RECRAWL_WATERMARK)
+        .dropDuplicatesWithinWatermark(["_curl"])
+        .drop("_curl")
+    )
+
+
+def stream_to_parquet(
+    df: DataFrame, out_dir: str, checkpoint_dir: str
+) -> StreamingQuery:
+    """The one streaming writer: append ``df`` to parquet at ``out_dir``
+    through the file sink, draining all input (AvailableNow), exactly-once
+    across restarts from ``checkpoint_dir``."""
+    return (
+        df.writeStream.format("parquet")
         .option("path", out_dir)
         .option("checkpointLocation", checkpoint_dir)
-        .partitionBy("crawl_date", "host_bucket")
         .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
-
-
-def stream_extract(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incremental extraction: parquet page files → extracted parquet.
-
-    File-source streaming (each new file = one micro-batch unit); the fused
-    mapInPandas extraction stage is identical to the batch path — one code
-    path, two execution modes.
-    """
-    from ocr_spark.operators.extract_html import extract_pages
-
-    return _write_partitioned(
-        extract_pages(_read_pages(spark, input_dir)), out_dir, checkpoint_dir
-    )
-
-
-def stream_extract_full(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    recognizer: str = "font",
-) -> StreamingQuery:
-    """Incremental FUSED extraction (html blocks + embedded-image OCR) —
-    the streaming twin of ``operators.pipeline.extract_full``, one code
-    path for both modes.
-
-    Uses ``foreachBatch`` so each micro-batch runs the batch operator
-    verbatim: the fused pipeline is a single map stage that assembles
-    each page inside the Python worker (one input row → one output row),
-    so it holds no cross-batch state and needs no watermark.
-    Restart resumes from the checkpoint's source offsets. The append is
-    at-least-once per micro-batch: ``write_batch`` ignores ``batch_id``
-    and writes no manifest or lineage, so a batch replayed after a crash
-    between the append and the offset commit is appended again (ROADMAP
-    item 8).
-    """
-    from ocr_spark.operators.pipeline import extract_full
-
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        extract_full(batch_df, recognizer=recognizer).write.mode(
-            "append"
-        ).parquet(out_dir)
-
-    return (
-        _read_pages(spark, input_dir)
-        .writeStream.foreachBatch(write_batch)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_dedup_extract(
-    spark: SparkSession,
-    input_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    watermark: str = "24 hours",
-) -> StreamingQuery:
-    """Incremental extraction with streaming URL dedup.
-
-    ``dropDuplicatesWithinWatermark`` on the canonical url: re-crawls of a
-    page arriving within the watermark window are emitted once; state is
-    bounded by the watermark (the crawl-frequency knob — at Common Crawl
-    cadence a 24h window spans a segment's re-fetches). Dedup runs BEFORE
-    extraction so duplicate pages never cost Python kernel time.
-    """
-    from ocr_spark.functions.url import canonical_url
-    from ocr_spark.operators.extract_html import extract_pages
-
-    deduped = (
-        _read_pages(spark, input_dir)
-        .withColumn("_curl", canonical_url("url"))
-        .withWatermark("warc_ts", watermark)
-        .dropDuplicatesWithinWatermark(["_curl"])
-        .drop("_curl")
-    )
-    return _write_partitioned(extract_pages(deduped), out_dir, checkpoint_dir)
 
 
 def stream_event_counts(
@@ -153,12 +108,9 @@ def stream_event_counts(
     size is bounded by (watermark / window) × group cardinality — the knob
     that keeps a 10^12-event stream's state in memory.
     """
-    events = spark.readStream.schema(
-        "event_id long, ts timestamp, user_id long, event_type string, "
-        "value double, props string"
-    ).parquet(input_dir)
     agg = (
-        events.withWatermark("ts", watermark)
+        read_events_stream(spark, input_dir)
+        .withWatermark("ts", watermark)
         .groupBy(F.window("ts", window).alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -172,30 +124,4 @@ def stream_event_counts(
             "sum_value",
         )
     )
-    return (
-        agg.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-
-
-def stream_extract_warc(
-    spark: SparkSession,
-    warc_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-) -> StreamingQuery:
-    """Incremental WARC ingestion: newly-landed ``.warc(.gz)`` archives →
-    parsed pages → fused extraction → partitioned parquet, exactly-once
-    via the checkpoint. The continuous-crawl front door: a production
-    deployment points this at the bucket where crawl segments land and
-    swaps the trigger; the parse/extract stages are byte-identical to the
-    batch ``read_warc`` path (shared ``_warc_pages_fn``)."""
-    from ocr_spark.operators.extract_html import extract_pages
-    from ocr_spark.sources.warc import read_warc_stream
-
-    pages = read_warc_stream(spark, warc_dir)
-    return _write_partitioned(extract_pages(pages), out_dir, checkpoint_dir)
+    return stream_to_parquet(agg, out_dir, checkpoint_dir)

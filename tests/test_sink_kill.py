@@ -5,9 +5,10 @@ so its own JVM) with ``DataFrameWriter.parquet`` patched to SIGKILL the
 child's whole process group at a chosen write, either at once or on a
 timer. The test session then reruns the job with ``resume=True`` and
 checks that the data rows hash like a clean run's, the lineage audit is
-empty, and a third call has nothing left to do. A timer kill lands at a
-different point on a loaded host; that changes what a case covers, not
-what must hold after the rerun.
+empty, no ``.spark-staging-*`` directory is left, and a third call has
+nothing left to do. A timer kill lands at a different point on a loaded
+host; that changes what a case covers, not what must hold after the
+rerun.
 
 Run as a script, this file is the child:
 ``python tests/test_sink_kill.py OUT SHAPE TREE NTH DELAY RESUME``.
@@ -15,6 +16,7 @@ Run as a script, this file is the child:
 
 from __future__ import annotations
 
+import glob
 import hashlib
 import os
 import signal
@@ -121,6 +123,12 @@ def clean_sha(spark, inputs, tmp_path_factory):
     return shas
 
 
+def _staging_left(out):
+    """The ``.spark-staging-*`` directories left under ``data/`` or
+    ``_lineage/``."""
+    return glob.glob(f"{out}/*/.spark-staging-*")
+
+
 def _dates(pages):
     return sorted(r.d for r in pages.select(F.to_date("warc_ts").alias("d")).distinct().collect())
 
@@ -149,6 +157,7 @@ def test_first_run_killed_then_resumed(spark, inputs, clean_sha, tmp_path, case)
         assert r["dates_processed"] == (dates if expect == "all" else dates[30:])
     assert _data_sha(spark, out) == clean_sha[shape]
     assert verify_lineage(spark, out).count() == 0
+    assert not _staging_left(out)
     assert not extract_and_write(spark, pages, out)["dates_processed"]
 
 
@@ -167,6 +176,7 @@ def test_killed_rewrite_leaves_the_date_pending(spark, inputs, clean_sha, tmp_pa
     assert spark.read.parquet(f"{out}/data").count() == pages.count()
     assert _data_sha(spark, out) == clean_sha["full"]
     assert verify_lineage(spark, out).count() == 0
+    assert not _staging_left(out)
     assert not extract_and_write(spark, pages, out)["dates_processed"]
 
 

@@ -171,7 +171,8 @@ def test_committed_dates_ignore_uncommitted_lineage(spark, pages, tmp_path, left
     """Only a ``_lineage/crawl_date=D`` directory commits D. A kill during
     the first lineage write leaves ``_temporary/`` or a staged
     ``.spark-staging-*/crawl_date=D/``: no date is committed, so every
-    date runs, and the next run resumes."""
+    date runs, the run deletes the staged leftover, and the next run
+    resumes."""
     out = str(tmp_path / "out")
     if leftover != "none":
         staged = tmp_path / "out" / "_lineage" / leftover / "crawl_date=2024-01-01"
@@ -183,6 +184,8 @@ def test_committed_dates_ignore_uncommitted_lineage(spark, pages, tmp_path, left
     r = extract_and_write(spark, pages, out)
     assert len(r["dates_processed"]) == dates
     assert committed_dates(spark, out) == set(r["dates_processed"])
+    if leftover.startswith(".spark-staging-"):
+        assert not (tmp_path / "out" / "_lineage" / leftover).exists()
     assert not extract_and_write(spark, pages, out)["dates_processed"]
 
 

@@ -6,8 +6,14 @@ import shutil
 
 import pyspark.sql.functions as F
 
+from ocr_spark.operators.extract_html import extract_pages
 from ocr_spark.sources.pages import expected_from_documents, pages_from_documents
-from ocr_spark.streaming.extract_stream import stream_event_counts, stream_extract
+from ocr_spark.streaming.extract_stream import (
+    drop_recrawls,
+    read_pages_stream,
+    stream_event_counts,
+    stream_to_parquet,
+)
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -19,14 +25,19 @@ def test_stream_extract_and_checkpoint_resume(spark, tmp_path):
     pages = pages_from_documents(spark, SF_DIR)
     pages.write.parquet(inp)
 
-    q = stream_extract(spark, inp, out, ckpt)
+    def start():
+        return stream_to_parquet(
+            extract_pages(read_pages_stream(spark, inp)), out, ckpt
+        )
+
+    q = start()
     q.awaitTermination(300)
     got = spark.read.parquet(out)
     n = pages.count()
     assert got.count() == n
 
     # re-trigger with no new files: checkpoint prevents reprocessing
-    q2 = stream_extract(spark, inp, out, ckpt)
+    q2 = start()
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == n
 
@@ -72,10 +83,6 @@ def test_stream_event_counts_matches_batch(spark, tmp_path):
 
 def test_stream_dedup_extract(spark, tmp_path):
     """Re-crawled duplicate urls within the watermark are extracted once."""
-    import pyspark.sql.functions as F
-
-    from ocr_spark.streaming.extract_stream import stream_dedup_extract
-
     inp = str(tmp_path / "in")
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
@@ -84,7 +91,9 @@ def test_stream_dedup_extract(spark, tmp_path):
     dup = pages.withColumn("url", F.concat("url", F.lit("?utm_source=feed")))
     pages.unionByName(dup).write.parquet(inp)
 
-    q = stream_dedup_extract(spark, inp, out, ckpt)
+    q = stream_to_parquet(
+        extract_pages(drop_recrawls(read_pages_stream(spark, inp))), out, ckpt
+    )
     q.awaitTermination(300)
     got = spark.read.parquet(out)
     assert got.count() == 60  # one row per canonical url, not 120
@@ -92,14 +101,14 @@ def test_stream_dedup_extract(spark, tmp_path):
 
 
 def test_stream_extract_full_matches_batch(spark, tmp_path):
-    """The fused streaming twin must equal batch extract_full exactly —
-    including the noisy font-rendered embedded-image recognition — and a
-    re-trigger with no new files must not duplicate output."""
+    """The fused extraction streamed through the file sink must equal
+    batch extract_full exactly — including the noisy font-rendered
+    embedded-image recognition — and a re-trigger with no new files must
+    not duplicate output."""
     from ocr_spark.operators.pipeline import extract_full
     from ocr_spark.sources.pages import (
         pages_with_noisy_font_images_from_documents,
     )
-    from ocr_spark.streaming.extract_stream import stream_extract_full
 
     inp = str(tmp_path / "in_full")
     out = str(tmp_path / "out_full")
@@ -107,7 +116,14 @@ def test_stream_extract_full_matches_batch(spark, tmp_path):
     pages = pages_with_noisy_font_images_from_documents(spark, SF_DIR)
     pages.write.parquet(inp)
 
-    q = stream_extract_full(spark, inp, out, ckpt, recognizer="font")
+    def start():
+        return stream_to_parquet(
+            extract_full(read_pages_stream(spark, inp), recognizer="font"),
+            out,
+            ckpt,
+        )
+
+    q = start()
     q.awaitTermination(300)
     got = spark.read.parquet(out)
     batch = extract_full(spark.read.parquet(inp), recognizer="font")
@@ -121,6 +137,6 @@ def test_stream_extract_full_matches_batch(spark, tmp_path):
     )
     assert same == n
 
-    q2 = stream_extract_full(spark, inp, out, ckpt, recognizer="font")
+    q2 = start()
     q2.awaitTermination(300)
     assert spark.read.parquet(out).count() == n

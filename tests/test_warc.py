@@ -209,15 +209,16 @@ def test_warc_fixture_contract_roundtrip(spark, tmp_path, monkeypatch):
 
 
 def test_warc_streaming_twin_and_incremental_resume(spark, tmp_path, monkeypatch):
-    """The streaming WARC path equals the batch path, and a second
-    AvailableNow run after new archives land processes ONLY the new files
-    (checkpoint resume — the continuous-crawl contract)."""
+    """The streaming WARC source under the batch extraction equals the
+    batch path, and a second AvailableNow run after new archives land
+    processes ONLY the new files (checkpoint resume — the continuous-crawl
+    contract)."""
     import os
     import shutil
 
-    from ocr_spark.sources.warc import read_warc
-    from ocr_spark.sources.warc import warc_fixture
-    from ocr_spark.streaming.extract_stream import stream_extract_warc
+    from ocr_spark.operators.extract_html import extract_pages
+    from ocr_spark.sources.warc import read_warc, read_warc_stream, warc_fixture
+    from ocr_spark.streaming.extract_stream import stream_to_parquet
 
     monkeypatch.setenv("SPARK_GRAFT_FIXTURE_CACHE", str(tmp_path / "cache"))
     sf = "/root/testdata/sf0.001"
@@ -232,7 +233,11 @@ def test_warc_streaming_twin_and_incremental_resume(spark, tmp_path, monkeypatch
 
     out = str(tmp_path / "out")
     ckpt = str(tmp_path / "ckpt")
-    q = stream_extract_warc(spark, warc_dir, out, ckpt)
+    def start():
+        pages = read_warc_stream(spark, warc_dir)
+        return stream_to_parquet(extract_pages(pages), out, ckpt)
+
+    q = start()
     q.awaitTermination(120)
     first = spark.read.parquet(out).count()
     expect_first = read_warc(spark, warc_dir + "/*.warc.gz").count()
@@ -240,7 +245,7 @@ def test_warc_streaming_twin_and_incremental_resume(spark, tmp_path, monkeypatch
 
     # second drop: the remaining archive lands; resume processes only it
     shutil.copy(os.path.join(built, files[-1]), warc_dir)
-    q = stream_extract_warc(spark, warc_dir, out, ckpt)
+    q = start()
     q.awaitTermination(120)
     total = spark.read.parquet(out).count()
     assert total == 500  # the whole sf0.001 corpus exactly once
