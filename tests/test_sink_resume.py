@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import glob
 import os
+import shutil
 
 import pyspark.sql.functions as F
 import pytest
@@ -11,10 +12,13 @@ from pyspark.sql import Window
 
 from ocr_spark.config import HOST_HASH_BUCKETS, HOT_HOST_SALT
 from ocr_spark.sinks.partitioned import (
+    LINEAGE_COLS,
     committed_dates,
     extract_and_write,
     lineage_metrics,
+    verify_lineage,
     with_partition_keys,
+    write_salts,
 )
 from ocr_spark.sources.pages import expected_from_documents, pages_from_documents
 
@@ -52,8 +56,12 @@ def test_write_resume_idempotent(spark, pages, tmp_path):
     r1 = extract_and_write(spark, pages, out)
     assert len(r1["dates_processed"]) >= 3 and not r1["dates_skipped"]
 
-    # physical layout: hive-style date/bucket dirs
-    assert glob.glob(f"{out}/data/crawl_date=*/host_bucket=*/part-*.parquet")
+    # physical layout: hive-style date/bucket dirs. No directory holds
+    # more than a writer task's share here, so each is written by one
+    # task: one part file per directory
+    dirs = glob.glob(f"{out}/data/crawl_date=*/host_bucket=*")
+    assert dirs
+    assert [len(glob.glob(f"{d}/part-*.parquet")) for d in dirs] == [1] * len(dirs)
 
     # full rerun: everything already committed → nothing reprocessed
     r2 = extract_and_write(spark, pages, out)
@@ -108,8 +116,6 @@ def test_lineage_matches_data(spark, pages, tmp_path):
 
 
 def test_verify_lineage_clean_and_detects_tamper(spark, pages, tmp_path):
-    from ocr_spark.sinks.partitioned import verify_lineage
-
     out = str(tmp_path / "out")
     extract_and_write(spark, pages, out)
     assert verify_lineage(spark, out).count() == 0
@@ -128,7 +134,6 @@ def test_two_chunk_backfill(spark, pages, tmp_path):
     url's text is the extractor's, the audit is clean and a rerun is a
     no-op."""
     from ocr_spark.operators.extract_html import extract_pages
-    from ocr_spark.sinks.partitioned import verify_lineage
 
     day = (F.row_number().over(Window.orderBy("url")) - 1) % 45
     shifted = pages.withColumn(
@@ -227,9 +232,8 @@ def test_session_conf_untouched_and_rewrite_replaces_one_date(spark, pages, tmp_
 def test_rewrite_from_smaller_input_leaves_no_stale_rows(spark, pages, tmp_path):
     """A date is replaced wholesale: rewriting it from one of its pages
     leaves exactly that page's row, not the old rows of every host bucket
-    the smaller input no longer produces, and the audit stays clean."""
-    from ocr_spark.sinks.partitioned import verify_lineage
-
+    the smaller input no longer produces. Lineage comes from the rows the
+    job meant to write, so stale rows would also fail the audit."""
     out = str(tmp_path / "out")
     extract_and_write(spark, pages, out)
     day = pages.agg(F.min(F.to_date("warc_ts"))).first()[0]
@@ -240,8 +244,67 @@ def test_rewrite_from_smaller_input_leaves_no_stale_rows(spark, pages, tmp_path)
     one_page = pages.filter(on_day).orderBy("url").limit(1)
     r = extract_and_write(spark, one_page, out, resume=False)
     assert r["dates_processed"] == [day]
+    assert verify_lineage(spark, out).count() == 0
 
     data = spark.read.parquet(f"{out}/data")
     assert data.filter(F.col("crawl_date") == day).count() == 1
     assert data.filter(F.col("crawl_date") != day).count() == others
-    assert verify_lineage(spark, out).count() == 0
+
+
+def _two_except_alls(spark, out_dir):
+    """The audit as two anti-matches, the reference for the one-pass
+    ``verify_lineage``."""
+    stored = spark.read.parquet(f"{out_dir}/_lineage").select(LINEAGE_COLS)
+    recomputed = lineage_metrics(spark.read.parquet(f"{out_dir}/data")).select(LINEAGE_COLS)
+    return stored.exceptAll(recomputed).unionByName(recomputed.exceptAll(stored))
+
+
+@pytest.fixture(scope="module")
+def written(spark, pages, tmp_path_factory):
+    out = str(tmp_path_factory.mktemp("written") / "out")
+    extract_and_write(spark, pages, out)
+    return out
+
+
+@pytest.mark.parametrize("tamper", ["clean", "deleted_bucket", "duplicate_commit"])
+def test_one_pass_audit_equals_two_except_alls(spark, written, tmp_path, tamper):
+    out = str(tmp_path / "out")
+    shutil.copytree(written, out)
+    if tamper == "deleted_bucket":
+        shutil.rmtree(sorted(glob.glob(f"{out}/data/crawl_date=*/host_bucket=*"))[0])
+    elif tamper == "duplicate_commit":
+        part = sorted(glob.glob(f"{out}/_lineage/crawl_date=*/part-*.parquet"))[0]
+        shutil.copy(part, part.replace("part-", "part-copy-"))
+
+    got = sorted(verify_lineage(spark, out).collect())
+    assert got == sorted(_two_except_alls(spark, out).collect())
+    assert (len(got) == 0) == (tamper == "clean")
+
+
+def test_write_salts_splits_only_a_directory_over_one_task_share():
+    assert write_salts([72] * 63, 4) == 1  # even directories
+    hostile = [1500] + [10] * 150  # half the rows in one directory
+    assert write_salts(hostile, 4) == 2
+    assert write_salts(hostile, 64) == HOT_HOST_SALT
+    assert write_salts([1] * 1920, 16_000) == HOT_HOST_SALT
+
+
+def test_extract_and_write_leaves_nothing_cached(spark, tmp_path, monkeypatch):
+    """The keyed extraction output is persisted for the lineage and
+    unpersisted when the sink returns, and also when its data write
+    raises."""
+    from pyspark.sql import DataFrameWriter
+
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    before = cache.numCachedEntries()
+    fresh = pages_from_documents(spark, SF_DIR)
+    extract_and_write(spark, fresh, str(tmp_path / "ok"))
+    assert cache.numCachedEntries() == before
+
+    def fail(self, path, *args, **kwargs):
+        raise RuntimeError("data write failed")
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", fail)
+    with pytest.raises(RuntimeError, match="data write failed"):
+        extract_and_write(spark, fresh, str(tmp_path / "failed"))
+    assert cache.numCachedEntries() == before

@@ -2,10 +2,12 @@
 the corpus, one page with 10^5 DOM nodes, and an AQE skew-join
 demonstration — the shapes that kill naive 100-TB runs.
 
-The salt histogram is the load-bearing check: without the explicit salt
-the hot host's entire write serializes through ONE task (its rows share
-(crawl_date, host_bucket)); with it they spread over HOT_HOST_SALT
-writer tasks while still landing in one directory partition.
+The salt histogram is the load-bearing check: without the salt the hot
+host's entire write serializes through ONE task (its rows share
+(crawl_date, host_bucket)). The sink sizes the salt from the input
+(``write_salts``): half the rows in one directory split over 2 tasks of
+a 4-task write and over HOT_HOST_SALT tasks of a 64-task one, while
+still landing in one directory partition.
 """
 
 from __future__ import annotations
@@ -44,19 +46,23 @@ def _hostile_pages(spark, n=3000, hot_frac=0.5, n_cold_hosts=37):
 
 def test_hot_host_salt_splits_writer_tasks(spark):
     """The write exchange's salt actually splits the hot host: measured
-    task-size histogram over an emulated 64-task exchange."""
+    task-size histogram over an emulated 64-task exchange, salted as the
+    sink sizes it for 64 tasks."""
+    from ocr_spark.functions import url_host_bucket
     from ocr_spark.operators.extract_html import extract_pages
-    from ocr_spark.sinks.partitioned import with_partition_keys
+    from ocr_spark.sinks.partitioned import with_partition_keys, write_salts
 
     pages = _hostile_pages(spark)
-    keyed = with_partition_keys(extract_pages(pages))
+    dir_rows = pages.groupBy(F.to_date("warc_ts"), url_host_bucket("url")).count()
+    salts = write_salts([r["count"] for r in dir_rows.collect()], 64)
+    keyed = with_partition_keys(extract_pages(pages), salts)
     # hot rows use every salt value (the precondition for any split)
     hot = keyed.filter(F.col("url").startswith(f"https://{HOT}"))
     n_salts = hot.select("salt").distinct().count()
     assert n_salts == HOT_HOST_SALT
 
     # emulate a wide cluster exchange (the sink's own repartition uses
-    # the session's shuffle.partitions; tests run at 4)
+    # the default parallelism; tests run at 4)
     hist = (
         keyed.repartition(64, "crawl_date", "host_bucket", "salt")
         .withColumn("pid", F.spark_partition_id())
