@@ -228,15 +228,16 @@ def q_curate_hosts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Domain-curation rollup — the keep/drop-this-host decision surface
     of a web corpus pipeline: per host, document count, mean quality
     score, and exact-duplicate ratio (1 − distinct contents / docs). One
-    partial-agg shuffle on the host key; quality is the shared
-    ``functions.quality_expr`` column expression."""
-    from ocr_spark.functions import quality_expr
+    partial-agg shuffle on the host key; quality is the ``quality``
+    column of ``textstats.quality_cols``."""
+    from ocr_spark.operators.textstats import quality_cols, words
 
-    docs = _docs(spark, sf_dir)
-    host = F.expr(_HOST_SQL)
-    return docs.groupBy(host.alias("host")).agg(
+    docs = _docs(spark, sf_dir).select(
+        F.expr(_HOST_SQL).alias("host"), "text", words().alias("_w")
+    )
+    return docs.select("host", "text", *quality_cols()).groupBy("host").agg(
         F.count("*").alias("n_docs"),
-        F.round(F.avg(quality_expr("text")), 6).alias("avg_quality"),
+        F.round(F.avg("quality"), 6).alias("avg_quality"),
         F.round(
             F.lit(1.0) - F.countDistinct(F.md5("text")) / F.count("*"), 6
         ).alias("dup_ratio"),

@@ -3,8 +3,9 @@
 Everything here returns a ``pyspark.sql.Column`` built from built-in
 functions only — JVM-side, codegen-friendly, usable in any DataFrame
 pipeline. These are the engine's equivalents of the reference's scalar
-function layer (SURVEY §2.7): the quality score, url host extraction,
-hashing, and the partition-key derivations used by the sink.
+function layer (SURVEY §2.7): url host extraction, hashing, and the
+partition-key derivations used by the sink. The quality score is
+``operators.textstats.quality_cols``.
 """
 
 from __future__ import annotations
@@ -13,21 +14,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 from ocr_spark.config import HOST_HASH_BUCKETS, HOT_HOST_SALT
-from ocr_spark.operators.textstats import _WORDS_EXPR
-
-
-def quality_expr(col: str = "text") -> Column:
-    """The C4/Gopher-style composite quality score in [0, 1] (rounded 6dp),
-    identical to ``operators.textstats.quality_score``'s output column."""
-    w = _WORDS_EXPR.format(col=col)
-    stop = "'the','a','and','of','in','to','is'"
-    return F.expr(
-        f"round(least(size({w}) / 64.0, 1.0)"
-        f" * (1.0 - regexp_count({col}, '[^a-zA-Z0-9\\\\s]')"
-        f"       / cast(greatest(length({col}), 1) as double))"
-        f" * (0.5 + 0.5 * least(size(filter({w}, x -> x in ({stop})))"
-        f"       / cast(greatest(size({w}), 1) as double) * 5.0, 1.0)), 6)"
-    )
 
 
 def host_of_url(col: str | Column = "url") -> Column:

@@ -3,9 +3,9 @@
 The same document commonly appears under many URL spellings: http vs
 https, uppercase hosts, default ports, trailing slashes, fragments, and
 tracking query parameters. ``canonical_url`` normalizes all of these with
-built-in regexp expressions (JVM-side, codegen) so URL-level dedup is a
-plain hash-groupBy — the cheapest dedup tier, run before any content
-hashing.
+built-in regexp expressions (JVM-side, codegen) so URL-level dedup
+(``streaming.drop_recrawls``) keys on one column — the cheapest dedup
+tier, run before any content hashing.
 
 Steps (order matters):
 1. scheme → lowercase, http:// and https:// unified to https://
@@ -18,7 +18,7 @@ Steps (order matters):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # param-name boundary: the lookbehind pins the match to a parameter START
@@ -49,21 +49,3 @@ def canonical_url(col: str | Column = "url") -> Column:
     c = F.regexp_replace(c, r"(https://[^/]+/.+?)/$", "$1")
     return F.when(raw.rlike(r"(?i)^https?://"), c).otherwise(raw)
 
-
-def dedup_by_url(pages: DataFrame, url_col: str = "url") -> DataFrame:
-    """URL-tier dedup: one row per canonical url (first by raw url order —
-    deterministic). The window shuffles the surviving rows once on the
-    canonical key."""
-    from pyspark.sql import Window
-
-    curl, rn = "__ocr_curl__", "__ocr_rn__"
-    while curl in pages.columns or rn in pages.columns:
-        curl += "_"
-        rn += "_"
-    keyed = pages.withColumn(curl, canonical_url(url_col))
-    w = Window.partitionBy(curl).orderBy(F.col(url_col))
-    return (
-        keyed.withColumn(rn, F.row_number().over(w))
-        .filter(F.col(rn) == 1)
-        .drop(rn, curl)
-    )

@@ -197,10 +197,11 @@ def iter_avi_frames(
     mjpg = fourcc.upper() == b"MJPG"
     if mjpg:
         # Motion-JPEG: every frame chunk is a standalone JPEG. Frames may
-        # omit Huffman tables (the OpenDML convention implies Annex K) —
-        # splice them in; the per-frame SOF dims are authoritative and
-        # must agree with the strf header (container-consistency check).
-        from ocr_spark.kernels.jpeg import decode_jpeg, ensure_huffman_tables
+        # omit Huffman tables (the OpenDML convention implies Annex K),
+        # which decode_jpeg assumes itself; the per-frame SOF dims are
+        # authoritative and must agree with the strf header
+        # (container-consistency check).
+        from ocr_spark.kernels.jpeg import decode_jpeg
     else:
         if compression != 0:
             raise ValueError(
@@ -220,9 +221,7 @@ def iter_avi_frames(
             return
         kept += 1
         if mjpg:
-            img = decode_jpeg(
-                ensure_huffman_tables(data[body_start : body_start + length])
-            )
+            img = decode_jpeg(data[body_start : body_start + length])
             if img.ndim == 3:
                 img = (
                     img.astype(np.float32).mean(axis=2).round().astype(np.uint8)

@@ -1,12 +1,13 @@
-"""Pure-stdlib baseline JPEG (JFIF) codec: the reference's flagship input
-format, completing the PNG / WAV / AVI pure-stdlib codec family.
+"""Pure-stdlib JPEG (JFIF) codec: a baseline encoder and a sequential +
+progressive decoder, completing the PNG / WAV / AVI pure-stdlib codec
+family.
 
 The reference reads JPEGs as its primary input (``cv2.imread`` of
 ``img.jpg`` at ``/root/reference/test_img.py:38-43``; the TF ingest path
 calls ``decode_jpeg`` variants at
 ``/root/reference/DataPreprocess/DataGenerator.py:599-602``); web crawls
 are overwhelmingly JPEG. This container has no image libraries, so the
-engine carries its own ITU T.81 baseline implementation:
+engine carries its own ITU T.81 implementation:
 
 - ``encode_jpeg``: baseline sequential JFIF — 8-bit grayscale (one
   component) or RGB (YCbCr 4:4:4, no subsampling), Annex-K quantization
@@ -22,12 +23,14 @@ engine carries its own ITU T.81 baseline implementation:
   successive approximation, EOB runs, the T.81 G.1.2.3 correction-bit
   protocol), grayscale, YCbCr, Adobe APP14 direct-RGB (transform 0),
   and 4-component CMYK/YCCK (Adobe inverted convention; bare
-  no-APP14 CMYK taken non-inverted). Arithmetic coding, 12-bit
-  precision, lossless and hierarchical modes raise ``ValueError`` —
-  the callers' malformed-payload discipline turns that into a row
-  skip, never a task crash (same contract as ``kernels.png``).
-- ``jpeg_dims``: header-only SOFn scan — dimensions come from the
-  container bytes, never from advisory metadata.
+  no-APP14 CMYK taken non-inverted). One function, ``_decode_scan``,
+  decodes every scan: a sequential scan is the progressive walk over
+  the single band 0..63 at Al=0. A stream with no DHT before its first
+  scan decodes with the Annex-K tables (MJPEG-in-AVI frames omit them
+  by convention). Arithmetic coding, 12-bit precision, lossless and
+  hierarchical modes raise ``ValueError`` — the callers'
+  malformed-payload discipline turns that into a row skip, never a task
+  crash (same contract as ``kernels.png``).
 
 Hostile-input discipline mirrors ``kernels.png``: the declared raster is
 bounded BEFORE any allocation (``MAX_DECODE_PIXELS``), marker lengths are
@@ -122,6 +125,14 @@ _AC_CHROMA_VALS = [
     0xDA, 0xE2, 0xE3, 0xE4, 0xE5, 0xE6, 0xE7, 0xE8, 0xE9, 0xEA, 0xF2,
     0xF3, 0xF4, 0xF5, 0xF6, 0xF7, 0xF8, 0xF9, 0xFA,
 ]
+
+# (class, id) → (bits, vals): the tables a scan with no DHT before it uses
+_ANNEX_K_HUFFMAN = {
+    (0, 0): (_DC_LUMA_BITS, _DC_LUMA_VALS),
+    (1, 0): (_AC_LUMA_BITS, _AC_LUMA_VALS),
+    (0, 1): (_DC_CHROMA_BITS, _DC_CHROMA_VALS),
+    (1, 1): (_AC_CHROMA_BITS, _AC_CHROMA_VALS),
+}
 
 
 def _zigzag_order() -> np.ndarray:
@@ -688,117 +699,6 @@ def _next_segment(segs, seg_idx, p, nb):
     return _windows(segs[seg_idx + 1][0])
 
 
-def _decode_block(w, p, nb, dc_lut, ac_lut, pred, coefs, base):
-    """Decode ONE baseline 8×8 block at bit ``p`` into
-    ``coefs[base : base + 64]`` (zigzag order). Returns ``(p, pred)``."""
-    if p >= nb:
-        raise ValueError("truncated entropy-coded data")
-    win = w[p >> 3]
-    o = p & 7
-    v = dc_lut[(win >> (24 - o)) & 0xFFFF]
-    if v == 0:
-        raise ValueError("invalid Huffman code")
-    t = v & 0xFF
-    if t > 11:
-        raise ValueError("invalid DC category")
-    ln = v >> 8
-    if t:
-        extra = (win >> (40 - o - ln - t)) & ((1 << t) - 1)
-        pred += extra if extra >= (1 << (t - 1)) else extra - (1 << t) + 1
-    p += ln + t
-    coefs[base] = pred
-    k = base + 1
-    end = base + 63
-    while k <= end:
-        if p >= nb:
-            raise ValueError("truncated entropy-coded data")
-        win = w[p >> 3]
-        v = ac_lut[(win >> (24 - (p & 7))) & 0xFFFF]
-        if v == 0:
-            raise ValueError("invalid Huffman code")
-        ln = v >> 8
-        s = v & 15
-        if s == 0:
-            p += ln
-            if (v & 0xFF) == 0xF0:  # ZRL: 16 zeros
-                k += 16
-                continue
-            break  # EOB
-        k += (v >> 4) & 15
-        if k > end:
-            raise ValueError("AC run past block end")
-        extra = (win >> (40 - (p & 7) - ln - s)) & ((1 << s) - 1)
-        p += ln + s
-        coefs[k] = extra if extra >= (1 << (s - 1)) else extra - (1 << s) + 1
-        k += 1
-    return p, pred
-
-
-def jpeg_dims(data: bytes) -> tuple[int, int, int]:
-    """Header-only scan → (width, height, n_components) from the SOFn
-    segment. Raises ``ValueError`` on anything that is not a JPEG."""
-    if len(data) < 4 or data[:2] != JPEG_MAGIC:
-        raise ValueError("not a JPEG (missing SOI)")
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            raise ValueError("marker sync lost")
-        marker = data[pos + 1]
-        if marker in (0xD8, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (length,) = struct.unpack_from(">H", data, pos + 2)
-        if length < 2 or pos + 2 + length > len(data):
-            raise ValueError("truncated marker segment")
-        if 0xC0 <= marker <= 0xCF and marker not in (0xC4, 0xC8, 0xCC):
-            _prec, h, w, ncomp = struct.unpack_from(">BHHB", data, pos + 4)
-            return w, h, ncomp
-        pos += 2 + length
-    raise ValueError("no SOF marker found")
-
-
-def _std_dht_segment() -> bytes:
-    """One DHT segment carrying all four Annex-K tables (DC/AC × ids 0/1)
-    — the tables a tableless MJPEG-in-AVI frame implies by convention."""
-    body = b""
-    for cls, tid, bits, vals in (
-        (0, 0, _DC_LUMA_BITS, _DC_LUMA_VALS),
-        (1, 0, _AC_LUMA_BITS, _AC_LUMA_VALS),
-        (0, 1, _DC_CHROMA_BITS, _DC_CHROMA_VALS),
-        (1, 1, _AC_CHROMA_BITS, _AC_CHROMA_VALS),
-    ):
-        body += bytes([cls << 4 | tid]) + bytes(bits) + bytes(vals)
-    return b"\xff\xc4" + struct.pack(">H", len(body) + 2) + body
-
-
-def ensure_huffman_tables(data: bytes) -> bytes:
-    """Splice the standard Annex-K Huffman tables before the first SOS of
-    a JPEG that carries none. MJPEG-in-AVI frames conventionally omit DHT
-    (the OpenDML spec says decoders must assume the T.81 Annex-K tables);
-    plain JPEGs with their own tables pass through untouched, as does
-    anything this header walk cannot parse (the full decoder will then
-    report the real error)."""
-    if len(data) < 4 or data[:2] != JPEG_MAGIC:
-        return data
-    pos = 2
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            return data
-        marker = data[pos + 1]
-        if marker == 0xC4:  # has its own tables
-            return data
-        if marker == 0xDA:  # reached SOS with no DHT seen
-            return data[:pos] + _std_dht_segment() + data[pos:]
-        if marker in (0xD8, 0xD9, 0x01) or 0xD0 <= marker <= 0xD7:
-            pos += 2
-            continue
-        (length,) = struct.unpack_from(">H", data, pos + 2)
-        if length < 2:
-            return data
-        pos += 2 + length
-    return data
-
-
 def _alloc_blocks(frame):
     """Per-component zigzag coefficient store on the MCU-padded grid: 64
     int64 slots per block in one flat ``np.zeros`` buffer (calloc'd, so
@@ -822,65 +722,8 @@ def _alloc_blocks(frame):
     return comp_coefs, comp_bw, mcus_x, mcus_y
 
 
-def _decode_baseline_scan(
-    data, seg_end, body, comps, huff, restart_interval,
-    comp_coefs, comp_bw, mcus_x, mcus_y,
-):
-    """The single interleaved scan of a baseline/extended-sequential
-    image: every component's full spectrum, MCU order."""
-    ns = body[0]
-    if ns != len(comps):
-        raise ValueError("non-interleaved multi-scan sequential JPEG "
-                         "unsupported")
-    scan_tables = {}
-    for si in range(ns):
-        cid = body[1 + 2 * si]
-        tt = body[2 + 2 * si]
-        scan_tables[cid] = (tt >> 4, tt & 15)
-
-    # resolve each component's Huffman LUTs once (they cannot change
-    # mid-scan); undefined-table errors surface before any MCU decodes
-    comp_tabs: list[tuple[list[int], list[int]]] = []
-    for cid, _hs, _vs, _tq in comps:
-        td, ta = scan_tables.get(cid, (0, 0))
-        dc_tab = huff.get((0, td))
-        ac_tab = huff.get((1, ta))
-        if dc_tab is None or ac_tab is None:
-            raise ValueError("scan references undefined DHT")
-        comp_tabs.append((dc_tab, ac_tab))
-
-    segs, _end = _split_entropy(data, seg_end)
-    seg_idx = 0
-    w, nb = _windows(segs[0][0])
-    p = 0
-    preds = [0] * len(comps)
-    rst_count = 0
-    for my in range(mcus_y):
-        for mx in range(mcus_x):
-            if restart_interval and rst_count == restart_interval:
-                w, nb = _next_segment(segs, seg_idx, p, nb)
-                seg_idx += 1
-                p = 0
-                preds = [0] * len(comps)
-                rst_count = 0
-            rst_count += 1
-            for ci, (_cid, hs, vs, _tq) in enumerate(comps):
-                dc_tab, ac_tab = comp_tabs[ci]
-                coefs = comp_coefs[ci]
-                bw = comp_bw[ci]
-                for by in range(vs):
-                    base = ((my * vs + by) * bw + mx * hs) * 64
-                    for bx in range(hs):
-                        p, preds[ci] = _decode_block(
-                            w, p, nb, dc_tab, ac_tab, preds[ci], coefs,
-                            base + 64 * bx,
-                        )
-    if p > nb:
-        raise ValueError("truncated entropy-coded data")
-
-
 def _scan_units(frame, scan_comps, comp_bw, mcus_x, mcus_y):
-    """Restart units of one progressive scan, each a list of
+    """Restart units of one scan, each a list of
     ``(scan index, component index, coefficient offset)``: one MCU
     (interleaved) or one block (non-interleaved, the component's own
     ceil(dim/8) grid — NOT the MCU-padded grid, T.81 A.2.2)."""
@@ -910,24 +753,23 @@ def _scan_units(frame, scan_comps, comp_bw, mcus_x, mcus_y):
             yield [(0, ci, 64 * (by * bw + bx))]
 
 
-def _decode_progressive_scan(
+def _decode_scan(
     data, seg_end, body, frame, huff, restart_interval,
-    comp_coefs, comp_bw, mcus_x, mcus_y,
+    comp_coefs, comp_bw, mcus_x, mcus_y, progressive,
 ):
-    """ONE progressive (SOF2) scan: DC first / DC refinement (optionally
-    interleaved) or AC first / AC refinement (single-component, spectral
-    band Ss..Se, successive-approximation shift Al). Coefficients
-    accumulate across scans into ``comp_coefs`` at FULL precision; the
-    shared dequant/IDCT finalizer runs once at EOI. EOB-run coding
-    (T.81 G.1.2.2) and the correction-bit protocol (G.1.2.3) follow the
-    spec exactly. Returns the buffer offset of the scan-terminating
-    marker so the caller resumes marker parsing there."""
+    """ONE scan of any frame kind. A progressive (SOF2) scan is DC first /
+    DC refinement (optionally interleaved) or AC first / AC refinement
+    (single-component, spectral band Ss..Se, successive-approximation
+    shift Al). A sequential (SOF0/SOF1) scan is the same walk over the one
+    band 0..63 at Al=0: its Ss/Se/Ah/Al bytes are ignored, as libjpeg
+    does, and each block decodes its DC term and then its AC band.
+    Coefficients accumulate across scans into ``comp_coefs`` at FULL
+    precision; the shared dequant/IDCT finalizer runs once after the last
+    scan. EOB-run coding (T.81 G.1.2.2) and the correction-bit protocol
+    (G.1.2.3) follow the spec exactly. Returns the buffer offset of the
+    scan-terminating marker so the caller resumes marker parsing there."""
     comps = frame[2]
-    if len(body) < 1:
-        raise ValueError("truncated SOS header")
     ns = body[0]
-    if len(body) < 1 + 2 * ns + 3:
-        raise ValueError("truncated SOS header")
     cid_to_ci = {c[0]: i for i, c in enumerate(comps)}
     scan_comps: list[tuple[int, int, int]] = []  # (ci, dc_tid, ac_tid)
     for si in range(ns):
@@ -936,32 +778,39 @@ def _decode_progressive_scan(
         if cid not in cid_to_ci:
             raise ValueError("scan references unknown component")
         scan_comps.append((cid_to_ci[cid], tt >> 4, tt & 15))
-    ss = body[1 + 2 * ns]
-    se = body[2 + 2 * ns]
-    a = body[3 + 2 * ns]
-    ah, al = a >> 4, a & 15
-    if not 0 <= ss <= se <= 63 or al > 13 or ah > 13:
-        raise ValueError("invalid progressive scan parameters")
-    if ss == 0 and se != 0:
-        raise ValueError("progressive DC scan must have Se=0")
-    if ss > 0 and ns != 1:
-        raise ValueError("progressive AC scan must be non-interleaved")
-    if ns not in (1, len(comps)):
-        raise ValueError("unsupported progressive scan interleaving")
-    dc_scan = ss == 0
+    if progressive:
+        ss = body[1 + 2 * ns]
+        se = body[2 + 2 * ns]
+        a = body[3 + 2 * ns]
+        ah, al = a >> 4, a & 15
+        if not 0 <= ss <= se <= 63 or al > 13 or ah > 13:
+            raise ValueError("invalid progressive scan parameters")
+        if ss == 0 and se != 0:
+            raise ValueError("progressive DC scan must have Se=0")
+        if ss > 0 and ns != 1:
+            raise ValueError("progressive AC scan must be non-interleaved")
+        if ns not in (1, len(comps)):
+            raise ValueError("unsupported progressive scan interleaving")
+    else:
+        if ns != len(comps):
+            raise ValueError("non-interleaved multi-scan sequential JPEG "
+                             "unsupported")
+        ss, se, ah, al = 0, 63, 0, 0
     refine = ah != 0
     p1 = 1 << al
+    k0 = max(ss, 1)  # first AC index of the band
 
-    # resolve the needed Huffman LUT per scan component up front
-    luts: list[list[int] | None] = []
-    for ci, td, ta in scan_comps:
-        if dc_scan and refine:
-            luts.append(None)  # DC refinement reads raw bits only
-            continue
-        lut = huff.get((0, td) if dc_scan else (1, ta))
-        if lut is None:
+    # resolve each scan component's Huffman LUTs once (they cannot change
+    # mid-scan); undefined-table errors surface before any unit decodes.
+    # DC refinement reads raw bits only.
+    luts: list[tuple[list[int] | None, list[int] | None]] = []
+    for _ci, td, ta in scan_comps:
+        dc_lut, ac_lut = huff.get((0, td)), huff.get((1, ta))
+        if (ss == 0 and not refine and dc_lut is None) or (
+            se and ac_lut is None
+        ):
             raise ValueError("scan references undefined DHT")
-        luts.append(lut)
+        luts.append((dc_lut, ac_lut))
 
     segs, end = _split_entropy(data, seg_end)
     seg_idx = 0
@@ -981,46 +830,47 @@ def _decode_progressive_scan(
         rst_count += 1
         for si, ci, base in unit:
             coefs = comp_coefs[ci]
-            if not dc_scan:
-                if refine:
-                    p, eobrun = _ac_refine_block(
-                        w, p, nb, coefs, base + ss, base + se, p1,
-                        luts[si], eobrun,
-                    )
-                else:
-                    p, eobrun = _ac_first_block(
-                        w, p, nb, coefs, base + ss, base + se, al,
-                        luts[si], eobrun,
-                    )
-            elif refine:
-                if p >= nb:
-                    raise ValueError("truncated entropy-coded data")
-                if (w[p >> 3] >> (39 - (p & 7))) & 1:
-                    coefs[base] |= p1
-                p += 1
-            else:
+            dc_lut, ac_lut = luts[si]
+            if ss == 0:
                 if p >= nb:
                     raise ValueError("truncated entropy-coded data")
                 win = w[p >> 3]
                 o = p & 7
-                v = luts[si][(win >> (24 - o)) & 0xFFFF]
-                if v == 0:
-                    raise ValueError("invalid Huffman code")
-                t = v & 0xFF
-                ln = v >> 8
-                p += ln
-                if t > 11:
-                    raise ValueError("invalid DC category")
-                if t:
-                    if p >= nb:
-                        raise ValueError("truncated entropy-coded data")
-                    extra = (win >> (40 - o - ln - t)) & ((1 << t) - 1)
-                    p += t
-                    preds[ci] += (
-                        extra if extra >= (1 << (t - 1))
-                        else extra - (1 << t) + 1
-                    )
-                coefs[base] = preds[ci] << al
+                if refine:
+                    if (win >> (39 - o)) & 1:
+                        coefs[base] |= p1
+                    p += 1
+                else:
+                    v = dc_lut[(win >> (24 - o)) & 0xFFFF]
+                    if v == 0:
+                        raise ValueError("invalid Huffman code")
+                    t = v & 0xFF
+                    ln = v >> 8
+                    p += ln
+                    if t > 11:
+                        raise ValueError("invalid DC category")
+                    if t:
+                        if p >= nb:
+                            raise ValueError("truncated entropy-coded data")
+                        extra = (win >> (40 - o - ln - t)) & ((1 << t) - 1)
+                        p += t
+                        preds[ci] += (
+                            extra if extra >= (1 << (t - 1))
+                            else extra - (1 << t) + 1
+                        )
+                    coefs[base] = preds[ci] << al
+            if not se:
+                continue
+            if refine:
+                p, eobrun = _ac_refine_block(
+                    w, p, nb, coefs, base + k0, base + se, p1, ac_lut,
+                    eobrun,
+                )
+            else:
+                p, eobrun = _ac_first_block(
+                    w, p, nb, coefs, base + k0, base + se, al, ac_lut,
+                    eobrun,
+                )
     if p > nb:
         raise ValueError("truncated entropy-coded data")
     return end
@@ -1264,23 +1114,25 @@ def decode_jpeg(data: bytes) -> np.ndarray:
                 raise ValueError("SOS before SOF")
             if not body or len(body) < 1 + 2 * body[0] + 3:
                 raise ValueError("truncated SOS header")
+            if not huff:
+                # no DHT before the first scan: MJPEG-in-AVI frames omit
+                # their tables, and OpenDML says to assume Annex K
+                huff = {
+                    key: _build_decode_lut(tuple(bits), tuple(vals))
+                    for key, (bits, vals) in _ANNEX_K_HUFFMAN.items()
+                }
             if comp_coefs is None:
                 comp_coefs, comp_bw, mcus_x, mcus_y = _alloc_blocks(frame)
-            if progressive:
-                scans_done += 1
-                if scans_done > MAX_PROGRESSIVE_SCANS:
-                    raise ValueError("too many progressive scans")
-                pos = _decode_progressive_scan(
-                    data, seg_end, body, frame, huff, restart_interval,
-                    comp_coefs, comp_bw, mcus_x, mcus_y,
-                )
-                continue
-            h, w, comps = frame
-            _decode_baseline_scan(
-                data, seg_end, body, comps, huff, restart_interval,
-                comp_coefs, comp_bw, mcus_x, mcus_y,
+            scans_done += 1
+            if scans_done > MAX_PROGRESSIVE_SCANS:
+                raise ValueError("too many progressive scans")
+            pos = _decode_scan(
+                data, seg_end, body, frame, huff, restart_interval,
+                comp_coefs, comp_bw, mcus_x, mcus_y, progressive,
             )
-            break  # sequential: one scan is the whole image
+            if not progressive:
+                break  # sequential: one scan is the whole image
+            continue
         # APPn / COM / anything else: skip
         pos = seg_end
 

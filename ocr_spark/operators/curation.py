@@ -138,11 +138,3 @@ def stratified_sample(
             F.col("rank").cast("long").alias("rank"),
         )
     )
-
-
-def curation_report(curated: DataFrame) -> DataFrame:
-    """Per-gate funnel counts: (reason, n_docs) — the corpus-composition
-    audit a data team reads after every curation run."""
-    return curated.groupBy("reason").agg(
-        F.count("*").cast("long").alias("n_docs")
-    )

@@ -21,8 +21,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 # Whitespace-token split, empty strings dropped — the one token definition,
-# shared by this module, ``operators.dedup``, ``operators.lm`` and
-# ``functions.quality_expr`` (and mirrored by the DuckDB oracles).
+# shared by this module, ``operators.dedup`` and ``operators.lm`` (and
+# mirrored by the DuckDB oracles).
 _WORDS_EXPR = "filter(split({col}, '\\\\s+'), x -> x != '')"
 
 
@@ -106,8 +106,9 @@ def quality_score(docs: DataFrame) -> DataFrame:
 
 def quality_cols() -> list[Column]:
     """The four quality columns (n_tokens, punct_ratio, stop_ratio,
-    quality) — shared by ``quality_score`` and the curation funnel. They
-    read ``text`` and the word array bound as ``_w``."""
+    quality) — shared by ``quality_score``, the curation funnel and the
+    ``curate_hosts`` query. They read ``text`` and the word array bound
+    as ``_w``."""
     n_tokens = F.size("_w")
     n_chars = F.length("text")
     punct = F.regexp_count(F.col("text"), F.lit(r"[^a-zA-Z0-9\s]"))

@@ -85,18 +85,3 @@ def test_pdf_assembly_permutation_invariant(angle, perm, fam_doc):
     got_text, got_ids = run(shuffled)
     assert got_text == base_text == expected_text
     assert got_ids == base_ids
-
-
-def test_quality_expr_matches_operator(spark):
-    """functions.quality_expr must equal textstats.quality_score's quality
-    column — one definition, two surfaces."""
-    import pyspark.sql.functions as F
-
-    from ocr_spark.functions import quality_expr
-    from ocr_spark.operators.textstats import quality_score
-
-    docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-    a = quality_score(docs).select("doc_id", "quality")
-    b = docs.select("doc_id", quality_expr("text").alias("q2"))
-    j = a.join(b, "doc_id")
-    assert j.filter(F.col("quality") != F.col("q2")).count() == 0

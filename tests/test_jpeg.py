@@ -13,7 +13,6 @@ from ocr_spark.kernels import jpeg as J
 from ocr_spark.kernels.jpeg import (
     decode_jpeg,
     encode_jpeg,
-    jpeg_dims,
     jpeg_to_gray_float,
 )
 
@@ -121,13 +120,6 @@ def test_gray_float_contract():
         encode_jpeg(np.full((8, 8, 3), 200, np.uint8), quality=95)
     )
     assert rgbf.shape == (8, 8)
-
-
-def test_jpeg_dims_header_only():
-    assert jpeg_dims(encode_jpeg(np.zeros((24, 56), np.uint8))) == (56, 24, 1)
-    assert jpeg_dims(
-        encode_jpeg(np.zeros((10, 11, 3), np.uint8))
-    ) == (11, 10, 3)
 
 
 # ---------------------------------------------------------------------------
@@ -246,6 +238,38 @@ def test_420_subsampled_decodes():
     b = y_val + 1.772 * (cb_val - 128)
     want = np.round([r, g, b])
     assert np.abs(img.astype(float) - want).max() <= 3
+
+
+def _distinct_blocks_gray(h=24, w=40):
+    """Block-uniform gray image with a different value in every 8x8
+    block, so any block placed at the wrong grid position shows."""
+    n = (h // 8) * (w // 8)
+    return _block_uniform([(37 * b + 11) % 251 for b in range(n)], h, w)
+
+
+def test_2x2_sampled_gray_baseline_decodes():
+    """A one-component scan is non-interleaved, so its MCU is ONE block
+    whatever the sampling factors say (T.81 A.2.2). Patching a gray
+    stream's sampling byte 0x11 -> 0x22 must not change its pixels."""
+    src = encode_jpeg(_distinct_blocks_gray(), quality=90)
+    b = bytearray(src)
+    sof = bytes(b).index(b"\xff\xc0")
+    assert b[sof + 11] == 0x11  # the one component's sampling byte
+    b[sof + 11] = 0x22
+    assert np.array_equal(decode_jpeg(bytes(b)), decode_jpeg(src))
+
+
+def test_dht_stripped_baseline_decodes_with_annex_k_tables():
+    """A stream with no DHT before its scan decodes with the Annex-K
+    tables, which are the ones the in-repo encoder writes."""
+    for img in (_distinct_blocks_gray(), _smooth_rgb(17, 23, seed=3)):
+        src = encode_jpeg(img, quality=85)
+        b = src
+        while b"\xff\xc4" in b:
+            i = b.index(b"\xff\xc4")
+            (length,) = struct.unpack_from(">H", b, i + 2)
+            b = b[:i] + b[i + 2 + length :]
+        assert np.array_equal(decode_jpeg(b), decode_jpeg(src))
 
 
 # ---------------------------------------------------------------------------
@@ -367,11 +391,6 @@ def test_progressive_scan_script_shape():
     assert g.count(b"\xff\xda") == 6
     c = encode_jpeg(_smooth_rgb(16, 16), progressive=True)
     assert c.count(b"\xff\xda") == 10
-
-
-def test_progressive_jpeg_dims_header_only():
-    b = encode_jpeg(_smooth_rgb(19, 31), progressive=True)
-    assert jpeg_dims(b) == (31, 19, 3)
 
 
 def test_progressive_gray_float_seam():
@@ -775,7 +794,6 @@ def test_ycck_transform():
 def test_cmyk_jpeg_dims():
     c = _block_uniform([1, 2, 3])
     stream = _multi_comp_stream([c, c, c, c], [1, 2, 3, 4], app14_transform=0)
-    assert jpeg_dims(stream) == (24, 8, 4)
     g = jpeg_to_gray_float(stream)
     assert g.shape == (8, 24) and g.dtype == np.float32
 

@@ -1,10 +1,8 @@
-"""URL canonicalization + URL-tier dedup + bucketed co-located join."""
+"""URL canonicalization + bucketed co-located join."""
 
 from __future__ import annotations
 
-import pyspark.sql.functions as F
-
-from ocr_spark.functions.url import canonical_url, dedup_by_url
+from ocr_spark.functions.url import canonical_url
 
 CASES = [
     ("HTTP://Example.COM/path/", "https://example.com/path"),
@@ -24,21 +22,6 @@ def test_canonical_url_cases(spark):
     df = spark.createDataFrame([(u,) for u, _ in CASES], "url string")
     got = [r.c for r in df.select(canonical_url("url").alias("c")).collect()]
     assert got == [e for _, e in CASES]
-
-
-def test_dedup_by_url(spark):
-    rows = [
-        ("http://Example.com/a/", 1),
-        ("https://example.com/a", 2),
-        ("https://example.com/a?utm_source=t", 3),
-        ("https://example.com/b", 4),
-    ]
-    df = spark.createDataFrame(rows, "url string, doc_id long")
-    kept = dedup_by_url(df)
-    assert kept.count() == 2
-    # deterministic representative: lexicographically-first raw url
-    a_rep = kept.filter(F.col("url").contains("/a")).collect()[0]
-    assert a_rep.url == "http://Example.com/a/"
 
 
 def test_bucketed_join_is_shuffle_free(spark, tmp_path):
